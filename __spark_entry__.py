@@ -42,7 +42,6 @@ from timezone_boundary_builder_spark.operators.similarity import (
     cosine_topk,
     lsh_bucket_ann,
 )
-from timezone_boundary_builder_spark.operators.spatial_join import assign_tzid
 from timezone_boundary_builder_spark.operators.text import (
     LANG_MARKERS,
     STOPWORDS,
@@ -53,6 +52,7 @@ from timezone_boundary_builder_spark.operators.text import (
 )
 from timezone_boundary_builder_spark.operators.validate import validate_overlaps
 from timezone_boundary_builder_spark.operators.zone_build import build_zones
+from timezone_boundary_builder_spark.plans.spread import spread_small_scan
 from timezone_boundary_builder_spark.sources.fixtures import (
     OCEAN_BANDS,
     _box_gj,
@@ -82,29 +82,6 @@ def _local_cellmap() -> CellMap:
     from timezone_boundary_builder_spark.sources.fixtures import local_cellmap
 
     return local_cellmap()
-
-
-def _spread(df: DataFrame, *cols: str, min_bytes: int | None = None) -> DataFrame:
-    """Scale-adaptive parallelism fix for per-row-expensive work over the
-    test corpus's single-row-group parquet files (round 7, guide §2/§6):
-    a one-row-group file scans as ONE task no matter the split config, so
-    a Python-heavy chain downstream runs single-core. When (and only
-    when) the scan has fewer partitions than the cluster's parallelism,
-    hash-repartition the NARROW key columns already selected — the
-    shuffle moves a few bytes per row (never payloads; the heavy columns
-    are generated/derived downstream), the §8 'decide with small rows'
-    shape. On a real multi-file/multi-row-group table this is a no-op,
-    and on a tiny local input the byte gate skips the shuffle too (see
-    plans/spread.py; min_bytes=0 forces the spread for heavy per-row
-    kernels like the image codec)."""
-    from timezone_boundary_builder_spark.plans.spread import (
-        DEFAULT_MIN_SPREAD_BYTES,
-        spread_small_scan,
-    )
-
-    if min_bytes is None:
-        min_bytes = DEFAULT_MIN_SPREAD_BYTES
-    return spread_small_scan(df, *cols, min_bytes=min_bytes)
 
 
 def _points(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -259,14 +236,18 @@ assigned AS (
 
 
 def _q_geo_pip_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from timezone_boundary_builder_spark.operators.spatial_join import assign_tzid_udf
+    from timezone_boundary_builder_spark.operators.spatial_join import (
+        assign_tzid_udf_packed,
+        pack_coords_col,
+    )
 
     bc = spark.sparkContext.broadcast(_local_cellmap())
-    pts = _points(spark, sf_dir)
+    pts = _points(spark, sf_dir).select("url", "lon", "lat", pack_coords_col())
     # knn disabled (-1): pure two-stage join + ocean band -> SQL-expressible.
-    # scalar-UDF path: only (lon,lat)->codes cross the Arrow pipe (tested
-    # row-equal to the mapInPandas path)
-    out = assign_tzid_udf(pts, bc, OCEAN_BANDS, knn_max_m=-1.0, keep_coords=True)
+    # The points sit on a 0.01-degree grid: the 1e-6 packing moves them by
+    # at most one ulp and none across an edge, so the SQL oracle can read
+    # the raw doubles
+    out = assign_tzid_udf_packed(pts, bc, OCEAN_BANDS, knn_max_m=-1.0)
     return out.select("url", "lon", "lat", "tzid")
 
 
@@ -283,10 +264,14 @@ def _q_geo_knn_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     segment-distance rule is replicated in DuckDB SQL (_knn_assign_sql).
     cell-vs-pip is a physical detail (cover resolution), so both collapse
     to 'land' in the comparable output."""
-    from timezone_boundary_builder_spark.operators.spatial_join import assign_tzid_udf
+    from timezone_boundary_builder_spark.operators.spatial_join import (
+        assign_tzid_udf_packed,
+        pack_coords_col,
+    )
 
     bc = spark.sparkContext.broadcast(_local_cellmap())
-    out = assign_tzid_udf(_points(spark, sf_dir), bc, OCEAN_BANDS)
+    pts = _points(spark, sf_dir).select("url", pack_coords_col())
+    out = assign_tzid_udf_packed(pts, bc, OCEAN_BANDS)
     return out.select(
         "url",
         "tzid",
@@ -304,6 +289,10 @@ def _q_geo_sharded_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     data. Same winner rules, same kernels, so the geo_knn_assign SQL
     oracle applies verbatim — the driver value-checks that removing the
     geometry broadcast changes nothing."""
+    from timezone_boundary_builder_spark.operators.spatial_join import (
+        pack_coords_col,
+        unpack_coords_cols,
+    )
     from timezone_boundary_builder_spark.operators.spatial_join_sharded import (
         assign_tzid_sharded,
         zone_edges_frame,
@@ -314,8 +303,10 @@ def _q_geo_sharded_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     tz_bc = spark.sparkContext.broadcast(list(cm.tzids))
     zones_df = spark.createDataFrame(_local_zones()[["tzid", "geometry"]])
     edges = zone_edges_frame(zones_df, tz_bc, n_shards=8)
+    # the broadcast twin's coordinates: the packed grid value, decoded
+    pts = _points(spark, sf_dir).select("url", pack_coords_col())
     out = assign_tzid_sharded(
-        _points(spark, sf_dir), bc, edges, OCEAN_BANDS, n_shards=8
+        pts.select("url", *unpack_coords_cols()), bc, edges, OCEAN_BANDS, n_shards=8
     )
     return out.select(
         "url",
@@ -1212,11 +1203,11 @@ def _q_pipeline_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     # with_quality stopword filter — same tokenization, same ints), and
     # the round(int/int, 6) ratio stays JVM-side, so the kept set is
     # identical to the old with_quality filter. The kernel's
-    # nondeterministic marker keeps the filter ABOVE the _spread
+    # nondeterministic marker keeps the filter ABOVE the spread_small_scan
     # exchange — with_quality's JVM array predicates were pushed to the
     # single-task test scan and ran one-core.
     st = F.col("__st")
-    base = _spread(
+    base = spread_small_scan(
         _docs(spark, sf_dir).select("doc_id", "text", "lang"), "doc_id"
     ).withColumn("__st", gopher_stats_udf()(F.col("text")))
     kept = base.where(
@@ -1256,7 +1247,7 @@ def _q_pipeline_gopher(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the JVM plan, so the kept set is identical (same DuckDB oracle).
     st = F.col("__st")
     fr = repetition_fracs(st)
-    base = _spread(
+    base = spread_small_scan(
         _docs(spark, sf_dir).select("doc_id", "text", "lang"), "doc_id"
     ).withColumn("__st", gopher_stats_udf()(F.col("text")))
     gated = base.where(
@@ -1702,7 +1693,7 @@ def _q_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield pd.DataFrame(rows, columns=["url", "html"])
 
     pages = (
-        _spread(_docs(spark, sf_dir).select("doc_id"), "doc_id", min_bytes=0)
+        spread_small_scan(_docs(spark, sf_dir).select("doc_id"), "doc_id", min_bytes=0)
         .mapInPandas(_gen, "url string, html binary")
     )
     resized = resize_images(pages, target_w=8, target_h=8, use_real_codec=True)

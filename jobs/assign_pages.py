@@ -117,6 +117,7 @@ def main(argv=None) -> int:
     from timezone_boundary_builder_spark.operators.spatial_join import (
         assign_tzid_udf_packed,
         pack_coords_col,
+        unpack_coords_cols,
     )
     from timezone_boundary_builder_spark.plans.lineage import lineage_table
     from timezone_boundary_builder_spark.plans.manifests import (
@@ -173,11 +174,12 @@ def main(argv=None) -> int:
     # decides ocean tzids and the cover resolution decides the
     # cell-vs-pip method mix — omitting either would replay a stale
     # cached stage after a flag change
-    # "v2": the cached assign stage now carries warc_ts (composite row
-    # identity for tables where urls recur across crawls) — the format
-    # marker keeps an older cached stage from replaying without it
+    # "v3": the format marker keeps an older cached stage from replaying
+    # — v2 added warc_ts (composite row identity for tables where urls
+    # recur across crawls); v3 assigns both stage-2 modes on the
+    # null-safe packed 1e-6 grid value (older stages could differ there)
     stage_fp = fingerprint(
-        "assign-v2",
+        "assign-v3",
         str(sid),
         str(args.ts_day_min),
         str(args.ts_day_max),
@@ -223,7 +225,12 @@ def main(argv=None) -> int:
                 tz_bc,
                 n_shards=max(16, args.cores),
             )
-            pts = with_coordinates(scan).select("url", "warc_ts", "lon", "lat")
+            # the sharded gear takes doubles: decode them from the same
+            # packed grid value the broadcast UDF assigns, so the two
+            # modes see one coordinate model
+            pts = with_coordinates(scan).select(
+                "url", "warc_ts", pack_coords_col()
+            ).select("url", "warc_ts", *unpack_coords_cols())
             # staging path is derived from the stage fingerprint
             # (round-6 ADVICE): two runs sharing a work dir (a retry
             # racing a stuck run, different snapshots) must not clobber

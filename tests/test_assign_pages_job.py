@@ -217,3 +217,64 @@ def test_assign_job_stage2_sharded_matches_broadcast(pages_root, tmp_path):
     assert ra["map_bytes"] > 0.0001 * 1e6
     assert ra["cached"] is True
     assert ra["methods"] == rs["methods"]
+
+
+def test_assign_job_stage2_modes_agree_off_grid(spark, tmp_path):
+    """Both --stage2 plans assign the one packed 1e-6 grid value. A
+    geocoded coordinate with more decimals than the grid, whose raw
+    double and grid value fall on opposite sides of the 1852 m kNN
+    radius, gets the same tzid and method from the broadcast and the
+    sharded plan: the kernel's answer for the grid value."""
+    import numpy as np
+
+    from tests._kernel_ref import kernel_codes
+    from timezone_boundary_builder_spark.sources import pages as pt
+    from timezone_boundary_builder_spark.sources.fixtures import (
+        OCEAN_BANDS,
+        local_cellmap,
+        synthetic_pages,
+    )
+
+    cm = local_cellmap()
+
+    def answer(lat):
+        tz, m = kernel_codes(cm, OCEAN_BANDS, np.array([15.0]), np.array([lat]))
+        return tz[0], m[0]
+
+    def grid(lat):
+        return np.round((lat + 90.0) * 1e6) / 1e6 - 90.0
+
+    # bisect the kNN radius north of Test/Hotel's lat-50 edge at lon 15,
+    # then take a 9-decimal latitude within 0.4 micro-degrees of it that
+    # rounds across it on the grid
+    lo, hi = 50.01, 50.03
+    assert answer(lo)[1] == "knn" and answer(hi)[1] == "ocean"
+    while (mid := (lo + hi) / 2) not in (lo, hi):
+        lo, hi = (mid, hi) if answer(mid)[1] == "knn" else (lo, mid)
+    lat_s = next(
+        s
+        for s in ("%.9f" % (lo + d * 1e-8) for d in range(-40, 41))
+        if answer(float(s)) != answer(grid(float(s)))
+    )
+    expect = answer(grid(float(lat_s)))
+
+    pdf = synthetic_pages(n=40, seed=17).drop(columns=["kind"])
+    text = f"harbour office geo:{lat_s},15.0000000 open daily"
+    pdf.loc[0, ["url", "text"]] = ["https://example.org/off-grid", text]
+    pdf.at[0, "html"] = f"<html><body>{text}</body></html>".encode()
+    root = str(tmp_path / "tbl")
+    pt.commit_append(root, spark.createDataFrame(pdf))
+
+    got = {}
+    for mode in ("broadcast", "sharded"):
+        out = str(tmp_path / f"o_{mode}")
+        r = _run(root, str(tmp_path / f"w_{mode}"), out, extra=("--stage2", mode))
+        assert r["stage2"] == mode and r["rows"] == 40
+        row = (
+            spark.read.parquet(os.path.join(out, "assigned_pages"))
+            .where("url = 'https://example.org/off-grid'")
+            .select("tzid", "method")
+            .collect()
+        )
+        got[mode] = (row[0]["tzid"], row[0]["method"])
+    assert got["broadcast"] == got["sharded"] == expect, (lat_s, got, expect)

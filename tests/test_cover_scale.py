@@ -9,7 +9,8 @@ corners, no gaps/overlaps), so every sample point has a
 known-by-construction expected zone, independent of the engine's PIP.
 
 Asserts, in one Spark pass over the real operators
-(build_cell_covers -> collect_cell_map -> broadcast -> assign_tzid):
+(build_cell_covers -> collect_cell_map -> broadcast ->
+assign_tzid_udf_packed):
 - the broadcast CellMap stays under a stated byte bound (the 100 TB
   design constraint: the map must fit comfortably in every executor),
 - a 20k-point deterministic sample assigns to exactly the expected zone
@@ -26,7 +27,10 @@ from timezone_boundary_builder_spark.operators.cover import (
     build_cell_covers,
     collect_cell_map,
 )
-from timezone_boundary_builder_spark.operators.spatial_join import assign_tzid
+from timezone_boundary_builder_spark.operators.spatial_join import (
+    assign_tzid_udf_packed,
+    pack_coords_col,
+)
 from timezone_boundary_builder_spark.sources.fixtures import (
     dense_zone_world,
     dense_world_points,
@@ -123,7 +127,9 @@ def test_dense_world_assignment_matches_construction(spark, dense_cellmap):
     pts = dense_world_points(world, NX, NY, n=20_000)
     bc = spark.sparkContext.broadcast(cm)
     df = spark.createDataFrame(pts)
-    out = assign_tzid(df, bc, ocean_bands=[]).join(
+    # the sample is already on the 1e-6 grid, so packing moves no point
+    packed = df.select("url", pack_coords_col())
+    out = assign_tzid_udf_packed(packed, bc, ocean_bands=[]).join(
         df.select("url", "expect_tzid"), "url"
     )
     mism = out.where(F.col("tzid") != F.col("expect_tzid"))

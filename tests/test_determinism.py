@@ -60,7 +60,8 @@ def test_assignment_independent_of_batch_boundaries(spark):
     batch shapes) -> identical (url, tzid, method) rows."""
     import __spark_entry__ as entry
     from timezone_boundary_builder_spark.operators.spatial_join import (
-        assign_tzid_udf,
+        assign_tzid_udf_packed,
+        pack_coords_col,
     )
 
     bc = spark.sparkContext.broadcast(entry._local_cellmap())
@@ -72,7 +73,11 @@ def test_assignment_independent_of_batch_boundaries(spark):
     outs = []
     for nparts in (2, 16):
         out = (
-            assign_tzid_udf(pts.repartition(nparts), bc, OCEAN_BANDS)
+            assign_tzid_udf_packed(
+                pts.repartition(nparts).select("url", pack_coords_col()),
+                bc,
+                OCEAN_BANDS,
+            )
             .select("url", "tzid", "method")
             .orderBy(F.col("url").cast("long"))
             .toPandas()

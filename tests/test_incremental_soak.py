@@ -33,7 +33,10 @@ def test_incremental_loop_crash_resume_counts_exact(spark, tmp_path):
 
     import __spark_entry__ as entry
     from timezone_boundary_builder_spark.operators.geocode import with_coordinates
-    from timezone_boundary_builder_spark.operators.spatial_join import assign_tzid_udf
+    from timezone_boundary_builder_spark.operators.spatial_join import (
+        assign_tzid_udf_packed,
+        pack_coords_col,
+    )
     from timezone_boundary_builder_spark.operators.tiles import (
         merge_tile_counts,
         page_tile_counts,
@@ -144,7 +147,11 @@ def test_incremental_loop_crash_resume_counts_exact(spark, tmp_path):
     full_pages = with_coordinates(pt.scan(spark, root))
     assert full_pages.count() == 600  # expiry kept the full logical table
     scratch = page_tile_counts(
-        assign_tzid_udf(full_pages, bc, OCEAN_BANDS, keep_coords=True),
+        assign_tzid_udf_packed(
+            full_pages.select("url", "lon", "lat", pack_coords_col()),
+            bc,
+            OCEAN_BANDS,
+        ),
         res=res,
     )
     maintained = spark.read.parquet(os.path.realpath(os.path.join(tiles_dir, "current")))

@@ -22,7 +22,9 @@ from timezone_boundary_builder_spark.operators.cover import (
 from timezone_boundary_builder_spark.operators.geocode import with_coordinates
 from timezone_boundary_builder_spark.operators.spatial_join import (
     KNN_MAX_METERS,
-    assign_tzid,
+    assign_tzid_udf_packed,
+    pack_coords_col,
+    unpack_xy,
 )
 from timezone_boundary_builder_spark.operators.zone_build import build_zones
 from timezone_boundary_builder_spark.sources.fixtures import (
@@ -97,16 +99,21 @@ def test_two_stage_join_matches_brute_force(spark, zones_df, zones_pdf):
     cm = collect_cell_map(covers, zones_df)
     bc = spark.sparkContext.broadcast(cm)
 
-    with_xy = with_coordinates(pages)
+    pts = with_coordinates(pages).select("url", pack_coords_col())
     got = (
-        assign_tzid(with_xy, bc, OCEAN_BANDS)
+        assign_tzid_udf_packed(pts, bc, OCEAN_BANDS)
         .toPandas()
         .sort_values("url")
         .reset_index(drop=True)
     )
 
-    oracle_in = got[["url", "lon", "lat"]]
-    expect = _brute_force_oracle(oracle_in, zones_pdf)
+    # the oracle gets the coordinates the surface resolves: the packed
+    # 1e-6 grid value, decoded
+    packed = pts.toPandas().sort_values("url").reset_index(drop=True)
+    lon, lat = unpack_xy(packed["xy"].to_numpy())
+    got["lon"], got["lat"] = lon, lat
+    assert (packed["url"] == got["url"]).all()
+    expect = _brute_force_oracle(got[["url", "lon", "lat"]], zones_pdf)
     mismatches = [
         (got.url[i], got.lon[i], got.lat[i], got.tzid[i], expect[i], got.method[i])
         for i in range(len(got))
@@ -141,33 +148,28 @@ def test_urban_skew_present():
     assert (pages.kind == "urban").mean() >= 0.25
 
 
-def test_udf_assign_equals_mapinpandas(spark, zones_df, zones_pdf):
-    """The scalar-pandas-UDF hot path (codes over the Arrow pipe, strings
-    materialized JVM-side) must match the mapInPandas path row-for-row —
-    including nulls (method 'none'), kNN and ocean fallbacks."""
-    import pandas as pd
-
-    from timezone_boundary_builder_spark.operators.spatial_join import assign_tzid_udf
+def test_packed_surface_equals_assign_codes(spark, zones_df):
+    """The assignment surface (codes over the Arrow pipe, strings
+    materialized JVM-side) must match the numpy assign_codes kernel on
+    the decoded grid coordinates row-for-row — including nulls (method
+    'none'), kNN and ocean fallbacks."""
+    from tests._kernel_ref import kernel_assign
 
     pages_pdf = synthetic_pages(n=1500, seed=42)
     pages = spark.createDataFrame(pages_pdf.drop(columns=["kind"]))
     covers = build_cell_covers(zones_df, max_res=7)
-    bc = spark.sparkContext.broadcast(collect_cell_map(covers, zones_df))
-    with_xy = with_coordinates(pages)
-    a = (
-        assign_tzid(with_xy, bc, OCEAN_BANDS)
-        .select("url", "lon", "lat", "tzid", "method")
+    cm = collect_cell_map(covers, zones_df)
+    bc = spark.sparkContext.broadcast(cm)
+    pts = with_coordinates(pages).select("url", pack_coords_col())
+    got = (
+        assign_tzid_udf_packed(pts, bc, OCEAN_BANDS)
         .toPandas()
         .sort_values("url")
         .reset_index(drop=True)
     )
-    b = (
-        assign_tzid_udf(with_xy, bc, OCEAN_BANDS, keep_coords=True)
-        .toPandas()
-        .sort_values("url")
-        .reset_index(drop=True)
-    )
-    pd.testing.assert_frame_equal(a, b)
+    ref = kernel_assign(cm, OCEAN_BANDS, pts.toPandas())
+    pd.testing.assert_frame_equal(got, ref)
+    assert {"cell", "knn", "ocean", "none"} <= set(got["method"])
 
 
 def test_geocode_separator_strictness(spark):

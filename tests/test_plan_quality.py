@@ -13,7 +13,6 @@ from pyspark.sql import functions as F
 
 import __spark_entry__ as entry
 from timezone_boundary_builder_spark.operators.dedup import minhash_signatures
-from timezone_boundary_builder_spark.operators.spatial_join import assign_tzid
 from timezone_boundary_builder_spark.sources.fixtures import OCEAN_BANDS
 
 SF = "/root/testdata/sf0.01"
@@ -81,27 +80,6 @@ def test_ivf_build_assigns_centroids_map_side(spark):
     assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
 
 
-def test_assignment_plan_has_zero_exchanges(spark):
-    bc = spark.sparkContext.broadcast(entry._local_cellmap())
-    pts = entry._points(spark, SF)
-    plan = plan_of(assign_tzid(pts, bc, OCEAN_BANDS))
-    assert "Exchange" not in plan, plan
-
-
-def test_udf_assignment_plan_zero_exchanges_and_jvm_strings(spark):
-    """The scalar-UDF hot path: no shuffle, and the tzid string
-    materialization is JVM-side (element_at over a literal array in a
-    Project above ArrowEvalPython) — only codes cross the Arrow pipe."""
-    from timezone_boundary_builder_spark.operators.spatial_join import assign_tzid_udf
-
-    bc = spark.sparkContext.broadcast(entry._local_cellmap())
-    pts = entry._points(spark, SF)
-    plan = plan_of(assign_tzid_udf(pts, bc, OCEAN_BANDS))
-    assert "Exchange" not in plan, plan
-    assert "ArrowEvalPython" in plan
-    assert "element_at" in plan
-
-
 def test_serve_from_tiles_uses_broadcast_join(spark):
     """Tile-serving equi-join must broadcast the per-cell candidate table —
     the points side must never shuffle or sort-merge."""
@@ -112,20 +90,32 @@ def test_serve_from_tiles_uses_broadcast_join(spark):
 
 
 def test_packed_assignment_plan_zero_exchanges(spark):
-    """The production hot path (packed micro-degree codec): no shuffle,
-    coordinates packed into ONE int64 JVM-side (shiftleft in a Project
-    below ArrowEvalPython), tzid strings materialized JVM-side above it."""
-    import bench
+    """The one assignment surface (pack_coords_col -> assign_tzid_udf_packed):
+    no shuffle; coordinates packed into ONE int64 and null-coalesced to -1
+    in the JVM, below the Arrow boundary (Catalyst folds the packing
+    Project into ArrowEvalPython's argument list, which the JVM evaluates
+    before batching) — so no null reaches Arrow and xy never widens to
+    float64; tzid strings materialized JVM-side above it."""
     from timezone_boundary_builder_spark.operators.spatial_join import (
         assign_tzid_udf_packed,
+        pack_coords_col,
     )
 
     bc = spark.sparkContext.broadcast(entry._local_cellmap())
-    pts = bench.synthetic_points_packed(spark, 1000)
+    pts = entry._points(spark, SF).select("url", pack_coords_col())
     plan = plan_of(assign_tzid_udf_packed(pts, bc, OCEAN_BANDS))
     assert "Exchange" not in plan, plan
-    assert "ArrowEvalPython" in plan
-    assert "element_at" in plan
+    lines = plan.splitlines()
+    arrow = [i for i, l in enumerate(lines) if "ArrowEvalPython" in l]
+    assert len(arrow) == 1, plan
+    # the UDF's single input is the coalesced packed value
+    udf = lines[arrow[0]].split("ArrowEvalPython [", 1)[1].split("], [")[0]
+    udf = udf.rsplit("#", 1)[0]
+    assert udf.startswith("_codes(coalesce(") and udf.endswith(", -1))"), plan
+    assert "shiftleft(" in udf, plan
+    above = "\n".join(lines[: arrow[0]])
+    assert "coalesce(" not in above and "shiftleft(" not in above, plan
+    assert "element_at" in above
 
 
 def test_stratified_sampling_pushes_partial_top_n(spark):
@@ -199,7 +189,7 @@ def test_pipeline_gopher_single_arrow_kernel_no_join(spark):
 def test_multimodal_decode_chain_shuffles_only_doc_ids(spark):
     """The real-codec chain (generate -> decode/resize/re-encode ->
     decode/stats): per-image bytes NEVER shuffle. The one allowed
-    exchange is the scale-adaptive _spread of the bare doc_id column
+    exchange is the scale-adaptive spread_small_scan of the bare doc_id column
     BELOW the generator (round 7: the single-row-group test file scans
     as one task, which serialized the whole Python chain onto one core)
     — it may carry doc_id only, and no exchange may sit between or above

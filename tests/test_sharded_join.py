@@ -1,8 +1,10 @@
 """Sharded stage-2 parity: the no-geometry-broadcast join path
 (spatial_join_sharded) must return ROW-IDENTICAL assignments to the
-broadcast CellMap path on worlds that exercise every outcome — full-cell
-hits, boundary PIP (with the overlap tie-break), kNN within 1852 m,
-ocean bands, none, and NaN coordinates.
+broadcast assignment surface (assign_tzid_udf_packed) and to the numpy
+assign_codes kernel, all three on the coordinates pack_coords_col
+resolves, on worlds that exercise every outcome — full-cell hits,
+boundary PIP (with the overlap tie-break), kNN within 1852 m, ocean
+bands, none, and NaN coordinates.
 
 Identity is exact (not approximate): both paths share the probe, the
 pair-expansion ray-cast arithmetic, the distance kernel, and the winner
@@ -15,7 +17,12 @@ import pandas as pd
 import pytest
 
 from timezone_boundary_builder_spark.operators.cover import cellmap_from_zones_pdf
-from timezone_boundary_builder_spark.operators.spatial_join import assign_tzid
+from tests._kernel_ref import kernel_assign
+from timezone_boundary_builder_spark.operators.spatial_join import (
+    assign_tzid_udf_packed,
+    pack_coords_col,
+    unpack_coords_cols,
+)
 from timezone_boundary_builder_spark.operators.spatial_join_sharded import (
     assign_tzid_sharded,
     zone_edges_frame,
@@ -51,16 +58,23 @@ def _run_both(
     tz_bc = spark.sparkContext.broadcast(list(cm.tzids))
     zones_df = spark.createDataFrame(zones_pdf[["tzid", "geometry"]])
     edges = zone_edges_frame(zones_df, tz_bc, n_shards=n_shards)
-    pts = spark.createDataFrame(points_pdf)
-    ref = assign_tzid(pts, bc_full, bands).toPandas()
+    pts = spark.createDataFrame(points_pdf).select("url", pack_coords_col())
+    ref = assign_tzid_udf_packed(pts, bc_full, bands).toPandas()
     got = assign_tzid_sharded(
-        pts, bc_slim, edges, bands, n_shards=n_shards, stage1_path=stage1_path
+        pts.select("url", *unpack_coords_cols()),
+        bc_slim,
+        edges,
+        bands,
+        n_shards=n_shards,
+        stage1_path=stage1_path,
     ).toPandas()
+    kernel = kernel_assign(cm, bands, pts.toPandas())
     for bc in (bc_full, bc_slim, tz_bc):
         bc.destroy()
     key = ["url"]
     ref = ref.sort_values(key).reset_index(drop=True)
     got = got.sort_values(key).reset_index(drop=True)[ref.columns]
+    _assert_identical(kernel, ref)
     return ref, got
 
 

@@ -36,10 +36,19 @@ def test_stream_assign_matches_batch(spark, tmp_path):
 
     # batch reference: identical operator on the same rows
     from timezone_boundary_builder_spark.operators.geocode import with_coordinates
-    from timezone_boundary_builder_spark.operators.spatial_join import assign_tzid
+    from timezone_boundary_builder_spark.operators.spatial_join import (
+        assign_tzid_udf_packed,
+        pack_coords_col,
+    )
 
     batch = (
-        assign_tzid(with_coordinates(spark.read.parquet(src)), bc, OCEAN_BANDS)
+        assign_tzid_udf_packed(
+            with_coordinates(spark.read.parquet(src)).select(
+                "url", pack_coords_col()
+            ),
+            bc,
+            OCEAN_BANDS,
+        )
         .toPandas()
         .sort_values("url")
         .reset_index(drop=True)

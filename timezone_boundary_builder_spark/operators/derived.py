@@ -6,31 +6,18 @@ reference derives them from tzdb transition lists and caches them as
 zone-config-1970.json / zone-config-now.json, index.js:247-261; the engine
 treats them as an input table for determinism).
 
-Spark shape: representative selection is a row_number window over
-population (reference sorts by population and takes head, index.js:230-233);
-the merge is groupBy(rep).applyInPandas(cascaded union).
+Spark shape: each group's representative comes with the grouping table
+(rep_tzid, the max-population member, picked where the groupings are
+built — tz_fingerprint, reference index.js:230-233); the merge is
+groupBy(rep).applyInPandas(cascaded union).
 """
 
 from __future__ import annotations
 
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .zone_build import ZONE_SCHEMA, dissolve_group
-
-
-def pick_representatives(zone_groups: DataFrame) -> DataFrame:
-    """(strategy, group) -> representative = max-population member.
-    Mirrors reference index.js:230-233 (sort by population desc, head)."""
-    w = Window.partitionBy("strategy", "rep_tzid").orderBy(
-        F.desc("population"), F.asc("member_tzid")
-    )
-    return (
-        zone_groups.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .select("strategy", "rep_tzid", F.col("member_tzid").alias("chosen_rep"), "population")
-    )
 
 
 def build_derived_zones(

@@ -1,7 +1,8 @@
 """Two-stage spatial join: broadcast cell-cover probe + exact vectorized
 ray-casting PIP, with kNN / ocean-band fallback (north_star hot path).
 
-One mapInPandas pass over the pages table:
+One scalar pandas UDF over the packed coordinates of the pages table
+(assign_tzid_udf_packed):
 
   stage 1  point -> cell ids (bit ops) -> np.searchsorted into the
            broadcast CellMap; FULL hit assigns immediately
@@ -37,11 +38,7 @@ KNN_MAX_METERS = 1852.0  # 1 nautical mile
 # at high latitude
 KNN_BBOX_PAD_DEG = 0.1
 
-ASSIGN_SCHEMA = "url string, lon double, lat double, tzid string, method string"
-ASSIGN_SCHEMA_SLIM = "url string, tzid string, method string"
-
-
-# method codes (shared by the mapInPandas and scalar-UDF paths)
+# method codes (the UDF returns them; names materialize JVM-side)
 M_CELL, M_PIP, M_KNN, M_OCEAN, M_NONE = 0, 1, 2, 3, 4
 METHOD_NAMES = ["cell", "pip", "knn", "ocean", "none"]
 
@@ -225,7 +222,7 @@ def assign_codes(
     method_code) int32/int8 arrays. code indexes cm.tzids for land hits and
     len(cm.tzids)+band for ocean bands; -1 for rows with no coordinate.
     This keeps the Arrow return path at 5 bytes/row — the tzid strings are
-    materialized JVM-side (assign_tzid_udf) or by the caller.
+    materialized JVM-side (assign_tzid_udf_packed) or by the caller.
 
     Rows are processed in cache-resident chunks (per-point independent, so
     chunking is semantics-free). The chunk grows with the zone count: the
@@ -427,83 +424,48 @@ def _band_edges(ocean_bands: list[dict]) -> np.ndarray:
     return np.array([b["left"] for b in ocean_bands] + [ocean_bands[-1]["right"]])
 
 
-def make_assign_fn(
-    cellmap_bc,
-    ocean_bands: list[dict],
-    knn_max_m: float = KNN_MAX_METERS,
-    slim: bool = False,
-):
-    """Returns a mapInPandas function closing over the broadcast CellMap and
-    the (tiny) ocean band table."""
-    band_edges = _band_edges(ocean_bands)
-    band_tzids = [b["tzid"] for b in ocean_bands]
-    method_arr = np.asarray(METHOD_NAMES, dtype=object)
-
-    def _assign(batches):
-        cm = cellmap_bc.value
-        tz_arr = np.asarray(list(cm.tzids) + band_tzids + [None], dtype=object)
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                continue
-            lon = pdf["lon"].to_numpy(dtype=np.float64, na_value=np.nan)
-            lat = pdf["lat"].to_numpy(dtype=np.float64, na_value=np.nan)
-            codes, mcodes = assign_codes(
-                cm, band_edges, len(band_tzids), lon, lat, knn_max_m
-            )
-            tz = tz_arr[codes]  # -1 -> trailing None slot
-            method = method_arr[mcodes]
-            if slim:
-                # hot-path shape: don't ship the coordinates back through
-                # Arrow — the caller can re-join them by url if needed
-                yield pd.DataFrame(
-                    {"url": pdf["url"].to_numpy(), "tzid": tz, "method": method}
-                )
-            else:
-                yield pd.DataFrame(
-                    {
-                        "url": pdf["url"].to_numpy(),
-                        "lon": lon,
-                        "lat": lat,
-                        "tzid": tz,
-                        "method": method,
-                    }
-                )
-
-    return _assign
-
-
-def assign_tzid(
-    pages_with_coords: DataFrame,
-    cellmap_bc,
-    ocean_bands: list[dict],
-    knn_max_m: float = KNN_MAX_METERS,
-    slim: bool = False,
-) -> DataFrame:
-    """pages(url, lon, lat, ...) -> assignments(url[, lon, lat], tzid, method).
-
-    method: cell (full-cell hit) | pip (boundary cell + exact test) |
-    knn (offshore <= 1852 m) | ocean (Etc band) | none (no coordinate).
-    slim=True drops the coordinate echo from the Arrow return path (the
-    10^12-row hot-path shape).
-    """
-    fn = make_assign_fn(cellmap_bc, ocean_bands, knn_max_m, slim=slim)
-    schema = ASSIGN_SCHEMA_SLIM if slim else ASSIGN_SCHEMA
-    return pages_with_coords.select("url", "lon", "lat").mapInPandas(fn, schema)
-
-
 def pack_coords_col():
-    """JVM-side packed int64 micro-degree coordinate codec: lon/lat snapped
-    to the 1e-6-degree grid (exactly the reference's fixed precision model,
-    index.js:327-328) and packed ((lon+180)*1e6) << 32 | ((lat+90)*1e6).
-    Halves the JVM->Python Arrow bytes of the hot path (8 B/row vs two
-    f64). Decode is x/1e6 - offset — the same rational-division shape as
-    the double path, so grid-aligned coordinates round-trip bit-exactly."""
+    """The ONE coordinate decision of the assignment surface, made
+    JVM-side: lon/lat snapped to the 1e-6-degree grid (exactly the
+    reference's fixed precision model, index.js:327-328) and packed
+    ((lon+180)*1e6) << 32 | ((lat+90)*1e6) into one int64 `xy`; a row
+    with no coordinate (null or NaN) packs to -1. 8 B/row down the Arrow
+    pipe instead of two f64, and never a null: a nullable int64 column
+    arrives in pandas as float64, and at ~1.5e18 (> 2^53) that rounds
+    the latitude by up to 128 micro-degrees (~14 m) — enough to move a
+    point across a zone edge or the kNN radius."""
     import pyspark.sql.functions as F
 
-    lon_u = F.round((F.col("lon") + F.lit(180.0)) * F.lit(1_000_000.0)).cast("long")
-    lat_u = F.round((F.col("lat") + F.lit(90.0)) * F.lit(1_000_000.0)).cast("long")
-    return (F.shiftleft(lon_u, 32) + lat_u).alias("xy")
+    lon, lat = F.col("lon"), F.col("lat")
+    lon_u = F.round((lon + F.lit(180.0)) * F.lit(1_000_000.0)).cast("long")
+    lat_u = F.round((lat + F.lit(90.0)) * F.lit(1_000_000.0)).cast("long")
+    packed = F.when(~(F.isnan(lon) | F.isnan(lat)), F.shiftleft(lon_u, 32) + lat_u)
+    return F.coalesce(packed, F.lit(-1).cast("long")).alias("xy")
+
+
+def unpack_xy(v: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Decode packed `xy` (pack_coords_col) to float64 lon/lat, NaN where
+    v < 0. x/1e6 - offset: grid-aligned coordinates round-trip exactly."""
+    lon = (v >> np.int64(32)) / 1e6 - 180.0
+    lat = (v & np.int64(0xFFFFFFFF)) / 1e6 - 90.0
+    bad = v < 0
+    if bad.any():
+        lon[bad] = np.nan
+        lat[bad] = np.nan
+    return lon, lat
+
+
+def unpack_coords_cols():
+    """unpack_xy as JVM columns (lon, lat; null where xy < 0) — the same
+    int64 -> double arithmetic, so a plan that needs doubles (the sharded
+    stage-2 gear) sees exactly the coordinates the UDF assigns."""
+    import pyspark.sql.functions as F
+
+    xy = F.col("xy")
+    ok = xy >= 0
+    lon = F.when(ok, F.shiftright(xy, 32) / F.lit(1e6) - F.lit(180.0))
+    lat = F.when(ok, xy.bitwiseAND(F.lit(0xFFFFFFFF)) / F.lit(1e6) - F.lit(90.0))
+    return lon.alias("lon"), lat.alias("lat")
 
 
 def _string_array_expr(vals: list[str]):
@@ -524,14 +486,20 @@ def assign_tzid_udf_packed(
     ocean_bands: list[dict],
     knn_max_m: float = KNN_MAX_METERS,
 ) -> DataFrame:
-    """assign_tzid_udf over a packed int64 micro-degree coordinate column
-    `xy` (see pack_coords_col): 8 input bytes/row through the Arrow pipe
-    instead of 16. For coordinates on the 1e-6 grid, identical
-    assignments (tested row-equal on the bench grid). Every input column
-    except `xy` passes through to the output — callers that need a
-    composite row identity (e.g. assign_pages joining back on
-    (url, warc_ts) in a table where urls recur across crawls) carry it
-    alongside url; the Arrow pipe still moves only the 8-byte xy."""
+    """pages(..., xy) -> all input columns except xy + (tzid, method): the
+    one tzid-assignment surface. Callers build `xy` with
+    df.select(<passthrough cols>, pack_coords_col()).
+
+    method: cell (full-cell hit) | pip (boundary cell + exact test) |
+    knn (offshore <= 1852 m) | ocean (Etc band) | none (no coordinate).
+
+    Physical shape: a scalar pandas UDF in which only the 8-byte `xy`
+    crosses the JVM->Python Arrow boundary and only (code int32, method
+    int8) come back; page columns never leave the JVM, and the
+    code->tzid string materialization is a codegen'd element_at over a
+    literal array. Callers that need a composite row identity (e.g.
+    assign_pages joining back on (url, warc_ts) where urls recur across
+    crawls) carry it alongside url."""
     import pyspark.sql.functions as F
     from pyspark.sql.functions import pandas_udf
 
@@ -542,13 +510,7 @@ def assign_tzid_udf_packed(
     @pandas_udf("code int, m tinyint")
     def _codes(xy: pd.Series) -> pd.DataFrame:
         cm = cellmap_bc.value
-        v = xy.to_numpy(dtype=np.int64, na_value=-1)
-        lon = (v >> np.int64(32)) / 1e6 - 180.0
-        lat = (v & np.int64(0xFFFFFFFF)) / 1e6 - 90.0
-        bad = v < 0
-        if bad.any():
-            lon[bad] = np.nan
-            lat[bad] = np.nan
+        lon, lat = unpack_xy(xy.to_numpy(dtype=np.int64, na_value=-1))
         code, method = assign_codes(cm, band_edges, n_bands, lon, lat, knn_max_m)
         return pd.DataFrame({"code": code, "m": method})
 
@@ -558,58 +520,6 @@ def assign_tzid_udf_packed(
     passthrough = [c for c in pages_with_xy.columns if c != "xy"]
     return out.select(
         *passthrough,
-        F.when(
-            F.col("__a.code") >= 0, F.element_at(tz_lits, F.col("__a.code") + 1)
-        ).alias("tzid"),
-        F.element_at(m_lits, F.col("__a.m") + 1).alias("method"),
-    )
-
-
-def assign_tzid_udf(
-    pages_with_coords: DataFrame,
-    cellmap_bc,
-    ocean_bands: list[dict],
-    knn_max_m: float = KNN_MAX_METERS,
-    keep_coords: bool = False,
-) -> DataFrame:
-    """Scalar-pandas-UDF variant of assign_tzid — the 10^12-row hot path.
-
-    Identical output semantics (tested equal to assign_tzid row-for-row),
-    different physical shape: only (lon, lat) cross the JVM->Python Arrow
-    boundary and only (code int32, method int8) come back — 5 bytes/row
-    out vs two strings. url (and any other page columns) never leave the
-    JVM, and the code->tzid string materialization is a codegen'd
-    element_at over a literal array. Profiling on the sandbox showed the
-    Arrow round trip, not the geometry kernel, dominated the mapInPandas
-    path (~80%); this cuts transferred bytes ~4x, which is also what makes
-    throughput scale with cores — the pipe is the shared resource.
-    """
-    import pyspark.sql.functions as F
-    from pyspark.sql.functions import pandas_udf
-
-    band_edges = _band_edges(ocean_bands)
-    band_tzids = [b["tzid"] for b in ocean_bands]
-    n_bands = len(band_tzids)
-
-    @pandas_udf("code int, m tinyint")
-    def _codes(lon: pd.Series, lat: pd.Series) -> pd.DataFrame:
-        cm = cellmap_bc.value
-        code, method = assign_codes(
-            cm,
-            band_edges,
-            n_bands,
-            lon.to_numpy(dtype=np.float64, na_value=np.nan),
-            lat.to_numpy(dtype=np.float64, na_value=np.nan),
-            knn_max_m,
-        )
-        return pd.DataFrame({"code": code, "m": method})
-
-    tz_lits = _string_array_expr(list(cellmap_bc.value.tzids) + band_tzids)
-    m_lits = F.array(*[F.lit(m) for m in METHOD_NAMES])
-    out = pages_with_coords.withColumn("__a", _codes(F.col("lon"), F.col("lat")))
-    cols = ["url"] + (["lon", "lat"] if keep_coords else [])
-    return out.select(
-        *cols,
         F.when(
             F.col("__a.code") >= 0, F.element_at(tz_lits, F.col("__a.code") + 1)
         ).alias("tzid"),

@@ -469,9 +469,11 @@ def assign_tzid_sharded(
     n_shards: int = DEFAULT_SHARDS,
     stage1_path: str | None = None,
 ) -> DataFrame:
-    """pages(..., lon, lat) -> all input columns + (tzid, method),
-    row-identical to assign_tzid (pytest-gated), with NO geometry
-    broadcast: slim_bc = sc.broadcast(cellmap.slim()), edges_df =
+    """pages(..., lon, lat) -> all input columns + (tzid, method), with
+    NO geometry broadcast. Row-identical to assign_tzid_udf_packed on
+    the same coordinates (pytest-gated): feed it the packed grid value
+    decoded by spatial_join.unpack_coords_cols, as assign_pages does.
+    slim_bc = sc.broadcast(cellmap.slim()), edges_df =
     zone_edges_frame(...). Extra input columns ride through the payload
     stage-1 pass untouched; only the boundary residue is keyed and
     joined. The returned DataFrame carries a `sharded_release()`

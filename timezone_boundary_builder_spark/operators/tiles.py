@@ -169,9 +169,10 @@ def serve_points_from_tiles(
 ) -> DataFrame:
     """Tile-serving join: assign tzid to points FROM a materialized
     uniform-resolution raster-tile table (the alternative hot path to the
-    broadcast CellMap of spatial_join.assign_tzid — here the coarse index
-    is a *table*, so the probe is a JVM broadcast hash equi-join on
-    cell_id, the shape a tile server / Iceberg-backed lookup uses).
+    broadcast CellMap of spatial_join.assign_tzid_udf_packed — here the
+    coarse index is a *table*, so the probe is a JVM broadcast hash
+    equi-join on cell_id, the shape a tile server / Iceberg-backed lookup
+    uses).
 
     Stage 1: encode each point's cell id (vectorized bit ops, mapInPandas)
     and broadcast-join the per-cell candidate tzid lists (tiny agg of the

@@ -231,10 +231,6 @@ def expected_overlaps_pdf() -> pd.DataFrame:
     return pd.DataFrame(EXPECTED_OVERLAPS)
 
 
-def ocean_bands_pdf() -> pd.DataFrame:
-    return pd.DataFrame(OCEAN_BANDS)
-
-
 def zone_groups_pdf() -> pd.DataFrame:
     return pd.DataFrame(ZONE_GROUPS)
 

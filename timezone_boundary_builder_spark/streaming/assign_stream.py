@@ -5,10 +5,11 @@ exist because the serving layer's input is a continuously-crawled pages
 table. Same operators, streaming plan:
 
 - `stream_assign`: readStream over the pages directory -> JVM-side
-  geocode (with_coordinates) -> the same broadcast two-stage join
-  mapInPandas -> parquet sink with checkpointLocation. Restart-safe: the
-  sink's checkpoint + the append-only source give exactly-once file
-  output.
+  geocode (with_coordinates) -> the batch job's assignment surface
+  (pack_coords_col + assign_tzid_udf_packed: same 1e-6 coordinate grid,
+  same Arrow shape, same kernel call) -> parquet sink with
+  checkpointLocation. Restart-safe: the sink's checkpoint + the
+  append-only source give exactly-once file output.
 - `stream_event_counts`: watermarked sliding-window aggregation over the
   events table (the canonical late-data pattern).
 - `stream_dedup_first_seen`: custom stateful operator via
@@ -24,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.geocode import with_coordinates
-from ..operators.spatial_join import ASSIGN_SCHEMA, make_assign_fn
+from ..operators.spatial_join import assign_tzid_udf_packed, pack_coords_col
 from ..sources.pages import PAGES_SCHEMA
 
 
@@ -43,9 +44,8 @@ def stream_assign(
         .option("maxFilesPerTrigger", 8)
         .parquet(source_dir)
     )
-    with_xy = with_coordinates(pages)
-    fn = make_assign_fn(cellmap_bc, ocean_bands)
-    assigned = with_xy.select("url", "lon", "lat").mapInPandas(fn, ASSIGN_SCHEMA)
+    pts = with_coordinates(pages).select("url", "lon", "lat", pack_coords_col())
+    assigned = assign_tzid_udf_packed(pts, cellmap_bc, ocean_bands)
     return (
         assigned.writeStream.format("parquet")
         .option("path", sink_dir)
