@@ -9,9 +9,10 @@ executors; sandbox = two parallelism levels, "N and 4N cores"): the
 flagship two-stage spatial join runs over the same synthetic point set at
 local[1] and local[4]; pages/sec at both plus the efficiency ratio are
 reported in the JSON and mirrored in BENCH.md. The measured job is the
-scalar-pandas-UDF hot path (assign_tzid_udf): only (lon, lat) cross the
-JVM->Python Arrow boundary and int codes come back — profiling showed the
-Arrow pipe, not the geometry kernel, bounded scaling. 64M points so the
+scalar-pandas-UDF hot path (assign_tzid_udf_packed): only the packed
+int64 `xy` crosses the JVM->Python Arrow boundary and int codes come
+back — profiling showed the Arrow pipe, not the geometry kernel, bounded
+scaling. 64M points so the
 fixed per-job constant (~1 s) is <5% of the slower leg.
 
 Why 1 vs 4 and not 8 vs 32: this sandbox reports 32 logical CPUs but a
@@ -119,8 +120,10 @@ def synthetic_points_packed(spark: SparkSession, n: int):
     through the Arrow pipe instead of two f64). Pure integer arithmetic:
     lon_u = (id*37%36000)*1e4 micro-deg (+180 offset); the grid's lat is
     k/100 - 85, so its +90-offset form is lat_u = k*1e4 + 5e6. Decode
-    (x/1e6 - offset) is bit-identical to the double path on this grid
-    (tested in tests/test_packed_codec.py)."""
+    (x/1e6 - offset) is exact for every longitude, but not for every
+    latitude: 640 of the 17,000 grid latitudes decode one ulp (1.4e-14
+    degrees) away from k/100 - 85 (386 of the 10,000 sf0.01 latitudes).
+    The packed path is not bit-identical to the double path."""
     return spark.range(n).select(
         F.col("id").cast("string").alias("url"),
         (

@@ -8,23 +8,33 @@ metrics").
         jobs/assign_pages.py --pages-root /tmp/pages --work-dir /tmp/aw \
         --out-dir /tmp/assigned
 
-Pipeline (one scan, zero shuffles on the pages side):
+Pipeline (one pass over the pages, zero shuffles on the pages side):
 
     Iceberg-lite snapshot scan (manifest partition pruning by --ts-day-*)
       -> JVM-side geocode (regexp, codegen)
       -> packed micro-degree codec -> broadcast two-stage spatial join
-         (scalar pandas UDF: 8 B/row down, 5 B/row back)
-      -> parquet sink + per-partition lineage table
+         (scalar pandas UDF: 8 B/row down, 5 B/row back; every page
+         column stays in the JVM and passes through)
+      -> ONE staged parquet write of the full output rows (the scan's
+         columns, then tzid, method) under --work-dir
+      -> ONE aggregate over the written files: rows, the text hash, the
+         method mix and the per-partition lineage rows
+      -> promote: the staged rows are renamed to <out>/assigned_pages and
+         the lineage table is written next to them from the driver
 
-Resume: the stage fingerprint is (snapshot id, ts range, zone-set hash) —
-re-running against an unchanged snapshot is a manifest hit that re-verifies
-the output hash and skips the scan entirely (reference FileLookupCache
-contract, util/cache.js:74-128).
+Resume: the staged output is the stage checkpoint, keyed by the stage
+fingerprint (snapshot id, ts range, zone-set hash, ...). The manifest
+follows it through the promote, so re-running against an unchanged
+snapshot into the same --out-dir is a manifest hit on the published rows:
+the job re-verifies and re-publishes (lineage, publish marker) without
+rewriting any page bytes (reference FileLookupCache contract,
+util/cache.js:74-128). A run into another --out-dir recomputes, leaving
+the earlier publish where it is.
 
 Invariant (north_star): byte-identical `text` per url through every stage —
 proven here by comparing an order-insensitive bit_xor(xxhash64) aggregate of
-(url, text) between the input snapshot and the assignment output joined
-back to the table.
+(url, text) between an independent scan of the input snapshot and the
+written output rows, before anything is promoted.
 """
 
 from __future__ import annotations
@@ -119,7 +129,6 @@ def main(argv=None) -> int:
         pack_coords_col,
         unpack_coords_cols,
     )
-    from timezone_boundary_builder_spark.plans.lineage import lineage_table
     from timezone_boundary_builder_spark.plans.manifests import (
         StageManifest,
         fingerprint,
@@ -174,12 +183,13 @@ def main(argv=None) -> int:
     # decides ocean tzids and the cover resolution decides the
     # cell-vs-pip method mix — omitting either would replay a stale
     # cached stage after a flag change
-    # "v3": the format marker keeps an older cached stage from replaying
+    # "v4": the format marker keeps an older cached stage from replaying
     # — v2 added warc_ts (composite row identity for tables where urls
     # recur across crawls); v3 assigns both stage-2 modes on the
-    # null-safe packed 1e-6 grid value (older stages could differ there)
+    # null-safe packed 1e-6 grid value (older stages could differ there);
+    # v4 stages the full output rows, not (url, warc_ts, tzid, method)
     stage_fp = fingerprint(
-        "assign-v3",
+        "assign-v4",
         str(sid),
         str(args.ts_day_min),
         str(args.ts_day_max),
@@ -201,18 +211,16 @@ def main(argv=None) -> int:
     # published (round-6 ADVICE: the sharded branch never called
     # sharded_release, pinning the full-input persist for the session)
     sharded_handle: dict = {}
+    scan = pages_table.scan(
+        spark,
+        args.pages_root,
+        snapshot_id=sid,
+        ts_day_min=args.ts_day_min,
+        ts_day_max=args.ts_day_max,
+    )
 
     def compute():
-        scan = pages_table.scan(
-            spark,
-            args.pages_root,
-            snapshot_id=sid,
-            ts_day_min=args.ts_day_min,
-            ts_day_max=args.ts_day_max,
-        )
-        # warc_ts rides along: (url, warc_ts) is the row identity of a
-        # crawl table (warc_ts exists to version url revisits), and the
-        # invariant join below must not fan out on recrawled urls
+        # the stage IS the output: every scan column, then (tzid, method)
         if stage2 == "sharded":
             from timezone_boundary_builder_spark.operators.spatial_join_sharded import (
                 assign_tzid_sharded,
@@ -251,87 +259,43 @@ def main(argv=None) -> int:
                 stage1_path=staging,
             )
             sharded_handle["df"] = out
-            return out.select("url", "warc_ts", "tzid", "method")
-        pts = with_coordinates(scan).select("url", "warc_ts", pack_coords_col())
+            # the gear carries only the row identity: join the page
+            # columns back on the COMPOSITE (url, warc_ts), null-safe on
+            # warc_ts — a recrawled url (same url, two warc_ts rows) is
+            # routine input and a url-only join would fan out. (Exact
+            # duplicate (url, warc_ts) rows still fan out and fail the
+            # row count — that IS table corruption: a double-published
+            # commit.)
+            a = out.select(
+                F.col("url").alias("a_url"), F.col("warc_ts").alias("a_ts"), "tzid", "method"
+            )
+            return scan.join(
+                a,
+                (scan["url"] == a["a_url"]) & scan["warc_ts"].eqNullSafe(a["a_ts"]),
+                "inner",
+            ).drop("a_url", "a_ts")
+        pts = with_coordinates(scan).select(*scan.columns, pack_coords_col())
         return assign_tzid_udf_packed(pts, bc, _ocean_bands(args))
 
-    assigned, cached = manifest.run_stage(spark, "assign", stage_fp, compute)
-    methods = {
-        r["method"]: r["n"]
-        for r in assigned.groupBy("method").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-
-    # byte-identical text invariant: order-insensitive hash aggregate of
-    # (url, text) must survive the join back to the assignments. The
-    # join keys on the COMPOSITE (url, warc_ts) row identity, null-safe
-    # on warc_ts — a recrawled url (same url, two warc_ts rows) is
-    # routine input, and a url-only join would fan out and abort the run
-    # as a spurious invariant violation. (Exact duplicate (url, warc_ts)
-    # rows still fan out and abort — that IS table corruption: a
-    # double-published commit.)
-    scan = pages_table.scan(
+    # the one write of the page rows: staged under --work-dir, it is also
+    # the resume checkpoint, and publish() renames it into place. A stage
+    # another run published to a different --out-dir is not this run's:
+    # run_stage recomputes it rather than moving it out of that publish
+    assigned, cached = manifest.run_stage(
         spark,
-        args.pages_root,
-        snapshot_id=sid,
-        ts_day_min=args.ts_day_min,
-        ts_day_max=args.ts_day_max,
+        "assign",
+        stage_fp,
+        compute,
+        publish_to=os.path.join(args.out_dir, "assigned_pages"),
     )
+    # byte-identical text invariant: an order-insensitive hash aggregate
+    # of (url, text) over an independent read of the snapshot, compared
+    # with the same aggregate over the written rows
     h_in = scan.agg(
         F.bit_xor(F.xxhash64("url", "text")).alias("h"),
         F.count(F.lit(1)).alias("n"),
     ).collect()[0]
-    a = assigned.select(
-        F.col("url").alias("a_url"),
-        F.col("warc_ts").alias("a_ts"),
-        "tzid",
-        "method",
-    )
-    joined = scan.join(
-        a,
-        (scan["url"] == a["a_url"]) & scan["warc_ts"].eqNullSafe(a["a_ts"]),
-        "inner",
-    ).drop("a_url", "a_ts")
-    # stage-then-promote: write to a staging path, hash the WRITTEN bytes
-    # (one join execution, and the invariant covers what actually landed
-    # on disk), and only rename into the consumer-visible paths once the
-    # check passes — a violation must never leave corrupt parquet (or a
-    # lineage table describing an aborted output) where downstream
-    # readers can pick it up
-    final_path = f"{args.out_dir}/assigned_pages"
-    staging_path = f"{final_path}.__staging__"
-    lineage_final = f"{args.out_dir}/lineage"
-    lineage_staging = f"{lineage_final}.__staging__"
-    joined.write.mode("overwrite").parquet(staging_path)
-    lineage_table(assigned, "url").write.mode("overwrite").parquet(lineage_staging)
-    written = spark.read.parquet(staging_path)
-    h_out = written.agg(
-        F.bit_xor(F.xxhash64("url", "text")).alias("h"),
-        F.count(F.lit(1)).alias("n"),
-    ).collect()[0]
-    text_ok = (h_in["h"] == h_out["h"]) and (h_in["n"] == h_out["n"])
-    if not text_ok:
-        shutil.rmtree(staging_path, ignore_errors=True)
-        shutil.rmtree(lineage_staging, ignore_errors=True)
-        raise AssertionError("text passthrough invariant violated")
-    # The two promotes cannot be one atomic rename (rename(2) cannot swap
-    # non-empty directories), so a crash between them CAN leave a new
-    # output next to the previous run's lineage. Make that torn state
-    # DETECTABLE: both staged dirs carry the same _publish.json (the
-    # underscore prefix hides it from parquet readers) — a consumer that
-    # needs the pair consistent compares the two publish_ids, and the
-    # next run heals the tear by rewriting both.
-    publish = {"publish_id": uuid.uuid4().hex, "snapshot": sid}
-    for staged in (staging_path, lineage_staging):
-        with open(os.path.join(staged, "_publish.json"), "w") as f:
-            json.dump(publish, f)
-    for staged, final in ((staging_path, final_path), (lineage_staging, lineage_final)):
-        if os.path.exists(final):
-            shutil.rmtree(final)
-        os.replace(staged, final)
-    # metadata-only count of the PROMOTED lineage parquet: re-running the
-    # lineage mapInPandas pass just for a metrics line would double its
-    # cost at crawl scale
-    n_lineage = spark.read.parquet(lineage_final).count()
+    summary = publish(manifest, assigned, h_in, args.out_dir, sid)
 
     # output is published and every consumer above has executed — drop
     # the sharded operator's caches (stage-1 persist, edges, residue)
@@ -355,16 +319,58 @@ def main(argv=None) -> int:
                 # durable stage-1 write that did not happen
                 "sharded_stage1": args.sharded_stage1 if stage2 == "sharded" else None,
                 "map_bytes": map_bytes,
-                "rows": int(h_out["n"]),
-                "methods": methods,
-                "text_invariant_ok": text_ok,
-                "lineage_partitions": n_lineage,
+                "rows": summary.rows,
+                "methods": summary.counts,
+                # publish() raises before promoting anything otherwise
+                "text_invariant_ok": True,
+                "lineage_partitions": len(summary.lineage),
                 "wall_sec": round(time.time() - t0, 2),
             }
         )
     )
     spark.stop()
     return 0
+
+
+def publish(manifest, written, h_in, out_dir: str, snapshot: str):
+    """Verify the written assign stage against the input hash `h_in`
+    (a Row/dict with the snapshot's `h` and `n`) and publish it as
+    out_dir/assigned_pages (+ out_dir/lineage). One pass over the written
+    files yields the rows, the (url, text) hash, the method mix and the
+    per-partition lineage rows (plans.lineage.summarize). On a mismatch
+    nothing is published: the staged output and its manifest record are
+    dropped, so the next run recomputes instead of replaying the stage,
+    and AssertionError is raised. Returns the Summary."""
+    from timezone_boundary_builder_spark.plans.lineage import summarize, write_lineage
+
+    summary = summarize(written, "url", "method", hash_cols=("url", "text"))
+    # bit_xor over no rows is null; the summary's is 0
+    if (h_in["h"] or 0) != summary.h or h_in["n"] != summary.rows:
+        manifest.discard("assign")
+        raise AssertionError(
+            f"text passthrough invariant violated: input ({h_in['h']}, "
+            f"{h_in['n']} rows), written ({summary.h}, {summary.rows} rows)"
+        )
+    final_path = os.path.join(out_dir, "assigned_pages")
+    lineage_final = os.path.join(out_dir, "lineage")
+    lineage_staging = f"{lineage_final}.__staging__"
+    write_lineage(summary.lineage, lineage_staging)
+    # The two promotes cannot be one atomic rename (rename(2) cannot swap
+    # non-empty directories), so a crash between them CAN leave a new
+    # output next to the previous run's lineage. Make that torn state
+    # DETECTABLE: both dirs carry the same _publish.json (the underscore
+    # prefix hides it from parquet readers and from the manifest's output
+    # hash) — a consumer that needs the pair consistent compares the two
+    # publish_ids, and the next run (a manifest hit) heals the tear by
+    # re-verifying and re-publishing both without rewriting the pages.
+    marker = {"publish_id": uuid.uuid4().hex, "snapshot": snapshot}
+    for d in (manifest.output_path("assign"), lineage_staging):
+        with open(os.path.join(d, "_publish.json"), "w") as f:
+            json.dump(marker, f)
+    manifest.promote("assign", final_path)
+    shutil.rmtree(lineage_final, ignore_errors=True)
+    os.replace(lineage_staging, lineage_final)
+    return summary
 
 
 def _ocean_bands(args) -> list[dict]:
@@ -433,11 +439,6 @@ def _run_incremental(spark, args, sid, t0) -> int:
     extends the parent's list), so the delta is exactly the new data
     files; each run appends one increment of assignments and advances the
     cursor atomically. Re-running with no new snapshot is a no-op."""
-    import json as _json
-    import os
-
-    from pyspark.sql import functions as F
-
     from timezone_boundary_builder_spark.operators.geocode import with_coordinates
     from timezone_boundary_builder_spark.operators.spatial_join import (
         assign_tzid_udf_packed,
@@ -451,7 +452,7 @@ def _run_incremental(spark, args, sid, t0) -> int:
     state = {"last_snapshot": None, "increments": []}
     if os.path.exists(cursor_path):
         with open(cursor_path) as f:
-            state = _json.load(f)
+            state = json.load(f)
 
     # chain-walked append delta (NOT a raw path diff): rewrite snapshots
     # from compact_data_files carry no new logical rows and are skipped;
@@ -470,7 +471,7 @@ def _run_incremental(spark, args, sid, t0) -> int:
     rows = 0
     methods: dict[str, int] = {}
     if delta:
-        from timezone_boundary_builder_spark.plans.lineage import lineage_table
+        from timezone_boundary_builder_spark.plans.lineage import summarize, write_lineage
 
         cm, _, _ = _load_cellmap(spark, args)
         bc = spark.sparkContext.broadcast(cm)
@@ -479,26 +480,24 @@ def _run_incremental(spark, args, sid, t0) -> int:
         assigned = assign_tzid_udf_packed(pts, bc, _ocean_bands(args))
         inc_path = os.path.join(args.out_dir, "increments", f"snap-{sid}")
         assigned.write.mode("overwrite").parquet(inc_path)
-        got = spark.read.parquet(inc_path)
-        # per-partition lineage for the increment too — the incremental
-        # surface carries the same per-partition metrics contract as the
-        # full run, one lineage table per increment (kept OUTSIDE
-        # increments/ so consumers can glob increments/* homogeneously)
-        lineage_table(got, "url").write.mode("overwrite").parquet(
-            os.path.join(args.out_dir, "increments_lineage", f"snap-{sid}")
+        # rows, method mix and per-partition lineage of the written
+        # increment from one pass — the incremental surface carries the
+        # same per-partition metrics contract as the full run, one
+        # lineage table per increment (kept OUTSIDE increments/ so
+        # consumers can glob increments/* homogeneously)
+        summary = summarize(spark.read.parquet(inc_path), "url", "method")
+        write_lineage(
+            summary.lineage,
+            os.path.join(args.out_dir, "increments_lineage", f"snap-{sid}"),
         )
-        rows = got.count()
-        methods = {
-            r["method"]: r["n"]
-            for r in got.groupBy("method").agg(F.count(F.lit(1)).alias("n")).collect()
-        }
+        rows, methods = summary.rows, summary.counts
         state["increments"].append(
             {"snapshot": sid, "rows": rows, "path": inc_path}
         )
     state["last_snapshot"] = sid
     tmp = cursor_path + ".tmp"
     with open(tmp, "w") as f:
-        _json.dump(state, f)
+        json.dump(state, f)
     os.rename(tmp, cursor_path)  # atomic cursor advance
 
     print(

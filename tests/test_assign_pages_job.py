@@ -4,6 +4,7 @@ invariant."""
 
 import json
 import os
+import shutil
 import subprocess
 import sys
 
@@ -36,7 +37,12 @@ def pages_root(spark, tmp_path_factory):
     return root
 
 
-def test_assign_job_runs_and_resumes(pages_root, tmp_path):
+def test_assign_job_runs_and_resumes(spark, pages_root, tmp_path):
+    from pyspark.sql import types as T
+
+    from timezone_boundary_builder_spark.plans.lineage import lineage_table
+    from timezone_boundary_builder_spark.sources import pages as pt
+
     work = str(tmp_path / "w")
     out = str(tmp_path / "o")
     r1 = _run(pages_root, work, out)
@@ -60,6 +66,21 @@ def test_assign_job_runs_and_resumes(pages_root, tmp_path):
     ]
     assert pub[0]["publish_id"] == pub[1]["publish_id"]
     assert pub[0]["snapshot"] == r1["snapshot"]
+    # the assign stage wrote the published rows: the scan's columns in
+    # order, then (tzid, method), moved (not copied) out of the work dir
+    published = spark.read.parquet(os.path.join(out, "assigned_pages"))
+    shape = [(f.name, f.dataType) for f in published.schema]
+    assert shape == [(f.name, f.dataType) for f in pt.scan(spark, pages_root).schema] + [
+        ("tzid", T.StringType()),
+        ("method", T.StringType()),
+    ]
+    assert not os.path.exists(os.path.join(work, "assign"))
+    # the lineage written from the one verifying aggregate is exactly
+    # lineage_table over the published rows
+    lineage = spark.read.parquet(os.path.join(out, "lineage")).collect()
+    assert set(lineage) == set(lineage_table(published, "url").collect())
+    assert sum(row["n_rows"] for row in lineage) == r1["rows"]
+    assert r1["lineage_partitions"] == len(lineage)
     r2 = _run(pages_root, work, out)
     assert r2["cached"] is True
     assert r2["methods"] == r1["methods"]
@@ -278,3 +299,112 @@ def test_assign_job_stage2_modes_agree_off_grid(spark, tmp_path):
         )
         got[mode] = (row[0]["tzid"], row[0]["method"])
     assert got["broadcast"] == got["sharded"] == expect, (lat_s, got, expect)
+
+
+def _publish_id(out, d):
+    return json.load(open(os.path.join(out, d, "_publish.json")))["publish_id"]
+
+
+def _page_files(path):
+    """(name, inode) of every data file: a rename keeps the inode, a
+    rewrite or a copy does not."""
+    return sorted(
+        (f, os.stat(os.path.join(path, f)).st_ino)
+        for f in os.listdir(path)
+        if f.endswith(".parquet")
+    )
+
+
+def test_assign_publish_refuses_a_text_hash_mismatch(spark, pages_root, tmp_path):
+    """A written stage whose (url, text) hash differs from the input's
+    fails the run: AssertionError, the published output and lineage stay
+    as they were, the staged rows are deleted and the stage's manifest
+    record is dropped, so the next run recomputes instead of replaying a
+    bad stage as cached."""
+    import importlib.util
+
+    from timezone_boundary_builder_spark.plans.manifests import StageManifest
+
+    spec = importlib.util.spec_from_file_location(
+        "assign_pages_job", os.path.join(REPO, "jobs", "assign_pages.py")
+    )
+    job = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(job)
+
+    work, out = str(tmp_path / "w"), str(tmp_path / "o")
+    r = _run(pages_root, work, out)
+    before = {d: _publish_id(out, d) for d in ("assigned_pages", "lineage")}
+    pages_before = _page_files(os.path.join(out, "assigned_pages"))
+
+    manifest = StageManifest(work)
+    staged, cached = manifest.run_stage(
+        spark, "assign", "forced", lambda: spark.read.parquet(os.path.join(out, "assigned_pages"))
+    )
+    assert cached is False and os.path.exists(os.path.join(work, "assign"))
+    with pytest.raises(AssertionError, match="invariant"):
+        job.publish(manifest, staged, {"h": 12345, "n": r["rows"]}, out, r["snapshot"])
+
+    assert {d: _publish_id(out, d) for d in ("assigned_pages", "lineage")} == before
+    assert _page_files(os.path.join(out, "assigned_pages")) == pages_before
+    assert not os.path.exists(os.path.join(work, "assign"))
+    assert not os.path.exists(os.path.join(out, "lineage.__staging__"))
+    assert "assign" not in json.load(open(os.path.join(work, "_manifest.json")))
+    r2 = _run(pages_root, work, out)
+    assert r2["cached"] is False and r2["rows"] == r["rows"]
+
+
+def test_assign_job_heals_torn_publish_and_promotes_a_staged_run(pages_root, tmp_path):
+    """Resume after a crash. Between the two promotes (lineage lost): the
+    re-run is a manifest hit that restores lineage under the same publish
+    id as the pages, without rewriting the pages. Before the promote
+    (stage written under --work-dir, nothing published): the re-run
+    promotes the stage without recomputing it."""
+    work, out = str(tmp_path / "w"), str(tmp_path / "o")
+    r1 = _run(pages_root, work, out)
+    pages = os.path.join(out, "assigned_pages")
+    files = _page_files(pages)
+
+    shutil.rmtree(os.path.join(out, "lineage"))
+    r2 = _run(pages_root, work, out)
+    assert r2["cached"] is True and r2["rows"] == r1["rows"]
+    assert r2["methods"] == r1["methods"]
+    assert _publish_id(out, "assigned_pages") == _publish_id(out, "lineage")
+    assert _page_files(pages) == files
+
+    # rewind to a crash right after the stage write
+    staged = os.path.join(work, "assign")
+    os.rename(pages, staged)
+    shutil.rmtree(os.path.join(out, "lineage"))
+    mpath = os.path.join(work, "_manifest.json")
+    m = json.load(open(mpath))
+    m["assign"]["output_path"] = staged
+    json.dump(m, open(mpath, "w"))
+
+    r3 = _run(pages_root, work, out)
+    assert r3["cached"] is True and r3["rows"] == r1["rows"]
+    assert not os.path.exists(staged)
+    assert _page_files(pages) == files
+    assert _publish_id(out, "assigned_pages") == _publish_id(out, "lineage")
+
+
+def test_assign_job_out_dir_aliases_and_a_second_out_dir(pages_root, tmp_path):
+    """The published stage is found again however --out-dir is spelled,
+    and a run publishing to another --out-dir from the same --work-dir
+    recomputes instead of moving the first publish away."""
+    work, out, out2 = str(tmp_path / "w"), str(tmp_path / "o"), str(tmp_path / "o2")
+    r1 = _run(pages_root, work, out)
+    pages = os.path.join(out, "assigned_pages")
+    files = _page_files(pages)
+
+    r2 = _run(pages_root, work, out + "/.")
+    assert r2["cached"] is True and r2["rows"] == r1["rows"]
+    assert _page_files(pages) == files
+    assert _publish_id(out, "assigned_pages") == _publish_id(out, "lineage")
+
+    published = {d: _publish_id(out, d) for d in ("assigned_pages", "lineage")}
+    r3 = _run(pages_root, work, out2)
+    assert r3["cached"] is False and r3["rows"] == r1["rows"]
+    assert r3["methods"] == r1["methods"]
+    assert _page_files(pages) == files
+    assert {d: _publish_id(out, d) for d in ("assigned_pages", "lineage")} == published
+    assert _publish_id(out2, "assigned_pages") == _publish_id(out2, "lineage")

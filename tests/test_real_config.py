@@ -161,6 +161,17 @@ def test_pair_key_split_handles_hyphenated_zones():
     )
 
 
+def test_missing_reference_file_names_the_setting(tmp_path):
+    """Without the reference data the loader fails with one clear error:
+    which file is missing, where it looked and which setting points it
+    elsewhere."""
+    with pytest.raises(FileNotFoundError) as e:
+        real_sources_pdf(str(tmp_path))
+    msg = str(e.value)
+    assert "TZBB_REFERENCE_DIR" in msg
+    assert str(tmp_path / "timezones.json") in msg
+
+
 def test_real_ocean_bands_match_reference_table():
     """Content-equal to the reference's hard-coded table
     (index.js:107-133): 25 bands, 15 degrees each except the two

@@ -18,6 +18,7 @@ from __future__ import annotations
 import hashlib
 import json
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -47,7 +48,8 @@ def _output_hash(path: str) -> str:
 
 class StageManifest:
     """One manifest JSON per pipeline root: stage -> {fingerprint,
-    output_path, output_hash}."""
+    output_path, output_hash}. A stage writes under the root; `promote`
+    can move its output elsewhere, and the record follows it."""
 
     def __init__(self, root: str):
         self.root = root
@@ -70,18 +72,27 @@ class StageManifest:
         stage: str,
         fp: str,
         compute: "callable[[], DataFrame]",
+        publish_to: str | None = None,
     ) -> tuple[DataFrame, bool]:
         """Returns (df, was_cached). Skips compute when the stored
-        fingerprint matches AND the output parquet re-verifies."""
-        out_path = os.path.join(self.root, stage)
+        fingerprint matches AND the output parquet re-verifies AND it
+        sits where this run keeps it: under the root, or at `publish_to`
+        (where this run promotes the stage). An output promoted anywhere
+        else belongs to another publish and is recomputed, never reused,
+        so this run cannot move it away from there."""
         rec = self._data.get(stage)
+        out_path = os.path.realpath(os.path.join(self.root, stage))
+        homes = {out_path}
+        if publish_to is not None:
+            homes.add(os.path.realpath(publish_to))
         if (
             rec
             and rec["fingerprint"] == fp
-            and os.path.exists(out_path)
-            and _output_hash(out_path) == rec["output_hash"]
+            and os.path.realpath(rec["output_path"]) in homes
+            and os.path.exists(rec["output_path"])
+            and _output_hash(rec["output_path"]) == rec["output_hash"]
         ):
-            return spark.read.parquet(out_path), True
+            return spark.read.parquet(rec["output_path"]), True
         df = compute()
         df.write.mode("overwrite").parquet(out_path)
         self._data[stage] = {
@@ -91,3 +102,34 @@ class StageManifest:
         }
         self._save()
         return spark.read.parquet(out_path), False
+
+    def output_path(self, stage: str) -> str:
+        return self._data[stage]["output_path"]
+
+    def promote(self, stage: str, dest: str) -> None:
+        """Move the stage's output to `dest`, replacing what is there, by
+        a rename (no bytes are copied when both are on one filesystem),
+        and record `dest` — the next run_stage with the same fingerprint
+        and `publish_to=dest` verifies and returns the moved output. A
+        no-op once it is there, however `dest` is spelled."""
+        rec = self._data[stage]
+        dest = os.path.realpath(dest)
+        if os.path.realpath(rec["output_path"]) == dest:
+            return
+        if os.path.exists(dest):
+            shutil.rmtree(dest)
+        os.makedirs(os.path.dirname(dest), exist_ok=True)
+        shutil.move(rec["output_path"], dest)
+        rec["output_path"] = dest
+        self._save()
+
+    def discard(self, stage: str) -> None:
+        """Forget the stage so the next run_stage recomputes it, deleting
+        its output if it still sits under the root (a promoted output is
+        left where it was published)."""
+        rec = self._data.pop(stage, None)
+        self._save()
+        if rec and os.path.realpath(rec["output_path"]) == os.path.realpath(
+            os.path.join(self.root, stage)
+        ):
+            shutil.rmtree(rec["output_path"], ignore_errors=True)

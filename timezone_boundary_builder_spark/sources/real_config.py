@@ -58,8 +58,16 @@ PATCH_SHRINK = 0.4  # planted patch = inner 40% of the allowed bbox
 
 
 def _load(name: str, ref_dir: str) -> dict:
-    with open(os.path.join(ref_dir, name)) as f:
-        return json.load(f)
+    path = os.path.join(ref_dir, name)
+    try:
+        with open(path) as f:
+            return json.load(f)
+    except FileNotFoundError as e:
+        raise FileNotFoundError(
+            f"reference config {name} not found at {path}: set TZBB_REFERENCE_DIR "
+            "to a directory holding the reference's timezones.json, "
+            "osmBoundarySources.json and expectedZoneOverlaps.json"
+        ) from e
 
 
 def _box_gj(x0, y0, x1, y1) -> str:
