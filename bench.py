@@ -97,6 +97,7 @@ def make_spark(cores: int) -> SparkSession:
         cores=cores,
         shuffle_partitions=max(cores, 8),
         extra_conf={
+            "spark.driver.memory": "8g",
             # larger Arrow batches amortize per-batch UDF overhead; the
             # kernel's internal 65536-row chunking keeps cache residency
             # regardless of batch size (measured best at 512k)

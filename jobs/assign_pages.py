@@ -107,21 +107,11 @@ def main(argv=None) -> int:
     )
     args = p.parse_args(argv)
 
-    from pyspark import SparkConf
-    from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
-    builder = (
-        SparkSession.builder.appName("tzbb-assign-pages")
-        .config("spark.sql.shuffle.partitions", str(args.cores))
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.enabled", "false")
-    )
-    if not SparkConf(loadDefaults=True).contains("spark.master"):
-        builder = builder.master(f"local[{args.cores}]")
-    spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    from timezone_boundary_builder_spark.session import get_spark
+
+    spark = get_spark("tzbb-assign-pages", cores=args.cores)
 
     from timezone_boundary_builder_spark.operators.geocode import with_coordinates
     from timezone_boundary_builder_spark.operators.spatial_join import (

@@ -53,7 +53,6 @@ def main(argv=None) -> int:
     excluded = [z for z in args.excluded_zones.split(",") if z]
 
     import pandas as pd
-    from pyspark.sql import SparkSession
 
     from timezone_boundary_builder_spark.operators.derived import (
         build_derived_zones,
@@ -80,21 +79,9 @@ def main(argv=None) -> int:
         zones_config_pdf,
     )
 
-    from pyspark import SparkConf
+    from timezone_boundary_builder_spark.session import get_spark
 
-    builder = (
-        SparkSession.builder.appName("tzbb-build-all")
-        .config("spark.sql.shuffle.partitions", str(args.cores))
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.enabled", "false")
-    )
-    # spark-submit provides the master; plain `python jobs/build_all.py`
-    # falls back to local mode
-    if not SparkConf(loadDefaults=True).contains("spark.master"):
-        builder = builder.master(f"local[{args.cores}]")
-    spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    spark = get_spark("tzbb-build-all", cores=args.cores)
 
     t0 = time.time()
     manifest = StageManifest(args.work_dir)

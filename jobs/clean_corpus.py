@@ -108,21 +108,12 @@ def main(argv=None) -> int:
     p.add_argument("--n-shards", type=int, default=16)
     args = p.parse_args(argv)
 
-    from pyspark import SparkConf
-    from pyspark.sql import SparkSession, Window
+    from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    builder = (
-        SparkSession.builder.appName("tzbb-clean-corpus")
-        .config("spark.sql.shuffle.partitions", str(args.cores))
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.ui.enabled", "false")
-    )
-    if not SparkConf(loadDefaults=True).contains("spark.master"):
-        builder = builder.master(f"local[{args.cores}]")
-    spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    from timezone_boundary_builder_spark.session import get_spark
+
+    spark = get_spark("tzbb-clean-corpus", cores=args.cores)
     # reliable checkpoints by default: with a checkpoint dir configured,
     # the dedup family's lineage-truncation points (LSH candidate pairs,
     # CC pointer-jump rounds — dedup._materialize_then_unpersist) write

@@ -35,9 +35,7 @@ def main(argv=None) -> int:
         print("nothing to do: pass --compact and/or --expire", file=sys.stderr)
         return 2
 
-    from pyspark import SparkConf
-    from pyspark.sql import SparkSession
-
+    from timezone_boundary_builder_spark.session import get_spark
     from timezone_boundary_builder_spark.sources import pages as pt
 
     t0 = time.time()
@@ -45,16 +43,7 @@ def main(argv=None) -> int:
 
     spark = None
     if args.compact:
-        builder = (
-            SparkSession.builder.appName("tzbb-maintain-pages")
-            .config("spark.sql.shuffle.partitions", str(args.cores))
-            .config("spark.sql.session.timeZone", "UTC")
-            .config("spark.ui.enabled", "false")
-        )
-        if not SparkConf(loadDefaults=True).contains("spark.master"):
-            builder = builder.master(f"local[{args.cores}]")
-        spark = builder.getOrCreate()
-        spark.sparkContext.setLogLevel("WARN")
+        spark = get_spark("tzbb-maintain-pages", cores=args.cores)
         before = len(pt.read_snapshot(args.pages_root)["manifest"])
         sid = pt.compact_data_files(spark, args.pages_root)
         out["compacted_snapshot"] = sid

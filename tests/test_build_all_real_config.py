@@ -102,7 +102,12 @@ def test_real_config_full_dag(tmp_path):
     )
     from timezone_boundary_builder_spark.session import get_spark
 
-    spark = get_spark(app_name="tzbb-realcfg-pages", cores=8, shuffle_partitions=8)
+    spark = get_spark(
+        app_name="tzbb-realcfg-pages",
+        cores=8,
+        shuffle_partitions=8,
+        extra_conf={"spark.driver.memory": "8g"},
+    )
     pages_root = str(tmp_path / "pages_tbl")
     pdf = synthetic_pages(n=400, seed=11).drop(columns=["kind"])
     pt.commit_append(pages_root, spark.createDataFrame(pdf))

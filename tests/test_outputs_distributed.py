@@ -1,53 +1,9 @@
-"""S7 scale-path sink: the distributed (executor-written) FeatureCollection
-must reconstruct to the same feature set as the driver-side collected
-writer, with nothing data-sized crossing the driver."""
+"""FeatureCollection sink and name-list byte parity with the reference
+writer, and JS number formatting of -0 coordinates."""
 
 import json
 
-import pandas as pd
-import pytest
-
-from timezone_boundary_builder_spark.operators.outputs import (
-    read_feature_collection_distributed,
-    write_feature_collection,
-    write_feature_collection_distributed,
-)
-
-
-@pytest.fixture(scope="module")
-def zones_df(spark):
-    rows = []
-    for i in range(137):
-        gj = json.dumps(
-            {
-                "type": "Polygon",
-                "coordinates": [
-                    [[i, 0.0], [i + 1.0, 0.0], [i + 1.0, 1.0], [i, 1.0], [i, 0.0]]
-                ],
-            }
-        )
-        rows.append({"tzid": f'Zone/With"Quote_{i:03d}', "geometry": gj})
-    return spark.createDataFrame(pd.DataFrame(rows))
-
-
-def test_distributed_sink_matches_collected(spark, zones_df, tmp_path):
-    collected_path = tmp_path / "collected.geojson"
-    n1 = write_feature_collection(zones_df, str(collected_path))
-    n2 = write_feature_collection_distributed(zones_df, str(tmp_path / "dist"))
-    assert n1 == n2 == 137
-
-    got = read_feature_collection_distributed(str(tmp_path / "dist"))
-    want = json.loads(collected_path.read_text())
-    assert got["type"] == want["type"] == "FeatureCollection"
-
-    def keyed(fc):
-        return {f["properties"]["tzid"]: f["geometry"] for f in fc["features"]}
-
-    assert keyed(got) == keyed(want)
-    # every feature line is itself valid JSON with the exact schema
-    for f in got["features"]:
-        assert set(f) == {"type", "properties", "geometry"}
-        assert set(f["properties"]) == {"tzid"}
+from timezone_boundary_builder_spark.operators.outputs import write_feature_collection
 
 
 GOLDEN = "tests/goldens/fixture_world.feature_collection.geojson"
@@ -62,10 +18,8 @@ def _golden_bytes():
 
 
 def test_negative_zero_coordinate_sinks_agree(spark, tmp_path):
-    """-0.0 coordinates: JSON.stringify(-0) is "0"; both sinks must emit
-    the same byte ("0"), not the distributed sink's raw "-0"."""
-    import os
-
+    """-0.0 coordinates: JSON.stringify(-0) is "0"; the sink must emit
+    "0", not Python's "-0"."""
     import pandas as pd
 
     gj = json.dumps(
@@ -79,15 +33,6 @@ def test_negative_zero_coordinate_sinks_agree(spark, tmp_path):
     write_feature_collection(zones, str(out))
     collected = out.read_text()
     assert "-0" not in collected and "[0,0]" in collected
-    d = str(tmp_path / "dist")
-    write_feature_collection_distributed(zones, d)
-    got = read_feature_collection_distributed(d)
-    import glob
-
-    parts = sorted(glob.glob(os.path.join(d, "features", "part-*")))
-    raw = "".join(open(p).read() for p in parts)
-    assert "-0," not in raw and "-0]" not in raw
-    assert got["features"][0]["geometry"]["coordinates"][0][0] == [0, 0]
 
 
 def test_name_lists_byte_parity_with_reference(tmp_path):
@@ -120,11 +65,9 @@ def test_feature_collection_byte_parity_with_reference_writer(spark, tmp_path):
     """VERDICT r2 #7: byte-equality golden for the framed product output.
     The golden was generated by running the REFERENCE's own stream writer
     (util/featureWriterStream.js:3-25, loaded verbatim in node) with
-    JSON.stringify'd features over the fixture zone table; both sinks
+    JSON.stringify'd features over the fixture zone table; the sink
     must reproduce its bytes exactly — framing chars, feature schema,
     key order, and JS number formatting (integral coords without '.0')."""
-    import os
-
     import __spark_entry__ as entry
 
     golden = _golden_bytes()
@@ -134,17 +77,3 @@ def test_feature_collection_byte_parity_with_reference_writer(spark, tmp_path):
     n = write_feature_collection(zones, str(out))
     assert n == 8
     assert out.read_bytes() == golden
-
-    # distributed twin: header + comma-joined part lines + footer must
-    # assemble to the same bytes
-    import glob
-
-    d = str(tmp_path / "dist")
-    write_feature_collection_distributed(zones, d)
-    man = json.load(open(os.path.join(d, "collection-manifest.json")))
-    lines = []
-    for part in sorted(glob.glob(os.path.join(d, man["features_dir"], "part-*"))):
-        with open(part) as pf:
-            lines.extend(ln for ln in pf.read().splitlines() if ln)
-    assembled = man["header"] + man["separator"].join(lines) + man["footer"]
-    assert assembled.encode() == golden

@@ -18,8 +18,6 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-PRODUCTS = ("comprehensive", "1970", "now")
-
 # (product geojson, reference dist zip name, arcname inside) — the
 # reference's zipGeoJsonFiles list (index.js:1459-1477); `zip -j` keeps
 # the working file's basename, so the member is combined*.json
@@ -96,82 +94,6 @@ def write_feature_collection(
             )
         f.write("]}")
     return len(rows)
-
-
-def write_feature_collection_distributed(zones: DataFrame, dir_path: str) -> int:
-    """Scale-path twin of write_feature_collection: the features land as
-    executor-written JSON-lines part files (one GeoJSON Feature per line,
-    tzid-sorted within each range partition) plus a tiny driver-written
-    manifest with the header/footer framing. Nothing data-sized ever
-    reaches the driver, so this is the sink to swap in if the zone table
-    ever becomes data-scale (the collected writer matches the reference's
-    own all-in-memory contract at 419 zones, index.js:1011-1016).
-
-    A reader reconstructs the exact FeatureCollection by concatenating
-    header + comma-joined part lines (in part-file order) + footer; the
-    feature SET is identical to the collected writer's (tested)."""
-    # the geometry column is already GeoJSON text, so the feature line is
-    # string concat (JVM-side, codegen) — re-parsing every ring array
-    # through from_json/to_json would buy nothing; only the tzid needs
-    # JSON escaping, delegated to to_json on a one-field struct
-    # size partitions from a tzid-only count (column-pruned scan) so the
-    # feature-line projection runs exactly once, inside the write
-    n = zones.select("tzid").count()
-    rows = zones.select(
-        F.concat(
-            F.lit('{"type":"Feature","properties":'),
-            F.to_json(F.struct(F.col("tzid").alias("tzid"))),
-            F.lit(',"geometry":'),
-            # JS-number parity (see _js_number), JVM-side: strip the
-            # '.0' integral-float marker before , or ] — Python's
-            # shortest-repr never emits other trailing zeros, so the
-            # rewrite touches exactly the integral coordinates; the
-            # second pass folds the resulting '-0' to '0', matching
-            # JSON.stringify(-0) and the collected sink's int(-0.0)
-            F.regexp_replace(
-                F.regexp_replace(F.col("geometry"), r"\.0(?=[,\]])", ""),
-                r"(?<=[\[,])-0(?=[,\]])",
-                "0",
-            ),
-            F.lit("}"),
-        ).alias("value"),
-        F.col("tzid"),
-    )
-    (
-        rows.repartitionByRange(n // 10000 + 1, "tzid")
-        .sortWithinPartitions("tzid")
-        .select("value")
-        .write.mode("overwrite")
-        .text(os.path.join(dir_path, "features"))
-    )
-    with open(os.path.join(dir_path, "collection-manifest.json"), "w") as f:
-        json.dump(
-            {
-                "header": '{"type":"FeatureCollection","features":[',
-                "separator": ",",
-                "footer": "]}",
-                "features_dir": "features",
-                "n_features": n,
-            },
-            f,
-        )
-    return n
-
-
-def read_feature_collection_distributed(dir_path: str) -> dict:
-    """Driver-side assembler for the distributed sink (small worlds /
-    tests; at scale consumers stream the part files directly)."""
-    import glob
-
-    with open(os.path.join(dir_path, "collection-manifest.json")) as f:
-        man = json.load(f)
-    lines = []
-    for part in sorted(
-        glob.glob(os.path.join(dir_path, man["features_dir"], "part-*"))
-    ):
-        with open(part) as pf:
-            lines.extend(ln for ln in pf.read().splitlines() if ln)
-    return json.loads(man["header"] + man["separator"].join(lines) + man["footer"])
 
 
 def _with_oceans_relation(

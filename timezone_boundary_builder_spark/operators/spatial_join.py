@@ -33,10 +33,6 @@ from pyspark.sql import DataFrame
 from ..geom.kernels import min_distance_edges_m, pair_edge_d2, points_in_edges
 
 KNN_MAX_METERS = 1852.0  # 1 nautical mile
-# candidate prefilter for kNN: inflate zone bboxes by ~2x the max distance
-# in degrees at the equator (1852 m ~ 0.0167 deg); generous to stay correct
-# at high latitude
-KNN_BBOX_PAD_DEG = 0.1
 
 # method codes (the UDF returns them; names materialize JVM-side)
 M_CELL, M_PIP, M_KNN, M_OCEAN, M_NONE = 0, 1, 2, 3, 4

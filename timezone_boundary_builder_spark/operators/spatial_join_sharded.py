@@ -614,7 +614,8 @@ def assign_tzid_sharded(
                     "code": np.arange(n_zones + len(band_tzids), dtype=np.int32),
                     "tzid": list(cm.tzids) + band_tzids,
                 }
-            )
+            ),
+            "code int, tzid string",
         )
     )
     methods = F.broadcast(

@@ -333,9 +333,6 @@ def write_tiles_partitioned(tiles: DataFrame, path: str, prefix_res: int = 3) ->
     )
 
 
-PAGE_COUNT_SCHEMA = "cell_id long, res int, tzid string, n_pages long"
-
-
 def page_tile_counts(points: DataFrame, res: int) -> DataFrame:
     """Page-density rollup: assigned points (lon, lat, tzid) ->
     (cell_id, res, tzid, n_pages) at a fixed cell resolution. The cell
