@@ -31,10 +31,21 @@ rewriting any page bytes (reference FileLookupCache contract,
 util/cache.js:74-128). A run into another --out-dir recomputes, leaving
 the earlier publish where it is.
 
+Incremental (--incremental): the same pipeline over the append delta
+since the cursor in <work>/incremental.json (pages.added_paths_since:
+the chain-walked manifest entries, compaction rewrites skipped). The
+stage is `increment`, keyed by the full run's fingerprint plus the
+cursor snapshot; its rows (same schema as assigned_pages) are published
+at <out>/increments/snap-<sid> and its lineage at
+<out>/increments_lineage/snap-<sid>. The cursor advances only after the
+publish, so a re-run after a lost cursor advance is a manifest hit on
+the published increment. An empty delta advances the cursor and writes
+nothing.
+
 Invariant (north_star): byte-identical `text` per url through every stage —
 proven here by comparing an order-insensitive bit_xor(xxhash64) aggregate of
-(url, text) between an independent scan of the input snapshot and the
-written output rows, before anything is promoted.
+(url, text) between an independent scan of the input (snapshot or delta)
+and the written output rows, before anything is promoted.
 """
 
 from __future__ import annotations
@@ -106,6 +117,15 @@ def main(argv=None) -> int:
         "is not part of the stage fingerprint",
     )
     args = p.parse_args(argv)
+    if args.broadcast_budget_mb is not None and args.stage2 != "auto":
+        # an explicit mode ignores the budget; silently accepting the
+        # flag would misreport how the physical plan was chosen
+        p.error("--broadcast-budget-mb only applies with --stage2 auto")
+    if args.incremental and (args.ts_day_min is not None or args.ts_day_max is not None):
+        # the cursor advances past the whole delta: a range filter would
+        # move it past rows the run never assigned
+        p.error("--ts-day-min/--ts-day-max are not supported with "
+                "--incremental (deltas are whole manifest entries)")
 
     from pyspark.sql import functions as F
 
@@ -127,26 +147,39 @@ def main(argv=None) -> int:
 
     t0 = time.time()
     sid = args.snapshot or pages_table.current_snapshot_id(args.pages_root)
+    report = {"snapshot": sid, "incremental": args.incremental, "delta_files": None}
 
-    if args.broadcast_budget_mb is not None and args.stage2 != "auto":
-        # an explicit mode ignores the budget; silently accepting the
-        # flag would misreport how the physical plan was chosen
-        p.error("--broadcast-budget-mb only applies with --stage2 auto")
-
+    # --incremental chooses only the input (the append delta since the
+    # cursor) and where it is published; the pipeline is the full run's
+    stage, entries, delta_from = "assign", None, ()
+    pages_dest = os.path.join(args.out_dir, "assigned_pages")
+    lineage_dest = os.path.join(args.out_dir, "lineage")
     if args.incremental:
-        if args.stage2 == "sharded":
-            # the delta path reuses the packed broadcast kernel; a
-            # silently-ignored flag would misreport the physical plan.
-            # (auto is fine: deltas are fixture/config-sized worlds and
-            # resolve to the broadcast kernel the path implements)
-            p.error("--stage2 sharded is not supported with --incremental")
-        if args.ts_day_min is not None or args.ts_day_max is not None:
-            # the delta path scans whole manifest entries; silently
-            # ignoring a range filter would assign out-of-range days
-            # while the user believes the filter applied
-            p.error("--ts-day-min/--ts-day-max are not supported with "
-                    "--incremental (deltas are whole manifest entries)")
-        return _run_incremental(spark, args, sid, t0)
+        cursor_path = os.path.join(args.work_dir, "incremental.json")
+        state = {"last_snapshot": None, "increments": []}
+        if os.path.exists(cursor_path):
+            with open(cursor_path) as f:
+                state = json.load(f)
+        # chain-walked append delta (NOT a raw path diff): rewrite snapshots
+        # from compact_data_files carry no new logical rows and are skipped;
+        # an expired cursor fails loudly instead of reprocessing the world
+        try:
+            entries = pages_table.added_paths_since(
+                args.pages_root, sid, state["last_snapshot"]
+            )
+        except (ValueError, FileNotFoundError) as e:
+            raise SystemExit(
+                f"incremental cursor {state['last_snapshot']} is no longer on "
+                f"the snapshot chain (expired by expire_snapshots?). Delete "
+                f"{cursor_path} to re-baseline. ({e})"
+            )
+        report["delta_files"] = len(entries)
+        if not entries:
+            _advance_cursor(cursor_path, state, sid)
+            return _finish(spark, {**report, "rows": 0, "methods": {}}, t0)
+        stage, delta_from = "increment", (str(state["last_snapshot"]),)
+        pages_dest = os.path.join(args.out_dir, "increments", f"snap-{sid}")
+        lineage_dest = os.path.join(args.out_dir, "increments_lineage", f"snap-{sid}")
 
     cm, cover_res, zones_pdf = _load_cellmap(spark, args)
     if args.stage2 == "auto":
@@ -192,6 +225,8 @@ def main(argv=None) -> int:
         # is fingerprinted, not the flag — auto resolving to broadcast
         # is the same stage as an explicit --stage2 broadcast
         stage2,
+        # an increment is also keyed by the cursor it starts from
+        *delta_from,
     )
 
     manifest = StageManifest(args.work_dir)
@@ -207,6 +242,7 @@ def main(argv=None) -> int:
         snapshot_id=sid,
         ts_day_min=args.ts_day_min,
         ts_day_max=args.ts_day_max,
+        entries=entries,
     )
 
     def compute():
@@ -272,20 +308,21 @@ def main(argv=None) -> int:
     # another run published to a different --out-dir is not this run's:
     # run_stage recomputes it rather than moving it out of that publish
     assigned, cached = manifest.run_stage(
-        spark,
-        "assign",
-        stage_fp,
-        compute,
-        publish_to=os.path.join(args.out_dir, "assigned_pages"),
+        spark, stage, stage_fp, compute, publish_to=pages_dest
     )
     # byte-identical text invariant: an order-insensitive hash aggregate
-    # of (url, text) over an independent read of the snapshot, compared
+    # of (url, text) over an independent read of the input, compared
     # with the same aggregate over the written rows
     h_in = scan.agg(
         F.bit_xor(F.xxhash64("url", "text")).alias("h"),
         F.count(F.lit(1)).alias("n"),
     ).collect()[0]
-    summary = publish(manifest, assigned, h_in, args.out_dir, sid)
+    summary = publish(manifest, stage, assigned, h_in, pages_dest, lineage_dest, sid)
+    if args.incremental:
+        # the cursor moves only past a published increment
+        _advance_cursor(
+            cursor_path, state, sid, {"snapshot": sid, "rows": summary.rows, "path": pages_dest}
+        )
 
     # output is published and every consumer above has executed — drop
     # the sharded operator's caches (stage-1 persist, edges, residue)
@@ -294,39 +331,52 @@ def main(argv=None) -> int:
     if sharded_handle.get("df") is not None:
         sharded_handle["df"].sharded_release()
 
-    print(
-        json.dumps(
-            {
-                "snapshot": sid,
-                "cached": cached,
-                "cover_res": cover_res,
-                # resolved physical plan (+ the measured full-map bytes
-                # that drove an auto choice) — the run report must say
-                # which plan actually served, not which flag was passed
-                "stage2": stage2,
-                # resolved staging mode (round-6 ADVICE): null unless the
-                # sharded plan served, so the report never implies a
-                # durable stage-1 write that did not happen
-                "sharded_stage1": args.sharded_stage1 if stage2 == "sharded" else None,
-                "map_bytes": map_bytes,
-                "rows": summary.rows,
-                "methods": summary.counts,
-                # publish() raises before promoting anything otherwise
-                "text_invariant_ok": True,
-                "lineage_partitions": len(summary.lineage),
-                "wall_sec": round(time.time() - t0, 2),
-            }
-        )
+    report.update(
+        cached=cached,
+        cover_res=cover_res,
+        # resolved physical plan (+ the measured full-map bytes that
+        # drove an auto choice) — the run report must say which plan
+        # actually served, not which flag was passed
+        stage2=stage2,
+        # resolved staging mode (round-6 ADVICE): null unless the sharded
+        # plan served, so the report never implies a durable stage-1
+        # write that did not happen
+        sharded_stage1=args.sharded_stage1 if stage2 == "sharded" else None,
+        map_bytes=map_bytes,
+        rows=summary.rows,
+        methods=summary.counts,
+        # publish() raises before promoting anything otherwise
+        text_invariant_ok=True,
+        lineage_partitions=len(summary.lineage),
     )
+    return _finish(spark, report, t0)
+
+
+def _finish(spark, report: dict, t0: float) -> int:
+    """Print the run's one JSON report line and stop the session."""
+    print(json.dumps({**report, "wall_sec": round(time.time() - t0, 2)}))
     spark.stop()
     return 0
 
 
-def publish(manifest, written, h_in, out_dir: str, snapshot: str):
-    """Verify the written assign stage against the input hash `h_in`
-    (a Row/dict with the snapshot's `h` and `n`) and publish it as
-    out_dir/assigned_pages (+ out_dir/lineage). One pass over the written
-    files yields the rows, the (url, text) hash, the method mix and the
+def _advance_cursor(path: str, state: dict, sid: str, increment: dict | None = None) -> None:
+    """Atomically move the incremental cursor to `sid`, recording the
+    increment published for it, if any."""
+    if increment is not None:
+        state["increments"].append(increment)
+    state["last_snapshot"] = sid
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        json.dump(state, f)
+    os.rename(tmp, path)
+
+
+def publish(manifest, stage: str, written, h_in, dest: str, lineage_dest: str, snapshot: str):
+    """Verify the written `stage` against the input hash `h_in` (a
+    Row/dict with the input's `h` and `n`) and publish it at `dest`, its
+    lineage at `lineage_dest`. One pass over the written files yields
+    the rows, the (url, text) hash, the method mix and the
     per-partition lineage rows (plans.lineage.summarize). On a mismatch
     nothing is published: the staged output and its manifest record are
     dropped, so the next run recomputes instead of replaying the stage,
@@ -336,14 +386,12 @@ def publish(manifest, written, h_in, out_dir: str, snapshot: str):
     summary = summarize(written, "url", "method", hash_cols=("url", "text"))
     # bit_xor over no rows is null; the summary's is 0
     if (h_in["h"] or 0) != summary.h or h_in["n"] != summary.rows:
-        manifest.discard("assign")
+        manifest.discard(stage)
         raise AssertionError(
             f"text passthrough invariant violated: input ({h_in['h']}, "
             f"{h_in['n']} rows), written ({summary.h}, {summary.rows} rows)"
         )
-    final_path = os.path.join(out_dir, "assigned_pages")
-    lineage_final = os.path.join(out_dir, "lineage")
-    lineage_staging = f"{lineage_final}.__staging__"
+    lineage_staging = f"{lineage_dest}.__staging__"
     write_lineage(summary.lineage, lineage_staging)
     # The two promotes cannot be one atomic rename (rename(2) cannot swap
     # non-empty directories), so a crash between them CAN leave a new
@@ -354,12 +402,12 @@ def publish(manifest, written, h_in, out_dir: str, snapshot: str):
     # publish_ids, and the next run (a manifest hit) heals the tear by
     # re-verifying and re-publishing both without rewriting the pages.
     marker = {"publish_id": uuid.uuid4().hex, "snapshot": snapshot}
-    for d in (manifest.output_path("assign"), lineage_staging):
+    for d in (manifest.output_path(stage), lineage_staging):
         with open(os.path.join(d, "_publish.json"), "w") as f:
             json.dump(marker, f)
-    manifest.promote("assign", final_path)
-    shutil.rmtree(lineage_final, ignore_errors=True)
-    os.replace(lineage_staging, lineage_final)
+    manifest.promote(stage, dest)
+    shutil.rmtree(lineage_dest, ignore_errors=True)
+    os.replace(lineage_staging, lineage_dest)
     return summary
 
 
@@ -421,89 +469,6 @@ def _load_cellmap(spark, args):
     # when the artifact's bbox columns change.
     res = args.cover_res or auto_cover_res(zp)
     return cellmap_from_zones_pdf(zp, max_res=res), res, zp
-
-
-def _run_incremental(spark, args, sid, t0) -> int:
-    """Process only manifest entries added since the last processed
-    snapshot. The Iceberg-lite manifest is append-only (commit_append
-    extends the parent's list), so the delta is exactly the new data
-    files; each run appends one increment of assignments and advances the
-    cursor atomically. Re-running with no new snapshot is a no-op."""
-    from timezone_boundary_builder_spark.operators.geocode import with_coordinates
-    from timezone_boundary_builder_spark.operators.spatial_join import (
-        assign_tzid_udf_packed,
-        pack_coords_col,
-    )
-    from timezone_boundary_builder_spark.sources import pages as pages_table
-    from timezone_boundary_builder_spark.sources.pages import PAGES_SCHEMA
-
-    os.makedirs(args.work_dir, exist_ok=True)
-    cursor_path = os.path.join(args.work_dir, "incremental.json")
-    state = {"last_snapshot": None, "increments": []}
-    if os.path.exists(cursor_path):
-        with open(cursor_path) as f:
-            state = json.load(f)
-
-    # chain-walked append delta (NOT a raw path diff): rewrite snapshots
-    # from compact_data_files carry no new logical rows and are skipped;
-    # an expired cursor fails loudly instead of reprocessing the world
-    try:
-        delta = pages_table.added_paths_since(
-            args.pages_root, sid, state["last_snapshot"]
-        )
-    except (ValueError, FileNotFoundError) as e:
-        raise SystemExit(
-            f"incremental cursor {state['last_snapshot']} is no longer on "
-            f"the snapshot chain (expired by expire_snapshots?). Delete "
-            f"{cursor_path} to re-baseline. ({e})"
-        )
-
-    rows = 0
-    methods: dict[str, int] = {}
-    if delta:
-        from timezone_boundary_builder_spark.plans.lineage import summarize, write_lineage
-
-        cm, _, _ = _load_cellmap(spark, args)
-        bc = spark.sparkContext.broadcast(cm)
-        scan = spark.read.schema(PAGES_SCHEMA).parquet(*[e["path"] for e in delta])
-        pts = with_coordinates(scan).select("url", "warc_ts", pack_coords_col())
-        assigned = assign_tzid_udf_packed(pts, bc, _ocean_bands(args))
-        inc_path = os.path.join(args.out_dir, "increments", f"snap-{sid}")
-        assigned.write.mode("overwrite").parquet(inc_path)
-        # rows, method mix and per-partition lineage of the written
-        # increment from one pass — the incremental surface carries the
-        # same per-partition metrics contract as the full run, one
-        # lineage table per increment (kept OUTSIDE increments/ so
-        # consumers can glob increments/* homogeneously)
-        summary = summarize(spark.read.parquet(inc_path), "url", "method")
-        write_lineage(
-            summary.lineage,
-            os.path.join(args.out_dir, "increments_lineage", f"snap-{sid}"),
-        )
-        rows, methods = summary.rows, summary.counts
-        state["increments"].append(
-            {"snapshot": sid, "rows": rows, "path": inc_path}
-        )
-    state["last_snapshot"] = sid
-    tmp = cursor_path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(state, f)
-    os.rename(tmp, cursor_path)  # atomic cursor advance
-
-    print(
-        json.dumps(
-            {
-                "snapshot": sid,
-                "incremental": True,
-                "delta_files": len(delta),
-                "rows": rows,
-                "methods": methods,
-                "wall_sec": round(time.time() - t0, 2),
-            }
-        )
-    )
-    spark.stop()
-    return 0
 
 
 if __name__ == "__main__":

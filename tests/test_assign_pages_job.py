@@ -10,7 +10,7 @@ import sys
 
 import pytest
 
-from tests._jobrunner import run_job
+from tests._jobrunner import run_code, run_job
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -342,7 +342,15 @@ def test_assign_publish_refuses_a_text_hash_mismatch(spark, pages_root, tmp_path
     )
     assert cached is False and os.path.exists(os.path.join(work, "assign"))
     with pytest.raises(AssertionError, match="invariant"):
-        job.publish(manifest, staged, {"h": 12345, "n": r["rows"]}, out, r["snapshot"])
+        job.publish(
+            manifest,
+            "assign",
+            staged,
+            {"h": 12345, "n": r["rows"]},
+            os.path.join(out, "assigned_pages"),
+            os.path.join(out, "lineage"),
+            r["snapshot"],
+        )
 
     assert {d: _publish_id(out, d) for d in ("assigned_pages", "lineage")} == before
     assert _page_files(os.path.join(out, "assigned_pages")) == pages_before
@@ -408,3 +416,109 @@ def test_assign_job_out_dir_aliases_and_a_second_out_dir(pages_root, tmp_path):
     assert _page_files(pages) == files
     assert {d: _publish_id(out, d) for d in ("assigned_pages", "lineage")} == published
     assert _publish_id(out2, "assigned_pages") == _publish_id(out2, "lineage")
+
+
+def _commit_batch(spark, root, n, seed, domain):
+    from timezone_boundary_builder_spark.sources import pages as pt
+    from timezone_boundary_builder_spark.sources.fixtures import synthetic_pages
+
+    pdf = synthetic_pages(n=n, seed=seed).drop(columns=["kind"])
+    pdf["url"] = pdf["url"].str.replace("example.org", domain)
+    pt.commit_append(root, spark.createDataFrame(pdf))
+
+
+def test_incremental_is_the_full_run_over_the_delta(spark, tmp_path):
+    """An increment runs the full run's pipeline over the snapshot delta:
+    any --stage2 plan serves it (auto honours the budget), each increment
+    is text-verified and published with its lineage, and the union of
+    increments/* equals a full run's assigned_pages at the same snapshot,
+    every column, both ways. A re-run after a lost cursor advance is a
+    manifest hit on the published increment: no page file is rewritten
+    and the snapshot is listed once."""
+    root, work, out = str(tmp_path / "tbl"), str(tmp_path / "w"), str(tmp_path / "o")
+    cursor = os.path.join(work, "incremental.json")
+    plans = [
+        ((), "broadcast"),
+        (("--stage2", "sharded"), "sharded"),
+        (("--stage2", "auto", "--broadcast-budget-mb", "0.0001"), "sharded"),
+    ]
+    for k, (extra, stage2) in enumerate(plans):
+        _commit_batch(spark, root, 200, 31 + k, f"site{k}.net")
+        pre_run_cursor = open(cursor).read() if k else None
+        r = _run(root, work, out, extra=("--incremental", *extra))
+        assert r["incremental"] is True and r["delta_files"] >= 1
+        assert r["rows"] == 200 and r["text_invariant_ok"] is True
+        assert r["cached"] is False and r["stage2"] == stage2
+        inc = os.path.join("increments", f"snap-{r['snapshot']}")
+        assert _publish_id(out, inc) == _publish_id(
+            out, os.path.join("increments_lineage", f"snap-{r['snapshot']}")
+        )
+
+    # crash between the publish and the cursor advance: the re-run replays
+    files = _page_files(os.path.join(out, inc))
+    with open(cursor, "w") as f:
+        f.write(pre_run_cursor)
+    r2 = _run(root, work, out, extra=("--incremental", *plans[-1][0]))
+    assert r2["cached"] is True and r2["rows"] == 200
+    assert r2["methods"] == r["methods"]
+    assert _page_files(os.path.join(out, inc)) == files
+    paths = [i["path"] for i in json.load(open(cursor))["increments"]]
+    assert len(paths) == len(set(paths)) == len(os.listdir(os.path.join(out, "increments"))) == 3
+
+    full_out = str(tmp_path / "full")
+    rf = _run(root, str(tmp_path / "wf"), full_out)
+    assert rf["snapshot"] == r["snapshot"] and rf["rows"] == 600
+    incs = spark.read.parquet(os.path.join(out, "increments", "*"))
+    full = spark.read.parquet(os.path.join(full_out, "assigned_pages"))
+    assert incs.schema == full.schema
+    assert incs.count() == 600
+    assert incs.exceptAll(full).count() == 0 and full.exceptAll(incs).count() == 0
+
+
+# runs jobs/assign_pages.py (argv[1]) with argv[2:] while the written
+# stage's (url, text) hash reads one bit off
+_SKEWED_HASH_RUN = """
+import dataclasses, importlib.util, sys
+from timezone_boundary_builder_spark.plans import lineage
+
+real = lineage.summarize
+
+def skewed(*a, **k):
+    s = real(*a, **k)
+    return dataclasses.replace(s, h=s.h ^ 1)
+
+spec = importlib.util.spec_from_file_location("assign_pages_skewed", sys.argv[1])
+job = importlib.util.module_from_spec(spec)
+spec.loader.exec_module(job)
+lineage.summarize = skewed
+try:
+    job.main(sys.argv[2:])
+finally:
+    lineage.summarize = real
+"""
+
+
+def test_incremental_refuses_a_text_hash_mismatch(spark, tmp_path):
+    """An increment whose written (url, text) hash differs from the
+    delta's publishes nothing, leaves the cursor where it was and drops
+    the `increment` stage, so the next run recomputes it."""
+    root, work, out = str(tmp_path / "tbl"), str(tmp_path / "w"), str(tmp_path / "o")
+    argv = ["--pages-root", root, "--work-dir", work, "--out-dir", out,
+            "--cores", "8", "--incremental"]
+    cursor = os.path.join(work, "incremental.json")
+    _commit_batch(spark, root, 120, 41, "one.net")
+    r1 = _run(root, work, out, extra=("--incremental",))
+    before = open(cursor).read()
+
+    _commit_batch(spark, root, 80, 42, "two.net")
+    proc = run_code(_SKEWED_HASH_RUN, [os.path.join(REPO, "jobs", "assign_pages.py"), *argv])
+    assert proc.returncode == 1 and "invariant" in proc.stderr, proc.stderr[-3000:]
+    assert open(cursor).read() == before
+    assert os.listdir(os.path.join(out, "increments")) == [f"snap-{r1['snapshot']}"]
+    assert os.listdir(os.path.join(out, "increments_lineage")) == [f"snap-{r1['snapshot']}"]
+    assert not os.path.exists(os.path.join(work, "increment"))
+    assert "increment" not in json.load(open(os.path.join(work, "_manifest.json")))
+
+    r2 = _run(root, work, out, extra=("--incremental",))
+    assert r2["cached"] is False and r2["rows"] == 80
+    assert json.load(open(cursor))["last_snapshot"] == r2["snapshot"]

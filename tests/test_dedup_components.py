@@ -134,38 +134,6 @@ def test_lsh_and_embed_frames_unpersisted(spark):
     assert n_blocks() <= before_blocks, (before_blocks, n_blocks())
 
 
-def test_repetition_gate_identity_and_monotone(spark):
-    """Gate properties: thresholds at 1.0 pass every doc (the fractions
-    are bounded by 1), and tightening any threshold can only shrink the
-    kept set (monotone filter — a pipeline can tune thresholds without
-    ever resurrecting dropped docs)."""
-    import pandas as pd
-
-    from timezone_boundary_builder_spark.operators.text import repetition_gate
-
-    docs = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "doc_id": range(30),
-                "text": [
-                    ("spam " * (i % 9 + 1) + f"unique words {i} appear here")
-                    for i in range(30)
-                ],
-            }
-        )
-    )
-    all_ids = {r.doc_id for r in docs.collect()}
-    open_gate = repetition_gate(docs, 1.0, 1.0, 1.0)
-    assert {r.doc_id for r in open_gate.collect()} == all_ids
-
-    prev = all_ids
-    for tw in (0.6, 0.4, 0.2):
-        kept = {r.doc_id for r in repetition_gate(docs, tw, 1.0, 1.0).collect()}
-        assert kept <= prev
-        prev = kept
-    assert prev < all_ids  # the tightest gate really dropped spammy docs
-
-
 def test_materialize_uses_reliable_checkpoint_when_dir_set(spark, tmp_path):
     """With a checkpoint dir configured, the materialized LSH candidate
     frame must use a RELIABLE checkpoint (survives executor loss on a

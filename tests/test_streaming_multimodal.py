@@ -7,8 +7,9 @@ from pyspark.sql import functions as F
 
 import __spark_entry__ as entry
 from timezone_boundary_builder_spark.operators.multimodal import (
+    decoded_pixel_stats,
     extract_html_meta,
-    image_features,
+    resize_images,
 )
 from timezone_boundary_builder_spark.sources.fixtures import (
     OCEAN_BANDS,
@@ -116,19 +117,6 @@ def test_html_meta_real_operator(spark):
         assert m.n_bytes == len(r.html)
         assert m.sha256 == hashlib.sha256(r.html).hexdigest()
         assert m.content_kind == "text/html"
-
-
-def test_image_features_stub_plumbing(spark):
-    pages_pdf = synthetic_pages(n=20, seed=6).drop(columns=["kind"])
-    df = spark.createDataFrame(pages_pdf)
-    feats = image_features(df).toPandas()
-    assert len(feats) == 20
-    assert all(len(f) == 8 for f in feats.feat)
-    # deterministic: same input -> same features
-    feats2 = image_features(df).toPandas().sort_values("url").reset_index(drop=True)
-    feats1 = feats.sort_values("url").reset_index(drop=True)
-    assert (feats1.width == feats2.width).all()
-    assert all(np.allclose(a, b) for a, b in zip(feats1.feat, feats2.feat))
 
 
 def _png_pages_df(spark, n=6, seed=9):
@@ -253,17 +241,16 @@ def test_png_palette_and_subbyte_gray():
 
 
 def test_image_real_codec_decodes_png(spark):
-    """VERDICT r2 #5 closed: the real-codec path decodes actual PNG
-    payloads end-to-end through Spark — dimensions and per-channel mean
-    features match the source arrays exactly."""
+    """VERDICT r2 #5 closed: the real codec decodes actual PNG payloads
+    end-to-end through Spark — dimensions and pixel sums match the source
+    arrays exactly."""
     df, arrays = _png_pages_df(spark)
-    feats = image_features(df, use_real_codec=True, dim=3).toPandas()
-    assert len(feats) == len(arrays)
-    for r in feats.itertuples():
+    stats = decoded_pixel_stats(df, data_col="html").toPandas()
+    assert len(stats) == len(arrays)
+    for r in stats.itertuples():
         arr = arrays[r.url]
-        assert (r.width, r.height) == (arr.shape[1], arr.shape[0])
-        want = arr.astype(np.float32).mean(axis=(0, 1))
-        assert np.allclose(r.feat, want, atol=1e-4), r.url
+        assert (r.out_w, r.out_h) == (arr.shape[1], arr.shape[0])
+        assert r.pix_sum == int(arr.astype(np.int64).sum()), r.url
 
 
 def test_resize_real_codec_roundtrip(spark):
@@ -368,7 +355,7 @@ def test_image_real_codec_rejects_non_image(spark):
     pages_pdf = synthetic_pages(n=4, seed=6).drop(columns=["kind"])
     df = spark.createDataFrame(pages_pdf)
     with pytest.raises(Exception) as ei:
-        image_features(df, use_real_codec=True).collect()
+        resize_images(df, use_real_codec=True).collect()
     assert "codec" in str(ei.value) or "image" in str(ei.value).lower()
 
 
@@ -819,10 +806,7 @@ def test_stream_dedup_state_ttl_eviction(spark, tmp_path):
 def test_stream_sessions_matches_batch(spark, tmp_path):
     """Native session_window (merging stateful windows) on a stream must
     reproduce the identical operator tree on a static read."""
-    from timezone_boundary_builder_spark.streaming.assign_stream import (
-        batch_sessions,
-        stream_sessions,
-    )
+    from timezone_boundary_builder_spark.streaming.assign_stream import stream_sessions
 
     src = str(tmp_path / "evs")
     spark.read.parquet("/root/testdata/sf0.001/events.parquet").write.parquet(src)
@@ -836,60 +820,16 @@ def test_stream_sessions_matches_batch(spark, tmp_path):
     )
     q.awaitTermination(300)
     got = spark.sql("select * from sessions_s").toPandas()
-    exp = batch_sessions(spark, src).toPandas()
+    # the batch reference: the same session_window groupBy on a static read
+    exp = (
+        spark.read.parquet(src)
+        .groupBy(F.session_window("ts", "30 minutes"), F.col("user_id"))
+        .agg(F.count(F.lit(1)).alias("n_events"))
+        .select("user_id", F.col("session_window.start").alias("sess_start"), "n_events")
+        .toPandas()
+    )
     key = ["user_id", "sess_start"]
     got = got.sort_values(key).reset_index(drop=True)
     exp = exp.sort_values(key).reset_index(drop=True)
     assert len(got) > 0
     pd.testing.assert_frame_equal(got, exp, check_dtype=False)
-
-
-def test_stream_tile_counts_equals_batch(spark, tmp_path):
-    """The streaming tile rollup over two parquet increments equals the
-    batch page_tile_counts of their union (availableNow + complete
-    memory sink)."""
-    import numpy as np
-    import pandas as pd
-
-    from timezone_boundary_builder_spark.operators.tiles import page_tile_counts
-    from timezone_boundary_builder_spark.streaming.assign_stream import (
-        stream_tile_counts,
-    )
-
-    rng = np.random.default_rng(29)
-    n = 4000
-    pdf = pd.DataFrame(
-        {
-            "url": [f"u{i}" for i in range(n)],
-            "lon": rng.uniform(-180, 180, n),
-            "lat": rng.uniform(-85, 85, n),
-            "tzid": rng.choice(["A/A", "B/B", "C/C"], n),
-        }
-    )
-    src = str(tmp_path / "pts")
-    for lo, hi in ((0, 2500), (2500, n)):
-        spark.createDataFrame(pdf.iloc[lo:hi]).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-
-    q = (
-        stream_tile_counts(spark, src, res=5)
-        .writeStream.format("memory")
-        .queryName("tile_counts_stream")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = (
-        spark.table("tile_counts_stream")
-        .orderBy("cell_id", "tzid")
-        .toPandas()
-    )
-    want = (
-        page_tile_counts(spark.createDataFrame(pdf), res=5)
-        .orderBy("cell_id", "tzid")
-        .toPandas()
-    )
-    assert got.equals(want)
-    assert got.n_pages.sum() == n

@@ -152,46 +152,3 @@ def test_incremental_tile_counts_equal_full_recompute(spark):
     b = merged.orderBy(key).toPandas()
     assert a.equals(b)
     assert a.n_pages.sum() == n
-
-
-def test_write_tiles_partitioned_prefix_respects_row_res(spark, tmp_path):
-    """Mixed-resolution tile tables (compacted covers) must partition each
-    cell under its OWN ancestor prefix at prefix_res — a uniform shift
-    keyed to max(res) sends every coarse interior cell to prefix 0."""
-    import pandas as pd
-
-    from timezone_boundary_builder_spark.geom.cellindex import cell_parent
-    from timezone_boundary_builder_spark.operators.tiles import (
-        write_tiles_partitioned,
-    )
-
-    prefix_res = 3
-    rng = np.random.default_rng(7)
-    rows = []
-    for res in (2, 3, 5, 7):
-        lon = rng.uniform(-170, 170, 8)
-        lat = rng.uniform(-80, 80, 8)
-        for c in encode_points(lon, lat, res):
-            rows.append((int(np.int64(np.uint64(c))), res, "Test/Alpha", "full"))
-    pdf = pd.DataFrame(rows, columns=["cell_id", "res", "tzid", "coverage"])
-    path = str(tmp_path / "tiles")
-    write_tiles_partitioned(
-        spark.createDataFrame(pdf), path, prefix_res=prefix_res
-    )
-    back = spark.read.parquet(path).toPandas()
-    assert len(back) == len(pdf)
-    mask = (1 << 58) - 1
-    for r in back.itertuples():
-        cell = np.uint64(np.int64(r.cell_id))
-        if r.res <= prefix_res:
-            expect = int(cell) & mask
-        else:
-            expect = int(cell_parent(cell, r.res - prefix_res)) & mask
-        assert int(r.cell_prefix) == expect, (r.res, hex(int(cell)))
-    # locality: fine cells sharing an ancestor land in the same partition
-    fine = back[back.res == 7]
-    anc = {
-        int(cell_parent(np.uint64(np.int64(c)), 7 - prefix_res)) & mask
-        for c in fine.cell_id
-    }
-    assert set(fine.cell_prefix.astype(int)) == anc

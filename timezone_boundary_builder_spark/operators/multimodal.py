@@ -23,8 +23,6 @@ HTML_META_SCHEMA = (
     "url string, n_bytes long, sha256 string, content_kind string, title string"
 )
 
-IMAGE_FEAT_SCHEMA = "url string, width int, height int, feat array<float>"
-
 _TITLE_RE = re.compile(rb"<title>(.*?)</title>", re.IGNORECASE | re.DOTALL)
 
 # Resolve the optional PIL dependency ONCE per process (round 7, guide
@@ -165,7 +163,7 @@ def resize_images(
                     out_h = max(1, int(h * scale))
                     payload = encode_png(resize_nearest(arr, out_w, out_h))
                 else:
-                    w, h, _ = _fake_image_features(b)
+                    w, h = _fake_image_features(b)
                     scale = min(target_w / w, target_h / h)
                     out_w = max(1, int(w * scale))
                     out_h = max(1, int(h * scale))
@@ -244,39 +242,9 @@ def _decode_image_real(data: bytes):
     )
 
 
-def _fake_image_features(data: bytes, dim: int = 8) -> tuple[int, int, np.ndarray]:
-    """Deterministic fake used when no codec is installed: dimensions and
-    features derived from the byte content hash, so tests exercise the
-    full Spark path (schema, Arrow round-trip, batching) with stable
-    values."""
+def _fake_image_features(data: bytes) -> tuple[int, int]:
+    """Deterministic fake dimensions used when no codec is installed,
+    derived from the byte content hash, so tests exercise the full Spark
+    path (schema, Arrow round-trip, batching) with stable values."""
     h = hashlib.sha256(data).digest()
-    w = 64 + h[0]
-    ht = 64 + h[1]
-    feat = np.frombuffer(h[: dim * 4], dtype=np.uint32).astype(np.float32)
-    feat = (feat % 1000) / 1000.0
-    return w, ht, feat
-
-
-def image_features(
-    pages: DataFrame, use_real_codec: bool = False, dim: int = 8
-) -> DataFrame:
-    """Binary -> (width, height, feature vector). With use_real_codec the
-    pixels are really decoded (PIL if present, else the pure-Python PNG
-    codec) and the features are per-channel means; the default
-    deterministic-fake path keeps the distributed plumbing exercised on
-    non-image bytes."""
-
-    def _feat(batches):
-        for pdf in batches:
-            rows = []
-            for url, b in zip(pdf["url"], pdf["html"]):
-                b = bytes(b) if b is not None else b""
-                if use_real_codec:
-                    (w, h), arr = _decode_image_real(b)
-                    feat = np.atleast_3d(arr).astype(np.float32).mean(axis=(0, 1))[:dim]
-                else:
-                    w, h, feat = _fake_image_features(b, dim)
-                rows.append((url, int(w), int(h), [float(x) for x in feat]))
-            yield pd.DataFrame(rows, columns=["url", "width", "height", "feat"])
-
-    return pages.select("url", "html").mapInPandas(_feat, IMAGE_FEAT_SCHEMA)
+    return 64 + h[0], 64 + h[1]

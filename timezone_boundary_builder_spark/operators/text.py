@@ -109,33 +109,6 @@ def with_fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def repetition_gate(
-    df: DataFrame,
-    max_top_word_frac: float = 0.2,
-    max_dup_word_frac: float = 0.65,
-    max_top_bigram_frac: float = 0.08,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Gopher-style repetition FILTER: keep only documents whose
-    repetition signals (repetition_signals below) sit under all three
-    thresholds. Round 7: the signals come from one map-side Arrow stats
-    kernel (gopher_stats_udf), so the gate is a plain FILTER on the
-    input — no signal relation, no join, no shuffle (the previous
-    inner-join shape re-evaluated the whole upstream plan once per join
-    side). A null-text doc has null stats, so the <= predicates are null
-    and the row is dropped — identical to the old inner join against a
-    signal table that never contained that doc."""
-    arr = df.withColumn("__st", gopher_stats_udf()(F.col(text_col)))
-    fr = repetition_fracs(F.col("__st"))
-    keep = (
-        (fr["top_word_frac"] <= max_top_word_frac)
-        & (fr["dup_word_frac"] <= max_dup_word_frac)
-        & (fr["top_bigram_frac"] <= max_top_bigram_frac)
-    )
-    return arr.where(keep).drop("__st")
-
-
 # Token/repetition statistics kernel (round 7, guide §4.2): the six
 # integer counts the quality + Gopher gates need, computed per Arrow
 # batch in Python with collections.Counter instead of JVM-interpreted

@@ -306,33 +306,6 @@ def raster_tile_summary(tiles: DataFrame, salt_buckets: int = 0) -> DataFrame:
     )
 
 
-def write_tiles_partitioned(tiles: DataFrame, path: str, prefix_res: int = 3) -> None:
-    """Range-partition by cell prefix (Morton locality) and write parquet
-    partitioned by the prefix — tile servers prune by key range.
-
-    The prefix is each cell's ancestor Morton code at ``prefix_res``,
-    computed from the row's OWN ``res`` (cell ids store their resolution
-    in the header bits and their Morton code at that resolution in the low
-    bits — a uniform shift keyed to max(res) would over-shift compacted
-    coarse interior cells to prefix 0, destroying locality for exactly the
-    cells tile servers prune hardest). Cells at or below ``prefix_res``
-    are their own prefix."""
-    mask = (1 << 58) - 1
-    with_prefix = tiles.withColumn(
-        "cell_prefix",
-        F.expr(
-            f"shiftright(cell_id & {mask}, "
-            f"greatest(0, 2 * (res - {int(prefix_res)})))"
-        ),
-    )
-    (
-        with_prefix.repartitionByRange(F.col("cell_prefix"), F.col("cell_id"))
-        .write.mode("overwrite")
-        .partitionBy("cell_prefix")
-        .parquet(path)
-    )
-
-
 def page_tile_counts(points: DataFrame, res: int) -> DataFrame:
     """Page-density rollup: assigned points (lon, lat, tzid) ->
     (cell_id, res, tzid, n_pages) at a fixed cell resolution. The cell

@@ -151,14 +151,16 @@ def scan(
     snapshot_id: str | None = None,
     ts_day_min: str | None = None,
     ts_day_max: str | None = None,
+    entries: list[dict] | None = None,
 ) -> DataFrame:
     """Snapshot-pinned scan with manifest-level partition pruning: only
     partition directories whose ts_day intersects the requested range
     are handed to the Spark reader — pruning before the scan, like
     Iceberg's manifest filtering. Parquet row-group pruning still
-    applies on top for pushed filters."""
-    snap = read_snapshot(root, snapshot_id)
-    entries = snap["manifest"]
+    applies on top for pushed filters. `entries` (e.g. the delta from
+    added_paths_since) replaces the snapshot's manifest."""
+    if entries is None:
+        entries = read_snapshot(root, snapshot_id)["manifest"]
     if ts_day_min is not None or ts_day_max is not None:
         # NULL warc_ts fails every range predicate (SQL/Iceberg filter
         # semantics) — the sentinel sorts above real dates, so without

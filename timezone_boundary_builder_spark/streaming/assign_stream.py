@@ -116,23 +116,6 @@ def stream_sessions(
     )
 
 
-def batch_sessions(
-    spark: SparkSession, source_dir: str, gap: str = "30 minutes"
-) -> DataFrame:
-    """The batch twin of stream_sessions (identical operator tree on a
-    static scan)."""
-    ev = spark.read.parquet(source_dir)
-    return (
-        ev.groupBy(F.session_window("ts", gap), F.col("user_id"))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            "user_id",
-            F.col("session_window.start").alias("sess_start"),
-            "n_events",
-        )
-    )
-
-
 def stream_dedup_first_seen(
     spark: SparkSession,
     source_dir: str,
@@ -226,26 +209,3 @@ def stream_dedup_first_seen(
         .trigger(availableNow=True)
         .start()
     )
-
-
-def stream_tile_counts(
-    spark: SparkSession,
-    source_dir: str,
-    res: int = 5,
-) -> DataFrame:
-    """Streaming twin of tiles.page_tile_counts: assigned points arriving
-    as parquet increments (url, lon, lat, tzid) roll up to live
-    (cell_id, res, tzid, n_pages) counts. The cell encode is the same
-    scalar pandas UDF as the batch path; the aggregation keeps one state
-    row per live (cell, tzid) — state is proportional to OCCUPIED cells,
-    not pages, which is what makes a continuously-maintained tile layer
-    viable at crawl scale. Counts are additive so no watermark is needed;
-    sinks consume complete/update mode (tests: memory sink +
-    availableNow, asserted row-equal to the batch rollup of the same
-    increments)."""
-    from ..operators.tiles import page_tile_counts
-
-    pts = spark.readStream.schema(
-        "url string, lon double, lat double, tzid string"
-    ).parquet(source_dir)
-    return page_tile_counts(pts, res)
