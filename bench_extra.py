@@ -7,6 +7,8 @@ Usage:
   python bench_extra.py noop  [sf_dir] [q1 q2 ...]   # noop-sink isolation
   python bench_extra.py plans [before|after] [q1 ..] # .explain(formatted) ->
                                                      # plans/r07/<q>_<tag>.txt
+  python bench_extra.py cover [reps]                 # driver-side cover build,
+                                                     # no Spark
 
 Prints one JSON line per mode; diagnostics to stderr.
 """
@@ -181,6 +183,48 @@ def frontier_leg(grid: int, edges: int, points: int) -> dict:
         spark.stop()
 
 
+def cover_leg(reps: int = 3) -> dict:
+    """Driver-side cover build, no Spark: best-of-`reps` seconds of
+    `cover_polygons` alone and of the whole `cellmap_from_zones_pdf` on
+    the benchmark's 512-zone ring world (perfbench `assign_dense`:
+    32 x 16 zones of 64 edges, seed 1) and on a 64 x 64 (4,096-zone)
+    world of the same shape, each at its `auto_cover_res`. Records the
+    host probe of perfbench/run.py next to the numbers."""
+    import time as _t
+
+    from perfbench.gen import ring_heavy_world as gen_world
+    from perfbench.run import host_facts
+    from timezone_boundary_builder_spark.geom.cellindex import cover_polygons
+    from timezone_boundary_builder_spark.geom.codec import from_geojson
+    from timezone_boundary_builder_spark.operators.cover import (
+        auto_cover_res,
+        cellmap_from_zones_pdf,
+    )
+
+    def best(fn) -> float:
+        times = []
+        for _ in range(reps):
+            t0 = _t.perf_counter()
+            fn()
+            times.append(_t.perf_counter() - t0)
+        return round(min(times), 3)
+
+    rec: dict[str, object] = {"cover_reps": reps, "host": host_facts()}
+    for gx, gy in ((32, 16), (64, 64)):
+        world = gen_world(gx, gy, 64, 1)["table"]
+        res = auto_cover_res(world)
+        geoms = [from_geojson(g) for g in world["geometry"]]
+        key = f"cover_{gx * gy}"
+        rec[f"{key}_res"] = res
+        rec[f"{key}_cells"] = int(len(cover_polygons(geoms, res)[1]))
+        rec[f"{key}_cover_sec"] = best(lambda: cover_polygons(geoms, res))
+        rec[f"{key}_cellmap_sec"] = best(lambda: cellmap_from_zones_pdf(world, res))
+        log(f"cover {gx}x{gy} at res {res}: {rec[f'{key}_cover_sec']} s cover, "
+            f"{rec[f'{key}_cellmap_sec']} s cellmap")
+    rec["host_after"] = host_facts()
+    return rec
+
+
 def sharded_scaling_leg(points: int = 8_000_000) -> dict:
     """local[1] vs local[4] scaling of the SHARDED stage-2 path at the
     419-zone reference world (round-6 verdict item 5: the >=0.8
@@ -250,6 +294,10 @@ def main() -> None:
         edges = int(rest[1]) if len(rest) > 1 else 64
         points = int(rest[2]) if len(rest) > 2 else 2_000_000
         print(json.dumps(frontier_leg(grid, edges, points), separators=(",", ":")))
+        return
+    if mode == "cover":
+        reps = int(rest[0]) if rest else 3
+        print(json.dumps(cover_leg(reps), separators=(",", ":")))
         return
     if mode == "sharded-scaling":
         points = int(rest[0]) if rest else 8_000_000

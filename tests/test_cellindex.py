@@ -4,12 +4,11 @@ covering invariants (SURVEY.md §5: cover-then-PIP == direct PIP)."""
 import numpy as np
 import pytest
 
+from _cover_ref import cell_children
 from timezone_boundary_builder_spark.geom.cellindex import (
     cell_bounds,
-    cell_children,
     cell_parent,
     cell_res,
-    compact_cells,
     cover_polygon,
     encode_points,
 )
@@ -95,13 +94,3 @@ def test_cover_full_cells_never_at_max_res_only():
     cells, full = cover_polygon(g, max_res=8)
     res = np.array([int(c) >> 58 for c in cells])
     assert (res[full] < 8).any()
-
-
-def test_compact_cells():
-    parent = encode_points(np.array([10.0]), np.array([10.0]), 4)[0]
-    kids = cell_children(int(parent))
-    out = compact_cells(kids)
-    assert len(out) == 1 and out[0] == parent
-    # partial sibling set stays
-    out2 = compact_cells(kids[:3])
-    assert len(out2) == 3

@@ -9,10 +9,13 @@ hierarchical cell grid over WGS84 lon-lat:
   resolution is derivable with bit ops only;
 - polygon covering (north_star: "batched H3/S2 covering ... compact cell
   covers") classifies cells as FULL (entirely inside) or BOUNDARY
-  (intersecting the outline), recursing only on boundary cells, which
-  yields a compacted cover directly;
-- the cover is served as a broadcast sorted-array map: lookup is
-  np.searchsorted per resolution level — no join, no shuffle.
+  (intersecting the outline). It is level-synchronous over all zones:
+  one numpy pass per resolution classifies every zone's active cells
+  and recurses on the boundary ones, which yields a compacted cover
+  directly;
+- the cover is served as a broadcast sorted-array map: lookup is one
+  np.searchsorted over its flattened Morton intervals — no join, no
+  shuffle.
 
 Antimeridian: callers split geometries at +-180 (GeoJSON convention, which
 the reference's config data already follows); the grid itself has an exact
@@ -21,10 +24,11 @@ cell boundary at lon 0 wrapping x index mod 2^r.
 
 from __future__ import annotations
 
+from collections import namedtuple
+
 import numpy as np
 
 from .codec import PackedGeometry
-from .kernels import points_in_packed
 
 MAX_RES = 26  # 2 bits per level, 26*2 = 52 bits + 5 res bits < 64
 
@@ -32,11 +36,10 @@ __all__ = [
     "encode_points",
     "cell_res",
     "cell_parent",
-    "cell_children",
     "cell_bounds",
+    "csr_pairs",
+    "cover_polygons",
     "cover_polygon",
-    "compact_cells",
-    "cell_to_ancestors",
 ]
 
 
@@ -83,14 +86,6 @@ def cell_parent(cell: np.ndarray | int, steps: int = 1):
     return code | ((r - steps).astype(np.uint64) << np.uint64(58))
 
 
-def cell_children(cell: int) -> np.ndarray:
-    c = np.uint64(cell)
-    r = int(cell_res(c))
-    code = int(c & np.uint64((1 << 58) - 1)) << 2
-    base = np.uint64((r + 1) << 58)
-    return np.array([base | np.uint64(code | k) for k in range(4)], dtype=np.uint64)
-
-
 def _deinterleave(code: int, r: int) -> tuple[int, int]:
     x = y = 0
     for i in range(r):
@@ -111,129 +106,179 @@ def cell_bounds(cell: int) -> tuple[float, float, float, float]:
     return (-180.0 + x * w, -90.0 + y * h, -180.0 + (x + 1) * w, -90.0 + (y + 1) * h)
 
 
-def cell_to_ancestors(cells: np.ndarray, levels: list[int]) -> dict[int, np.ndarray]:
-    """For each requested coarser level, the ancestor ids of `cells`."""
-    r = cell_res(cells)
-    out = {}
-    for lv in levels:
-        out[lv] = cell_parent(cells, r - lv)
-    return out
 
 
 # ------------------------------------------------------------- covering
 
+# Cap on the (cell, edge) pairs one numpy pass of the cover holds: a pair
+# costs ~100 B of temporaries, so a pass stays near 6 MB however many
+# edges a zone has (and small passes stay in cache: 2^16 was faster than
+# 2^18 or 10^6 on the 512- and 4,096-zone ring worlds).
+_COVER_PAIR_BUDGET = 1 << 16
 
-def _bbox_disjoint(b1, b2) -> bool:
-    return b1[2] < b2[0] or b2[2] < b1[0] or b1[3] < b2[1] or b2[3] < b1[1]
+
+def csr_pairs(start: np.ndarray, count: np.ndarray, budget: int | None = None):
+    """Flat expansion of the CSR ranges [start[i], start[i] + count[i]):
+    yields (owner i, position) arrays of at most `budget` pairs each (one
+    piece when None; a single empty piece when there are no pairs)."""
+    count = np.asarray(count, dtype=np.int64)
+    end = np.cumsum(count)
+    total = int(end[-1]) if len(end) else 0
+    step = budget or max(total, 1)
+    for lo in range(0, max(total, 1), step):
+        flat = np.arange(lo, min(total, lo + step), dtype=np.int64)
+        owner = np.searchsorted(end, flat, side="right")
+        yield owner, start[owner] + flat - (end[owner] - count[owner])
 
 
-def _edge_intersects_box(geom_edges, box) -> bool:
-    """Any polygon edge intersects the box rectangle (separating-axis on
-    segment vs axis-aligned box, vectorized)."""
-    x1, y1, x2, y2 = geom_edges
+# One edge soup over many zones: edge i runs from vertex i to the next
+# vertex of its ring; `zone` is its zone, lo_*/hi_* its bbox.
+_Edges = namedtuple("_Edges", "x1 y1 x2 y2 zone lo_x hi_x lo_y hi_y")
+
+
+def _edge_soup(gs: list[PackedGeometry], voff: np.ndarray) -> _Edges:
+    ro = [g.ring_offsets + o for g, o in zip(gs, voff)]
+    nxt = np.arange(1, voff[-1] + 1)
+    nxt[np.concatenate([r[1:] for r in ro]) - 1] = np.concatenate([r[:-1] for r in ro])
+    xy = np.concatenate([g.coords for g in gs])
+    x1, y1, x2, y2 = xy[:, 0], xy[:, 1], xy[nxt, 0], xy[nxt, 1]
+    zone = np.repeat(np.arange(len(gs)), np.diff(voff))
+    return _Edges(x1, y1, x2, y2, zone, np.minimum(x1, x2), np.maximum(x1, x2),
+                  np.minimum(y1, y2), np.maximum(y1, y2))
+
+
+def _cells_crossed(ed: _Edges, box, start, count, src):
+    """Edge test of cells box = (x0, y0, x1, y1) against their candidate
+    edges src[start[i] : start[i] + count[i]]: the closed edge-bbox quick
+    reject, then the side test (an edge misses the cell when all four
+    corners lie strictly on one side of its line). Returns (crossed
+    bool[], cell[], edge[]) with the (cell, edge) pairs that passed the
+    quick reject, grouped by cell."""
     bx0, by0, bx1, by1 = box
-    # quick reject: edge bbox vs box
-    emn_x = np.minimum(x1, x2)
-    emx_x = np.maximum(x1, x2)
-    emn_y = np.minimum(y1, y2)
-    emx_y = np.maximum(y1, y2)
-    cand = ~((emx_x < bx0) | (emn_x > bx1) | (emx_y < by0) | (emn_y > by1))
-    if not cand.any():
-        return False
-    x1, y1, x2, y2 = x1[cand], y1[cand], x2[cand], y2[cand]
-    # line side test: all 4 box corners strictly same side -> no intersection
-    dx = x2 - x1
-    dy = y2 - y1
-    corners = np.array([[bx0, by0], [bx1, by0], [bx1, by1], [bx0, by1]])
-    s = np.stack([dx * (cy - y1) - dy * (cx - x1) for cx, cy in corners], axis=0)
-    same_side = (s > 0).all(axis=0) | (s < 0).all(axis=0)
-    return bool((~same_side).any())
+    crossed = np.zeros(len(bx0), dtype=np.int64)
+    kept_c, kept_e = [], []
+    for c, pos in csr_pairs(start, count, _COVER_PAIR_BUDGET):
+        e = src[pos]
+        q = ~((ed.hi_x[e] < bx0[c]) | (ed.lo_x[e] > bx1[c])
+              | (ed.hi_y[e] < by0[c]) | (ed.lo_y[e] > by1[c]))
+        c, e = c[q], e[q]
+        kept_c.append(c)
+        kept_e.append(e)
+        ex1, ey1 = ed.x1[e], ed.y1[e]
+        dx, dy = ed.x2[e] - ex1, ed.y2[e] - ey1
+        above = below = np.ones(len(e), dtype=bool)
+        for cx, cy in ((bx0, by0), (bx1, by0), (bx1, by1), (bx0, by1)):
+            s = dx * (cy[c] - ey1) - dy * (cx[c] - ex1)
+            above, below = above & (s > 0), below & (s < 0)
+        crossed += np.bincount(c[~(above | below)], minlength=len(bx0))
+    return crossed > 0, np.concatenate(kept_c), np.concatenate(kept_e)
 
 
-def cover_polygon(
-    geom: PackedGeometry, max_res: int, min_res: int = 1
-) -> tuple[np.ndarray, np.ndarray]:
-    """Compact cell cover of a polygon.
+def _centres_inside(ed: _Edges, zone, row, r: int, px, py) -> np.ndarray:
+    """Even-odd test of cell centres (px, py) against all edges of their
+    zones, for cells of resolution r in cell row `row`. The +x ray from a
+    centre can only cross edges that straddle its py, and all centres of
+    a row share one py: list the (zone, row) pairs each edge may
+    straddle (a superset, +-1 row), then count each centre's crossings
+    over its own (zone, row) edges only."""
+    has = np.zeros(int(ed.zone[-1]) + 1, dtype=bool)
+    has[zone] = True
+    e = np.flatnonzero(has[ed.zone])
+    h, top = 180.0 / (1 << r), (1 << r) - 1
+    j0 = np.clip(np.floor((ed.lo_y[e] + 90.0) / h - 0.5), 0, top).astype(np.int64)
+    j1 = np.clip(np.floor((ed.hi_y[e] + 90.0) / h + 0.5), 0, top).astype(np.int64)
+    k, j = next(csr_pairs(j0, j1 - j0 + 1))
+    key = (ed.zone[e[k]] << r) + j
+    o = np.argsort(key, kind="stable")
+    key, row_edge = key[o], e[k[o]]
+    want = (zone << r) + row
+    lo, hi = np.searchsorted(key, want), np.searchsorted(key, want, side="right")
+    parity = np.zeros(len(px), dtype=np.int64)
+    for c, pos in csr_pairs(lo, hi - lo, _COVER_PAIR_BUDGET):
+        e = row_edge[pos]
+        ey1, ey2, pyc = ed.y1[e], ed.y2[e], py[c]
+        with np.errstate(divide="ignore", invalid="ignore"):
+            xint = ed.x1[e] + (pyc - ey1) * (ed.x2[e] - ed.x1[e]) / (ey2 - ey1)
+        hit = ((ey1 > pyc) != (ey2 > pyc)) & (px[c] < xint)
+        parity += np.bincount(c[hit], minlength=len(px))
+    return (parity & 1).astype(bool)
 
-    Returns (cells uint64[], full bool[]): FULL cells are entirely inside
-    the polygon (emitted at the coarsest resolution where that holds — the
-    cover is compact by construction); BOUNDARY cells are max_res cells
-    that intersect the polygon outline (or contain part of it).
+
+def cover_polygons(
+    geoms: list[PackedGeometry], max_res: int
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Compact cell covers of many (multi)polygons, one numpy pass per
+    resolution over all of them.
+
+    Returns (zone int64[], cells uint64[], full bool[]) sorted by zone,
+    then cell; `zone` indexes `geoms`. FULL cells lie entirely inside
+    their polygon and are emitted at the coarsest resolution where that
+    holds, so each cover is compact by construction; BOUNDARY cells are
+    max_res cells that the outline crosses (or that hold the whole
+    polygon). An empty geometry has no cells.
+
+    Level-synchronous: starting from the four res-1 cells of every zone,
+    each resolution takes all active (zone, cell) pairs through
+    - the zone-bbox reject;
+    - the edge test (_cells_crossed). A cell tries only the edges that
+      passed its parent's quick reject: cell bounds are exact dyadic
+      numbers, so a child lies inside its parent and no other edge can
+      pass its own quick reject;
+    - for the cells no edge crosses, the even-odd test of the cell
+      centre against its zone's edges (_centres_inside; inside -> FULL);
+    - the four children of the cells that stay boundary.
+    Pair passes hold at most _COVER_PAIR_BUDGET pairs at a time.
     """
-    if geom.is_empty():
-        return np.zeros(0, dtype=np.uint64), np.zeros(0, dtype=bool)
-    # edge soup once
-    coords = geom.coords
-    ro = geom.ring_offsets
-    ends = np.empty_like(coords)
-    for i in range(geom.n_rings):
-        a, b = ro[i], ro[i + 1]
-        ends[a : b - 1] = coords[a + 1 : b]
-        ends[b - 1] = coords[a]
-    edges = (coords[:, 0], coords[:, 1], ends[:, 0], ends[:, 1])
-    gb = (
-        float(coords[:, 0].min()),
-        float(coords[:, 1].min()),
-        float(coords[:, 0].max()),
-        float(coords[:, 1].max()),
-    )
-
-    cells_out = []
-    full_out = []
-    stack = [int(c) for c in encode_points(np.array([-90.0, 90.0, -90.0, 90.0]),
-                                           np.array([-45.0, -45.0, 45.0, 45.0]), 1)]
-    seen = set(stack)
-    while stack:
-        cell = stack.pop()
-        cb = cell_bounds(cell)
-        if _bbox_disjoint(cb, gb):
-            continue
-        r = cell >> 58
-        crosses = _edge_intersects_box(edges, cb)
-        if not crosses:
-            # either fully inside, fully outside, or polygon strictly inside cell
-            center = np.array([[(cb[0] + cb[2]) / 2.0, (cb[1] + cb[3]) / 2.0]])
-            inside = bool(points_in_packed(center, geom)[0])
-            poly_inside_cell = (
-                gb[0] >= cb[0] and gb[1] >= cb[1] and gb[2] <= cb[2] and gb[3] <= cb[3]
-            )
-            if inside and not poly_inside_cell and r >= min_res:
-                cells_out.append(cell)
-                full_out.append(True)
-                continue
-            if not inside and not poly_inside_cell:
-                continue
-            # polygon nested inside this cell -> must recurse
-        if r >= max_res:
-            cells_out.append(cell)
-            full_out.append(False)
-            continue
-        for ch in cell_children(cell):
-            ich = int(ch)
-            if ich not in seen:
-                seen.add(ich)
-                stack.append(ich)
-    return np.array(cells_out, dtype=np.uint64), np.array(full_out, dtype=bool)
+    kept = np.array([i for i, g in enumerate(geoms) if not g.is_empty()], dtype=np.int64)
+    out = [(np.zeros(0, np.int64), np.zeros(0, np.uint64), np.zeros(0, bool))]
+    if len(kept):
+        gs = [geoms[i] for i in kept]
+        nv = np.array([len(g.coords) for g in gs], dtype=np.int64)
+        voff = np.concatenate([[0], np.cumsum(nv)])
+        ed = _edge_soup(gs, voff)
+        zbox = [f.reduceat(a, voff[:-1]) for f, a in ((np.minimum, ed.x1), (np.minimum, ed.y1),
+                                                       (np.maximum, ed.x1), (np.maximum, ed.y1))]
+        # the four res-1 cells of every zone, each with all its zone's edges
+        z = np.repeat(np.arange(len(gs)), 4)
+        x, y = np.tile([0, 1, 0, 1], len(gs)), np.tile([0, 0, 1, 1], len(gs))
+        start, count, src = voff[z], nv[z], np.arange(voff[-1])
+        for r in range(1, max(max_res, 1) + 1):
+            w, h = 360.0 / (1 << r), 180.0 / (1 << r)
+            box = (-180.0 + x * w, -90.0 + y * h, -180.0 + (x + 1) * w, -90.0 + (y + 1) * h)
+            zb = [b[z] for b in zbox]
+            ok = ~((box[2] < zb[0]) | (zb[2] < box[0]) | (box[3] < zb[1]) | (zb[3] < box[1]))
+            z, x, y, start, count = z[ok], x[ok], y[ok], start[ok], count[ok]
+            box, zb = [b[ok] for b in box], [b[ok] for b in zb]
+            crosses, cand_c, cand_e = _cells_crossed(ed, box, start, count, src)
+            poly_in_cell = ((zb[0] >= box[0]) & (zb[1] >= box[1])
+                            & (zb[2] <= box[2]) & (zb[3] <= box[3]))
+            t = np.flatnonzero(~crosses & ~poly_in_cell)
+            inside = _centres_inside(ed, z[t], y[t], r, (box[0][t] + box[2][t]) / 2.0,
+                                     (box[1][t] + box[3][t]) / 2.0)
+            deeper = crosses | poly_in_cell
+            emit = [(t[inside], True)]
+            if r >= max_res:
+                emit.append((np.flatnonzero(deeper), False))
+            for sel, is_full in emit:
+                cells = _interleave_bits(x[sel], y[sel], r) | np.uint64(r << 58)
+                out.append((kept[z[sel]], cells, np.full(len(sel), is_full)))
+            if r >= max_res or not deeper.any():
+                break
+            # children of the boundary cells inherit their parent's candidate edges
+            inherit = deeper[cand_c]
+            cnt = np.bincount(cand_c[inherit], minlength=len(z))[deeper]
+            src = cand_e[inherit]
+            start, count = np.repeat(np.cumsum(cnt) - cnt, 4), np.repeat(cnt, 4)
+            z = np.repeat(z[deeper], 4)
+            x = 2 * np.repeat(x[deeper], 4) + np.tile([0, 1, 0, 1], len(cnt))
+            y = 2 * np.repeat(y[deeper], 4) + np.tile([0, 0, 1, 1], len(cnt))
+    zone, cells, full = (np.concatenate(a) for a in zip(*out))
+    o = np.lexsort((cells, zone))
+    return zone[o], cells[o], full[o]
 
 
-def compact_cells(cells: np.ndarray) -> np.ndarray:
-    """Merge any 4 sibling cells into their parent, repeatedly (for covers
-    built cell-by-cell rather than by recursive descent)."""
-    cells = set(int(c) for c in cells)
-    changed = True
-    while changed:
-        changed = False
-        by_parent = {}
-        for c in cells:
-            r = c >> 58
-            if r == 0:
-                continue
-            p = ((c & ((1 << 58) - 1)) >> 2) | ((r - 1) << 58)
-            by_parent.setdefault(p, []).append(c)
-        for p, kids in by_parent.items():
-            if len(kids) == 4:
-                for k in kids:
-                    cells.discard(k)
-                cells.add(p)
-                changed = True
-    return np.array(sorted(cells), dtype=np.uint64)
+def cover_polygon(geom: PackedGeometry, max_res: int) -> tuple[np.ndarray, np.ndarray]:
+    """Compact cell cover of one polygon: (cells uint64[], full bool[])
+    sorted by cell; see cover_polygons."""
+    _, cells, full = cover_polygons([geom], max_res)
+    return cells, full

@@ -6,8 +6,8 @@ Stage 1 of the two-stage spatial join. The reference has no lookup layer
 (README.md:125-156) — this is the engine's scale path:
 
 - `build_cell_covers`: zones DataFrame -> (tzid, cell_id, full) rows, one
-  applyInPandas over zones (each zone covers independently; zones is tiny
-  relative to pages, so this stage is never the bottleneck).
+  mapInPandas over zones with one batched `cover_polygons` call per Arrow
+  batch; `cellmap_from_zones_pdf` makes the same call driver-side.
 - `CellMap`: the collected cover as sorted uint64 arrays + the zone
   polygon set, broadcast once; per-point lookup is np.searchsorted — the
   10^12-row pages join becomes map-side only, no shuffle.
@@ -22,7 +22,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from ..geom.cellindex import cell_parent, cell_res, cover_polygon, encode_points
+from ..geom.cellindex import cell_parent, cell_res, cover_polygons, csr_pairs, encode_points
 from ..geom.codec import from_geojson
 
 COVER_SCHEMA = "tzid string, cell_id long, full boolean, res int"
@@ -32,23 +32,17 @@ DEFAULT_COVER_RES = 7  # ~2.8 deg cells at res 7 on the synthetic world
 
 def make_cover_fn(max_res: int = DEFAULT_COVER_RES):
     def _cover(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = []
-        for _, row in pdf.iterrows():
-            geom = from_geojson(row["geometry"])
-            cells, full = cover_polygon(geom, max_res=max_res)
-            out.append(
-                pd.DataFrame(
-                    {
-                        "tzid": row["tzid"],
-                        "cell_id": cells.astype(np.int64),  # spark long
-                        "full": full,
-                        "res": (cells >> np.uint64(58)).astype(np.int32),
-                    }
-                )
-            )
-        if not out:
-            return pd.DataFrame(columns=["tzid", "cell_id", "full", "res"])
-        return pd.concat(out, ignore_index=True)
+        zone, cells, full = cover_polygons(
+            [from_geojson(g) for g in pdf["geometry"]], max_res
+        )
+        return pd.DataFrame(
+            {
+                "tzid": pdf["tzid"].to_numpy()[zone],
+                "cell_id": cells.astype(np.int64),  # spark long
+                "full": full,
+                "res": (cells >> np.uint64(58)).astype(np.int32),
+            }
+        )
 
     return _cover
 
@@ -57,7 +51,8 @@ def build_cell_covers(zones: DataFrame, max_res: int = DEFAULT_COVER_RES) -> Dat
     """zones(tzid, geometry, ...) -> covers(tzid, cell_id, full, res).
 
     Map-only: each zone row covers independently (zone tables are one row
-    per tzid), so mapInPandas over a spread of the (tiny) zone table.
+    per tzid), so mapInPandas over a spread of the (tiny) zone table, with
+    one batched `cover_polygons` call per Arrow batch.
     The earlier groupBy(tzid).applyInPandas shape paid per-GROUP pandas
     overhead — measured ~100 s for a 10,000-zone world at local[32] vs
     ~15 s map-only — and its shuffle bought nothing the repartition here
@@ -151,38 +146,25 @@ def cellmap_from_zones_pdf(
     zone artifact (a build_all product parquet, a prior release) can feed
     the serving layer directly."""
     zp = zones_pdf.sort_values("tzid").reset_index(drop=True)
-    if not all(c in zp.columns for c in ("min_x", "min_y", "max_x", "max_y")):
+    geoms = [from_geojson(g) for g in zp["geometry"]]
+    quartet = ["min_x", "min_y", "max_x", "max_y"]
+    if not all(c in zp.columns for c in quartet):
         # the full quartet or re-derive: a PARTIAL bbox column set
         # (e.g. an artifact carrying min_* only) would KeyError inside
-        # CellMap otherwise
-        zp = zp.drop(
-            columns=[c for c in ("min_x", "min_y", "max_x", "max_y") if c in zp.columns]
+        # CellMap otherwise. Empty op-fold results are writable artifacts
+        # (zone_row stores NaN bounds for them) — mirror that, don't crash
+        boxes = [
+            np.r_[g.coords.min(0), g.coords.max(0)] if len(g.coords) else [np.nan] * 4
+            for g in geoms
+        ]
+        zp = zp.drop(columns=[c for c in quartet if c in zp.columns]).assign(
+            **dict(zip(quartet, np.reshape(boxes, (-1, 4)).T))
         )
-        boxes = []
-        for gj in zp["geometry"]:
-            g = from_geojson(gj)
-            if len(g.coords) == 0:
-                # empty op-fold results are writable artifacts (zone_row
-                # stores NaN bounds for them) — mirror that, don't crash
-                boxes.append((np.nan, np.nan, np.nan, np.nan))
-                continue
-            xs, ys = g.coords[:, 0], g.coords[:, 1]
-            boxes.append((xs.min(), ys.min(), xs.max(), ys.max()))
-        zp = zp.assign(
-            min_x=[b[0] for b in boxes],
-            min_y=[b[1] for b in boxes],
-            max_x=[b[2] for b in boxes],
-            max_y=[b[3] for b in boxes],
-        )
-    covers = []
-    for r in zp.itertuples():
-        cells, full = cover_polygon(from_geojson(r.geometry), max_res=max_res)
-        covers.append(
-            pd.DataFrame(
-                {"tzid": r.tzid, "cell_id": cells.astype(np.int64), "full": full}
-            )
-        )
-    return CellMap(pd.concat(covers, ignore_index=True), zp)
+    zone, cells, full = cover_polygons(geoms, max_res)
+    covers = pd.DataFrame(
+        {"tzid": zp["tzid"].to_numpy()[zone], "cell_id": cells.astype(np.int64), "full": full}
+    )
+    return CellMap(covers, zp)
 
 
 class CellMap:
@@ -224,7 +206,7 @@ class CellMap:
         self.bnd_cells = bc[o]
         self.bnd_tz = bt[o]
 
-        self.levels = sorted(set(int(r) for r in cell_res(cells))) if len(cells) else []
+        self.levels = np.unique(cell_res(cells)).tolist()
         self._geom_cache = None
         self._build_intervals()
         self._build_knn_boxes()
@@ -282,36 +264,30 @@ class CellMap:
         longitudes really are within 1852 m of each other."""
         pad = self.KNN_GRID_PAD_DEG
         ncell = 360 * 180
-        lists: dict[int, list[int]] = {}
-        for (x0, y0, x1, y1), zi in zip(self.knn_boxes, self.knn_box_zone):
-            # lon columns WRAP at the antimeridian: a box touching +-180
-            # must also register candidates on the far side, else a point
-            # 100 m west of the seam never sees land 100 m east of it
-            # (GeoJSON geometries are split at +-180, so only the pad —
-            # never the box itself — crosses)
-            max_abs_lat = min(max(abs(y0), abs(y1)) + pad, 90.0)
-            cos_lat = np.cos(np.radians(max_abs_lat))
-            lon_pad = pad / cos_lat if cos_lat > 1e-6 else 360.0
-            if lon_pad >= 180.0 or (x1 - x0) + 2 * lon_pad >= 360.0:
-                gx0, gx1 = 0, 359
-            else:
-                gx0 = int(np.floor(x0 - lon_pad)) + 180
-                gx1 = int(np.floor(x1 + lon_pad)) + 180
-            gy0 = max(int(np.floor(y0 - pad)) + 90, 0)
-            gy1 = min(int(np.floor(y1 + pad)) + 90, 179)
-            for gx in range(gx0, gx1 + 1):
-                base = (gx % 360) * 180
-                for gy in range(gy0, gy1 + 1):
-                    lists.setdefault(base + gy, []).append(int(zi))
-        off = np.zeros(ncell + 1, dtype=np.int64)
-        flat: list[int] = []
-        for c in range(ncell):
-            zs = lists.get(c)
-            if zs:
-                flat.extend(sorted(set(zs)))
-            off[c + 1] = len(flat)
-        self.knn_grid_off = off
-        self.knn_grid_tz = np.asarray(flat, dtype=np.int32)
+        x0, y0, x1, y1 = self.knn_boxes.T
+        # lon columns WRAP at the antimeridian: a box touching +-180
+        # must also register candidates on the far side, else a point
+        # 100 m west of the seam never sees land 100 m east of it
+        # (GeoJSON geometries are split at +-180, so only the pad —
+        # never the box itself — crosses)
+        max_abs_lat = np.minimum(np.maximum(np.abs(y0), np.abs(y1)) + pad, 90.0)
+        cos_lat = np.cos(np.radians(max_abs_lat))
+        with np.errstate(divide="ignore"):
+            lon_pad = np.where(cos_lat > 1e-6, pad / cos_lat, 360.0)
+        every_lon = (lon_pad >= 180.0) | ((x1 - x0) + 2 * lon_pad >= 360.0)
+        gx0 = np.where(every_lon, 0, np.floor(x0 - lon_pad) + 180).astype(np.int64)
+        gx1 = np.where(every_lon, 359, np.floor(x1 + lon_pad) + 180).astype(np.int64)
+        gy0 = np.maximum(np.floor(y0 - pad) + 90, 0).astype(np.int64)
+        ny = np.maximum(np.minimum(np.floor(y1 + pad) + 90, 179).astype(np.int64) - gy0 + 1, 0)
+        # every (grid cell, zone) pair of every box, then unique per cell
+        nxy = np.maximum(gx1 - gx0 + 1, 0) * ny
+        b, k = next(csr_pairs(np.zeros(len(ny), dtype=np.int64), nxy))
+        cell = ((gx0[b] + k // ny[b]) % 360) * 180 + gy0[b] + k % ny[b]
+        key = np.unique((cell << 32) + self.knn_box_zone[b])
+        self.knn_grid_off = np.concatenate(
+            [[0], np.cumsum(np.bincount(key >> 32, minlength=ncell))]
+        ).astype(np.int64)
+        self.knn_grid_tz = (key & 0xFFFFFFFF).astype(np.int32)
 
     def knn_candidates(self, lon: np.ndarray, lat: np.ndarray):
         """Grid probe: returns (cand_start, cand_end) CSR ranges into
@@ -361,29 +337,24 @@ class CellMap:
         domain = np.array([0, 1 << (2 * R)], dtype=np.uint64)
         pos = np.unique(np.concatenate([fs, fe, bs, be, domain]))
         nseg = len(pos) - 1
+
+        def seg_pairs(s, e, tz):
+            # every (segment, zone) pair of cells spanning pos[i0]..pos[i1]
+            i0 = np.searchsorted(pos, s)
+            k, seg = next(csr_pairs(i0, np.searchsorted(pos, e) - i0))
+            return seg, tz[k]
+
+        seg, tz = seg_pairs(fs, fe, self.full_tz)
         full_min = np.full(nseg, BIG, dtype=np.int32)
-        for s, e, t in zip(fs, fe, self.full_tz):
-            i0 = int(np.searchsorted(pos, s))
-            i1 = int(np.searchsorted(pos, e))
-            np.minimum(full_min[i0:i1], t, out=full_min[i0:i1])
-        cand_lists: list[list[int]] = [[] for _ in range(nseg)]
-        for s, e, t in zip(bs, be, self.bnd_tz):
-            i0 = int(np.searchsorted(pos, s))
-            i1 = int(np.searchsorted(pos, e))
-            for k in range(i0, i1):
-                cand_lists[k].append(int(t))
-        counts = np.zeros(nseg, dtype=np.int64)
-        flat: list[int] = []
-        for k, lst in enumerate(cand_lists):
-            u = sorted(set(lst))
-            counts[k] = len(u)
-            flat.extend(u)
+        np.minimum.at(full_min, seg, tz)
+        seg, tz = seg_pairs(bs, be, self.bnd_tz)
+        key = np.unique((seg << 32) + tz)
         self.ivl_pos = pos
         self.ivl_full_tz = full_min
         self.ivl_cand_off = np.concatenate(
-            [np.zeros(1, dtype=np.int64), np.cumsum(counts)]
-        )
-        self.ivl_cand_tz = np.asarray(flat, dtype=np.int32)
+            [[0], np.cumsum(np.bincount(key >> 32, minlength=nseg))]
+        ).astype(np.int64)
+        self.ivl_cand_tz = (key & 0xFFFFFFFF).astype(np.int32)
 
     def slim(self):
         """Index-only copy for the sharded stage-2 path

@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..geom.boolean import clip_to_box
-from ..geom.cellindex import cell_bounds, cell_parent, cell_res, cover_polygon
+from ..geom.cellindex import cell_bounds, cell_res, cover_polygon, cover_polygons, csr_pairs
 from ..geom.codec import from_geojson, to_geojson
 from ..geom.kernels import make_box, planar_area
 
@@ -34,49 +34,38 @@ RASTER_SCHEMA = "cell_id long, res int, tzid string, coverage string"
 VECTOR_SCHEMA = "cell_id long, res int, tzid string, geometry string"
 
 
-def raster_rows_for_geom(geom, res: int) -> tuple[np.ndarray, list[str]]:
-    """Uniform-resolution raster expansion of one zone's compact cover:
-    coarse full cells expand to their res-R descendants. Shared by the
-    Spark applyInPandas stage and the local golden-oracle builder."""
+def _raster_rows(zone, cells, full, res: int):
+    """Uniform-resolution raster expansion of compact covers: a coarse
+    full cell expands to its res-R descendants, whose Morton codes are
+    one contiguous range. Returns (zone, cell_id int64[], coverage[])."""
+    steps = (2 * (res - cell_res(cells))).astype(np.uint64)
+    k, d = next(csr_pairs(np.zeros(len(cells), dtype=np.int64), np.left_shift(1, steps)))
+    base = (cells & np.uint64((1 << 58) - 1)) << steps
+    ids = (base[k] + d.astype(np.uint64)) | np.uint64(res << 58)
+    return zone[k], ids.astype(np.int64), np.where(full[k], "full", "partial")
+
+
+def raster_rows_for_geom(geom, res: int) -> tuple[np.ndarray, np.ndarray]:
+    """Raster rows (cell_id, coverage) of one zone — the local
+    golden-oracle builder's view of the Spark stage's expansion."""
     cells, full = cover_polygon(geom, max_res=res)
-    r = cell_res(cells)
-    expand: list[int] = []
-    cover: list[str] = []
-    for c, f, cr in zip(cells, full, r):
-        if cr == res:
-            expand.append(int(c))
-            cover.append("full" if f else "partial")
-        else:
-            # descendants of a full coarse cell at res R
-            steps = res - int(cr)
-            base = (int(c) & ((1 << 58) - 1)) << (2 * steps)
-            hdr = res << 58
-            for k in range(1 << (2 * steps)):
-                expand.append(hdr | (base | k))
-                cover.append("full")
-    return np.array(expand, dtype=np.int64), cover
+    _, ids, coverage = _raster_rows(np.zeros(len(cells), dtype=np.int64), cells, full, res)
+    return ids, coverage
 
 
 def _raster_fn(res: int):
     def _tiles(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = []
-        for row in pdf.itertuples():
-            expand, cover = raster_rows_for_geom(from_geojson(row.geometry), res)
-            if len(expand) == 0:
-                continue
-            out.append(
-                pd.DataFrame(
-                    {
-                        "cell_id": expand,
-                        "res": np.int32(res),
-                        "tzid": row.tzid,
-                        "coverage": cover,
-                    }
-                )
-            )
-        if not out:
-            return pd.DataFrame(columns=["cell_id", "res", "tzid", "coverage"])
-        return pd.concat(out, ignore_index=True)
+        zone, ids, coverage = _raster_rows(
+            *cover_polygons([from_geojson(g) for g in pdf["geometry"]], res), res
+        )
+        return pd.DataFrame(
+            {
+                "cell_id": ids,
+                "res": np.full(len(ids), res, dtype=np.int32),
+                "tzid": pdf["tzid"].to_numpy()[zone],
+                "coverage": coverage,
+            }
+        )
 
     return _tiles
 
@@ -90,33 +79,22 @@ def raster_tiles(zones: DataFrame, res: int) -> DataFrame:
 
 def _vector_fn(res: int):
     def _tiles(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = []
-        for row in pdf.itertuples():
-            geom = from_geojson(row.geometry)
-            cells, full = cover_polygon(geom, max_res=res)
-            recs = []
-            r = cell_res(cells)
-            for c, f, cr in zip(cells, full, r):
-                b = cell_bounds(int(c))
-                if f:
-                    # full cells (any res): the payload IS the cell rect —
-                    # no clipping needed, interior tiles are pure rectangles
-                    clipped_gj = to_geojson(
-                        make_box(b[0], b[1], b[2], b[3]), as_string=True
-                    )
-                else:
-                    clipped = clip_to_box(geom, b[0], b[1], b[2], b[3])
-                    if clipped.is_empty():
-                        continue
-                    clipped_gj = to_geojson(clipped, as_string=True)
-                recs.append((int(c), int(cr), row.tzid, clipped_gj))
-            if recs:
-                out.append(
-                    pd.DataFrame(recs, columns=["cell_id", "res", "tzid", "geometry"])
-                )
-        if not out:
-            return pd.DataFrame(columns=["cell_id", "res", "tzid", "geometry"])
-        return pd.concat(out, ignore_index=True)
+        geoms = [from_geojson(g) for g in pdf["geometry"]]
+        tzids = pdf["tzid"].to_numpy()
+        recs = []
+        for zi, c, f in zip(*cover_polygons(geoms, res)):
+            b = cell_bounds(int(c))
+            if f:
+                # full cells (any res): the payload IS the cell rect —
+                # no clipping needed, interior tiles are pure rectangles
+                clipped_gj = to_geojson(make_box(*b), as_string=True)
+            else:
+                clipped = clip_to_box(geoms[zi], *b)
+                if clipped.is_empty():
+                    continue
+                clipped_gj = to_geojson(clipped, as_string=True)
+            recs.append((int(c), int(c) >> 58, tzids[zi], clipped_gj))
+        return pd.DataFrame(recs, columns=["cell_id", "res", "tzid", "geometry"])
 
     return _tiles
 
