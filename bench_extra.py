@@ -9,6 +9,8 @@ Usage:
                                                      # plans/r07/<q>_<tag>.txt
   python bench_extra.py cover [reps]                 # driver-side cover build,
                                                      # no Spark
+  python bench_extra.py kernel [points] [reps]       # stage-2 PIP/kNN kernel,
+                                                     # no Spark
 
 Prints one JSON line per mode; diagnostics to stderr.
 """
@@ -225,6 +227,82 @@ def cover_leg(reps: int = 3) -> dict:
     return rec
 
 
+def kernel_worlds():
+    """(name, CellMap) of the kernel leg: the 8-zone fixture, the
+    419-box reference world, perfbench's ring worlds (512 and 4,096 zones
+    of 64 edges, 32 of 2,000 and 8 of 20,000 edges) at their
+    `auto_cover_res`, and the 10,000-quad dense world at res 9, whole
+    and with every 9th quad removed (its holes are the kNN half)."""
+    import bench
+    from perfbench.gen import ring_heavy_world as gen_world
+    from timezone_boundary_builder_spark.operators.cover import (
+        auto_cover_res,
+        cellmap_from_zones_pdf,
+    )
+    from timezone_boundary_builder_spark.sources.fixtures import (
+        dense_zone_world,
+        local_cellmap,
+    )
+
+    yield "fixture_8", local_cellmap()
+    yield "reference_419", bench.reference_world_cellmap(max_res=9)
+    for gx, gy, edges in ((32, 16, 64), (64, 64, 64), (8, 4, 2000), (4, 2, 20_000)):
+        world = gen_world(gx, gy, edges, 1)["table"]
+        yield f"ring_{gx * gy}x{edges}", cellmap_from_zones_pdf(world, auto_cover_res(world))
+    quads = dense_zone_world(100, 100)
+    yield "quads_10000", cellmap_from_zones_pdf(quads, 9)
+    holey = quads.iloc[[i for i in range(len(quads)) if i % 9]].reset_index(drop=True)
+    yield "quads_holey", cellmap_from_zones_pdf(holey, 9)
+
+
+def kernel_leg(points: int = 200_000, reps: int = 3) -> dict:
+    """Stage-2 kernel time, driver only (no Spark): best-of-`reps`
+    seconds of `assign_codes` over `points` uniform random points (seed
+    1) on each kernel_worlds() world, split by the path a point takes:
+    `pip_sec` runs the points that land on a zone (method cell or pip),
+    `knn_sec` the points that miss every zone (knn, ocean or none).
+    The kNN half of the 20,000-edge world is skipped to keep the leg
+    short. Records the host probe of perfbench/run.py next to the
+    numbers."""
+    import time as _t
+
+    import numpy as np
+
+    from perfbench.run import host_facts
+    from timezone_boundary_builder_spark.operators.spatial_join import (
+        M_CELL,
+        M_PIP,
+        METHOD_NAMES,
+        assign_codes,
+    )
+
+    rng = np.random.default_rng(1)
+    lon, lat = rng.uniform(-180, 180, points), rng.uniform(-90, 90, points)
+    none = np.zeros(0)
+    rec: dict[str, object] = {"kernel_points": points, "kernel_reps": reps,
+                              "host": host_facts()}
+    for name, cm in kernel_worlds():
+        _, method = assign_codes(cm, none, 0, lon, lat, 1852.0)
+        land = (method == M_CELL) | (method == M_PIP)
+        rec[f"{name}_res"] = int(cm.finest)
+        rec[f"{name}_methods"] = {
+            METHOD_NAMES[m]: int(c) for m, c in zip(*np.unique(method, return_counts=True))
+        }
+        halves = [("pip", land)] + ([] if name.endswith("x20000") else [("knn", ~land)])
+        for half, sel in halves:
+            x, y = lon[sel], lat[sel]
+            times = []
+            for _ in range(reps):
+                t0 = _t.perf_counter()
+                assign_codes(cm, none, 0, x, y, 1852.0)
+                times.append(_t.perf_counter() - t0)
+            rec[f"{name}_{half}_sec"] = round(min(times), 4)
+        log(f"kernel {name}: " + ", ".join(
+            f"{h} {rec.get(f'{name}_{h}_sec')} s" for h in ("pip", "knn")))
+    rec["host_after"] = host_facts()
+    return rec
+
+
 def sharded_scaling_leg(points: int = 8_000_000) -> dict:
     """local[1] vs local[4] scaling of the SHARDED stage-2 path at the
     419-zone reference world (round-6 verdict item 5: the >=0.8
@@ -298,6 +376,11 @@ def main() -> None:
     if mode == "cover":
         reps = int(rest[0]) if rest else 3
         print(json.dumps(cover_leg(reps), separators=(",", ":")))
+        return
+    if mode == "kernel":
+        points = int(rest[0]) if rest else 200_000
+        reps = int(rest[1]) if len(rest) > 1 else 3
+        print(json.dumps(kernel_leg(points, reps), separators=(",", ":")))
         return
     if mode == "sharded-scaling":
         points = int(rest[0]) if rest else 8_000_000

@@ -1,11 +1,12 @@
 """Reference for the cell cover and the CellMap index build: the per-cell
 quadtree descent the batched `cellindex.cover_polygons` replaced, and the
 per-cell loops `CellMap._build_intervals` / `_build_knn_grid` replaced.
-The batched code must give exactly what these give."""
+The batched code must give exactly what these give. `lookup` is the
+per-level probe that the CellMap's Morton-interval probe replaced."""
 
 import numpy as np
 
-from timezone_boundary_builder_spark.geom.cellindex import cell_bounds, cell_res, encode_points
+from timezone_boundary_builder_spark.geom.cellindex import cell_bounds, cell_parent, cell_res, encode_points
 from timezone_boundary_builder_spark.geom.codec import PackedGeometry
 from timezone_boundary_builder_spark.geom.kernels import points_in_packed
 
@@ -186,3 +187,46 @@ def knn_grid_arrays(cm):
             flat.extend(sorted(set(zs)))
         off[c + 1] = len(flat)
     return off, np.asarray(flat, dtype=np.int32)
+
+
+def lookup(cm, lon: np.ndarray, lat: np.ndarray):
+    """The per-level sorted-array probe of a CellMap that its interval
+    probe replaced. Returns:
+    assigned int32[] — zone index from a FULL cell hit, -1 otherwise
+    cand_lists       — list (per point) of candidate zone-index arrays
+                       from BOUNDARY cell hits (empty list -> no hit)
+    """
+    n = len(lon)
+    big = np.iinfo(np.int32).max
+    assigned = np.full(n, big, dtype=np.int32)
+    cand: list = [None] * n
+    if not cm.levels:
+        assigned[:] = -1
+        return assigned, cand
+    # encode once at the finest level; coarser ids are bit-shifts
+    # (cheap int ops instead of re-projecting floats per level)
+    finest = cm.levels[-1]
+    finest_ids = encode_points(lon, lat, finest)
+    for lv in cm.levels:
+        ids = finest_ids if lv == finest else cell_parent(finest_ids, finest - lv)
+        # full-cell matches: take the MIN zone index across all levels
+        # (overlapping zones can both claim a point via nested full
+        # cells; min = smallest tzid rule)
+        if len(cm.full_cells):
+            lo = np.searchsorted(cm.full_cells, ids, side="left")
+            hi = np.searchsorted(cm.full_cells, ids, side="right")
+            multi = hi > lo
+            one = multi & (hi - lo == 1)
+            assigned[one] = np.minimum(assigned[one], cm.full_tz[lo[one]])
+            for i in np.nonzero(multi & ~one)[0]:
+                assigned[i] = min(assigned[i], int(cm.full_tz[lo[i] : hi[i]].min()))
+        # boundary-cell matches (may be several tzids per cell)
+        if len(cm.bnd_cells):
+            lo = np.searchsorted(cm.bnd_cells, ids, side="left")
+            hi = np.searchsorted(cm.bnd_cells, ids, side="right")
+            multi = hi > lo
+            for i in np.nonzero(multi)[0]:
+                ext = cm.bnd_tz[lo[i] : hi[i]]
+                cand[i] = ext if cand[i] is None else np.concatenate([cand[i], ext])
+    assigned[assigned == big] = -1
+    return assigned, cand

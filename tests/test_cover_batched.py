@@ -13,7 +13,7 @@ import bench_extra
 from _cover_ref import cover_polygon as ref_cover
 from _cover_ref import interval_arrays, knn_grid_arrays
 from perfbench.gen import ring_heavy_world as bench_world
-from timezone_boundary_builder_spark.geom import cellindex
+from timezone_boundary_builder_spark.geom import kernels
 from timezone_boundary_builder_spark.geom.cellindex import cover_polygons
 from timezone_boundary_builder_spark.geom.codec import EMPTY, from_geojson, from_rings
 from timezone_boundary_builder_spark.geom.kernels import make_box
@@ -200,7 +200,7 @@ def test_pair_budget_split_gives_identical_output(monkeypatch):
     big = from_rings([[_ring(10, 5, 40, 30, 20_000)]])
     want = [cover_polygons(ring_world, 7), cover_polygons([big], 6)]
     calls = []
-    csr_pairs = cellindex.csr_pairs
+    csr_pairs = kernels.csr_pairs
 
     def counting(start, count, budget=None):
         pieces = list(csr_pairs(start, count, budget))
@@ -208,8 +208,8 @@ def test_pair_budget_split_gives_identical_output(monkeypatch):
         assert all(len(owner) <= (budget or len(owner)) for owner, _ in pieces)
         return iter(pieces)
 
-    monkeypatch.setattr(cellindex, "_COVER_PAIR_BUDGET", 300)
-    monkeypatch.setattr(cellindex, "csr_pairs", counting)
+    monkeypatch.setattr(kernels, "PAIR_BUDGET", 300)
+    monkeypatch.setattr(kernels, "csr_pairs", counting)
     got = [cover_polygons(ring_world, 7), cover_polygons([big], 6)]
     for g, w in zip(got, want):
         for a, b in zip(g, w):

@@ -10,6 +10,7 @@ import pandas as pd
 import pytest
 
 import __spark_entry__ as entry
+from tests._cover_ref import lookup
 from timezone_boundary_builder_spark.geom.cellindex import cover_polygon
 from timezone_boundary_builder_spark.geom.codec import from_geojson
 from timezone_boundary_builder_spark.geom.kernels import points_in_packed
@@ -39,7 +40,7 @@ def test_probe_equals_legacy_lookup_random_points():
     rng = np.random.default_rng(11)
     lon = rng.uniform(-180, 180, size=20000)
     lat = rng.uniform(-90, 90, size=20000)
-    legacy_assigned, legacy_cand = cm.lookup(lon, lat)
+    legacy_assigned, legacy_cand = lookup(cm, lon, lat)
     full_tz, seg = cm.probe(lon, lat)
     probe_assigned = np.where(full_tz == BIG, -1, full_tz)
     assert np.array_equal(probe_assigned, legacy_assigned.astype(np.int64))

@@ -12,7 +12,9 @@ hierarchical cell grid over WGS84 lon-lat:
   (intersecting the outline). It is level-synchronous over all zones:
   one numpy pass per resolution classifies every zone's active cells
   and recurses on the boundary ones, which yields a compacted cover
-  directly;
+  directly. A cell no edge crosses is FULL when its centre passes the
+  even-odd test of kernels.RowEdges at the cell's resolution — the same
+  row-bucketed kernel stage 2 of the spatial join runs on points;
 - the cover is served as a broadcast sorted-array map: lookup is one
   np.searchsorted over its flattened Morton intervals — no join, no
   shuffle.
@@ -28,6 +30,7 @@ from collections import namedtuple
 
 import numpy as np
 
+from . import kernels
 from .codec import PackedGeometry
 
 MAX_RES = 26  # 2 bits per level, 26*2 = 52 bits + 5 res bits < 64
@@ -37,7 +40,7 @@ __all__ = [
     "cell_res",
     "cell_parent",
     "cell_bounds",
-    "csr_pairs",
+    "edge_soup",
     "cover_polygons",
     "cover_polygon",
 ]
@@ -110,33 +113,12 @@ def cell_bounds(cell: int) -> tuple[float, float, float, float]:
 
 # ------------------------------------------------------------- covering
 
-# Cap on the (cell, edge) pairs one numpy pass of the cover holds: a pair
-# costs ~100 B of temporaries, so a pass stays near 6 MB however many
-# edges a zone has (and small passes stay in cache: 2^16 was faster than
-# 2^18 or 10^6 on the 512- and 4,096-zone ring worlds).
-_COVER_PAIR_BUDGET = 1 << 16
-
-
-def csr_pairs(start: np.ndarray, count: np.ndarray, budget: int | None = None):
-    """Flat expansion of the CSR ranges [start[i], start[i] + count[i]):
-    yields (owner i, position) arrays of at most `budget` pairs each (one
-    piece when None; a single empty piece when there are no pairs)."""
-    count = np.asarray(count, dtype=np.int64)
-    end = np.cumsum(count)
-    total = int(end[-1]) if len(end) else 0
-    step = budget or max(total, 1)
-    for lo in range(0, max(total, 1), step):
-        flat = np.arange(lo, min(total, lo + step), dtype=np.int64)
-        owner = np.searchsorted(end, flat, side="right")
-        yield owner, start[owner] + flat - (end[owner] - count[owner])
-
-
 # One edge soup over many zones: edge i runs from vertex i to the next
 # vertex of its ring; `zone` is its zone, lo_*/hi_* its bbox.
 _Edges = namedtuple("_Edges", "x1 y1 x2 y2 zone lo_x hi_x lo_y hi_y")
 
 
-def _edge_soup(gs: list[PackedGeometry], voff: np.ndarray) -> _Edges:
+def edge_soup(gs: list[PackedGeometry], voff: np.ndarray) -> _Edges:
     ro = [g.ring_offsets + o for g, o in zip(gs, voff)]
     nxt = np.arange(1, voff[-1] + 1)
     nxt[np.concatenate([r[1:] for r in ro]) - 1] = np.concatenate([r[:-1] for r in ro])
@@ -157,7 +139,7 @@ def _cells_crossed(ed: _Edges, box, start, count, src):
     bx0, by0, bx1, by1 = box
     crossed = np.zeros(len(bx0), dtype=np.int64)
     kept_c, kept_e = [], []
-    for c, pos in csr_pairs(start, count, _COVER_PAIR_BUDGET):
+    for c, pos in kernels.csr_pairs(start, count, kernels.PAIR_BUDGET):
         e = src[pos]
         q = ~((ed.hi_x[e] < bx0[c]) | (ed.lo_x[e] > bx1[c])
               | (ed.hi_y[e] < by0[c]) | (ed.lo_y[e] > by1[c]))
@@ -172,36 +154,6 @@ def _cells_crossed(ed: _Edges, box, start, count, src):
             above, below = above & (s > 0), below & (s < 0)
         crossed += np.bincount(c[~(above | below)], minlength=len(bx0))
     return crossed > 0, np.concatenate(kept_c), np.concatenate(kept_e)
-
-
-def _centres_inside(ed: _Edges, zone, row, r: int, px, py) -> np.ndarray:
-    """Even-odd test of cell centres (px, py) against all edges of their
-    zones, for cells of resolution r in cell row `row`. The +x ray from a
-    centre can only cross edges that straddle its py, and all centres of
-    a row share one py: list the (zone, row) pairs each edge may
-    straddle (a superset, +-1 row), then count each centre's crossings
-    over its own (zone, row) edges only."""
-    has = np.zeros(int(ed.zone[-1]) + 1, dtype=bool)
-    has[zone] = True
-    e = np.flatnonzero(has[ed.zone])
-    h, top = 180.0 / (1 << r), (1 << r) - 1
-    j0 = np.clip(np.floor((ed.lo_y[e] + 90.0) / h - 0.5), 0, top).astype(np.int64)
-    j1 = np.clip(np.floor((ed.hi_y[e] + 90.0) / h + 0.5), 0, top).astype(np.int64)
-    k, j = next(csr_pairs(j0, j1 - j0 + 1))
-    key = (ed.zone[e[k]] << r) + j
-    o = np.argsort(key, kind="stable")
-    key, row_edge = key[o], e[k[o]]
-    want = (zone << r) + row
-    lo, hi = np.searchsorted(key, want), np.searchsorted(key, want, side="right")
-    parity = np.zeros(len(px), dtype=np.int64)
-    for c, pos in csr_pairs(lo, hi - lo, _COVER_PAIR_BUDGET):
-        e = row_edge[pos]
-        ey1, ey2, pyc = ed.y1[e], ed.y2[e], py[c]
-        with np.errstate(divide="ignore", invalid="ignore"):
-            xint = ed.x1[e] + (pyc - ey1) * (ed.x2[e] - ed.x1[e]) / (ey2 - ey1)
-        hit = ((ey1 > pyc) != (ey2 > pyc)) & (px[c] < xint)
-        parity += np.bincount(c[hit], minlength=len(px))
-    return (parity & 1).astype(bool)
 
 
 def cover_polygons(
@@ -225,9 +177,10 @@ def cover_polygons(
       numbers, so a child lies inside its parent and no other edge can
       pass its own quick reject;
     - for the cells no edge crosses, the even-odd test of the cell
-      centre against its zone's edges (_centres_inside; inside -> FULL);
+      centre against its zone's edges (kernels.RowEdges at resolution r,
+      the stage-2 kernel; inside -> FULL);
     - the four children of the cells that stay boundary.
-    Pair passes hold at most _COVER_PAIR_BUDGET pairs at a time.
+    Pair passes hold at most kernels.PAIR_BUDGET pairs at a time.
     """
     kept = np.array([i for i, g in enumerate(geoms) if not g.is_empty()], dtype=np.int64)
     out = [(np.zeros(0, np.int64), np.zeros(0, np.uint64), np.zeros(0, bool))]
@@ -235,7 +188,7 @@ def cover_polygons(
         gs = [geoms[i] for i in kept]
         nv = np.array([len(g.coords) for g in gs], dtype=np.int64)
         voff = np.concatenate([[0], np.cumsum(nv)])
-        ed = _edge_soup(gs, voff)
+        ed = edge_soup(gs, voff)
         zbox = [f.reduceat(a, voff[:-1]) for f, a in ((np.minimum, ed.x1), (np.minimum, ed.y1),
                                                        (np.maximum, ed.x1), (np.maximum, ed.y1))]
         # the four res-1 cells of every zone, each with all its zone's edges
@@ -253,8 +206,11 @@ def cover_polygons(
             poly_in_cell = ((zb[0] >= box[0]) & (zb[1] >= box[1])
                             & (zb[2] <= box[2]) & (zb[3] <= box[3]))
             t = np.flatnonzero(~crosses & ~poly_in_cell)
-            inside = _centres_inside(ed, z[t], y[t], r, (box[0][t] + box[2][t]) / 2.0,
-                                     (box[1][t] + box[3][t]) / 2.0)
+            has = np.zeros(len(gs), dtype=bool)
+            has[z[t]] = True
+            live = has[ed.zone]
+            rows = kernels.RowEdges(*(a[live] for a in ed[:5]), len(gs), r)
+            inside = rows.inside(z[t], (box[0][t] + box[2][t]) / 2.0, (box[1][t] + box[3][t]) / 2.0)
             deeper = crosses | poly_in_cell
             emit = [(t[inside], True)]
             if r >= max_res:

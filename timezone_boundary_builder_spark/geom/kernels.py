@@ -29,6 +29,10 @@ __all__ = [
     "geodesic_area_m2",
     "points_in_rings",
     "points_in_packed",
+    "ray_crosses",
+    "pair_edge_d2",
+    "csr_pairs",
+    "RowEdges",
     "point_segment_distance_m",
     "min_distance_to_boundary_m",
     "ring_interior_point",
@@ -110,18 +114,22 @@ def geodesic_area_m2(geom: PackedGeometry) -> float:
 _PIP_CHUNK_BUDGET = 8_000_000
 
 
-def _crossings(px, py, x1, y1, x2, y2) -> np.ndarray:
-    """Ray-casting crossing counts for points (px,py) against edge set.
-    Rays go toward +x; an edge is crossed when it straddles py and the
-    intersection x is strictly right of px. Vectorized points x edges."""
-    px = px[:, None]
-    py = py[:, None]
+def ray_crosses(px, py, x1, y1, x2, y2) -> np.ndarray:
+    """The even-odd crossing test, elementwise (broadcast-compatible): the
+    +x ray from (px, py) crosses edge (x1, y1)-(x2, y2) when the edge
+    straddles py and meets that height strictly right of px. Every PIP
+    of the engine counts these."""
     straddle = (y1 > py) != (y2 > py)
     # x of edge at height py (safe where straddle; garbage elsewhere, masked)
     with np.errstate(divide="ignore", invalid="ignore"):
         xint = x1 + (py - y1) * (x2 - x1) / (y2 - y1)
-    hit = straddle & (px < xint)
-    return hit.sum(axis=1)
+    return straddle & (px < xint)
+
+
+def _crossings(px, py, x1, y1, x2, y2) -> np.ndarray:
+    """Ray-casting crossing counts for points (px,py) against edge set,
+    vectorized points x edges."""
+    return ray_crosses(px[:, None], py[:, None], x1, y1, x2, y2).sum(axis=1)
 
 
 def points_in_rings(points: np.ndarray, coords: np.ndarray, ring_offsets: np.ndarray) -> np.ndarray:
@@ -162,30 +170,10 @@ def points_in_packed(points: np.ndarray, geom: PackedGeometry) -> np.ndarray:
     return points_in_rings(points, geom.coords, geom.ring_offsets)
 
 
-def points_in_edges(
-    px: np.ndarray, py: np.ndarray, x1: np.ndarray, y1: np.ndarray,
-    x2: np.ndarray, y2: np.ndarray,
-) -> np.ndarray:
-    """Even-odd PIP against a prebuilt edge soup (see CellMap.zone_edges —
-    skips the per-call edge-array construction of points_in_rings)."""
-    m = len(px)
-    if m == 0 or len(x1) == 0:
-        return np.zeros(m, dtype=bool)
-    chunk = max(1, _PIP_CHUNK_BUDGET // max(len(x1), 1))
-    parity = np.empty(m, dtype=np.int64)
-    for s in range(0, m, chunk):
-        e = min(m, s + chunk)
-        parity[s:e] = _crossings(px[s:e], py[s:e], x1, y1, x2, y2)
-    return (parity & 1).astype(bool)
-
-
 def pair_edge_d2(pxe, pye, ax, ay, bx, by):
-    """Squared equirectangular point-to-segment distance, elementwise
-    (broadcast-compatible). OP-FOR-OP the same arithmetic as
-    min_distance_edges_m's loop body — the spatial join's pair-vectorized
-    kNN path relies on the two producing bit-identical values, so any
-    precision change here must land in both (and the pair-vs-loop
-    equality tests in tests/test_cover_scale.py will catch a drift)."""
+    """Squared point-to-segment distance in radians, elementwise
+    (broadcast-compatible), in a local equirectangular projection
+    centred on the point."""
     plam = np.radians(pxe)
     pphi = np.radians(pye)
     cosphi = np.cos(pphi)
@@ -204,43 +192,108 @@ def pair_edge_d2(pxe, pye, ax, ay, bx, by):
     return cx * cx + cy * cy
 
 
-def min_distance_edges_m(
-    px: np.ndarray, py: np.ndarray, ax: np.ndarray, ay: np.ndarray,
-    bx: np.ndarray, by: np.ndarray,
-) -> np.ndarray:
-    """min_distance_to_boundary_m against a prebuilt edge soup (1D arrays;
-    no per-call segment-array construction)."""
-    m = len(px)
-    if m == 0:
-        return np.zeros(0)
-    n = len(ax)
-    if n == 0:
-        return np.full(m, np.inf)
-    plam = np.radians(px)[:, None]
-    pphi = np.radians(py)[:, None]
-    cosphi = np.cos(pphi)
-    out = np.empty(m)
-    chunk = max(1, _PIP_CHUNK_BUDGET // n)
-    alam = np.radians(ax)[None, :]
-    aphi = np.radians(ay)[None, :]
-    blam = np.radians(bx)[None, :]
-    bphi = np.radians(by)[None, :]
-    for s in range(0, m, chunk):
-        e = min(m, s + chunk)
-        axp = (alam - plam[s:e]) * cosphi[s:e]
-        ayp = aphi - pphi[s:e]
-        bxp = (blam - plam[s:e]) * cosphi[s:e]
-        byp = bphi - pphi[s:e]
-        dx = bxp - axp
-        dy = byp - ayp
-        seg_len2 = dx * dx + dy * dy
-        with np.errstate(divide="ignore", invalid="ignore"):
-            t = -(axp * dx + ayp * dy) / seg_len2
-        t = np.clip(np.nan_to_num(t, nan=0.0), 0.0, 1.0)
-        cx = axp + t * dx
-        cy = ayp + t * dy
-        out[s:e] = np.sqrt((cx * cx + cy * cy).min(axis=1))
-    return out * EARTH_RADIUS_M
+# ------------------------------------------------ row-bucketed pair kernel
+
+# Cap on the pairs one numpy pass of a pair kernel holds ((cell, edge)
+# pairs of the cover, (point, edge) pairs of stage 2): a pair costs
+# ~100 B of temporaries, so a pass stays near 6 MB however many edges a
+# zone has (and small passes stay in cache: 2^16 was faster than 2^18 or
+# 10^6 on the 512- and 4,096-zone ring worlds).
+PAIR_BUDGET = 1 << 16
+
+
+def csr_pairs(start: np.ndarray, count: np.ndarray, budget: int | None = None):
+    """Flat expansion of the CSR ranges [start[i], start[i] + count[i]):
+    yields (owner i, position) arrays of at most `budget` pairs each (one
+    piece when None; a single empty piece when there are no pairs).
+    Owners ascend within and across pieces."""
+    count = np.asarray(count, dtype=np.int64)
+    end = np.cumsum(count)
+    total = int(end[-1]) if len(end) else 0
+    step = budget or max(total, 1)
+    for lo in range(0, max(total, 1), step):
+        hi = min(total, lo + step)
+        # owners o0.. hold positions [lo, hi); c of them fall in the piece
+        o0, o1 = np.searchsorted(end, lo, side="right"), np.searchsorted(end, hi) + 1
+        c = np.minimum(end[o0:o1], hi) - np.maximum(end[o0:o1] - count[o0:o1], lo)
+        owner = np.repeat(np.arange(o0, o0 + len(c)), c)
+        yield owner, start[owner] + np.arange(lo, hi) - (end[owner] - count[owner])
+
+
+class RowEdges:
+    """A (zone, row) index over a zone-tagged edge soup (Raptor's row-wise
+    edge filter): each edge is listed under every latitude row of
+    resolution r that its y-range, widened by `pad` degrees, touches.
+    row(y) = floor((y + 90) / h), h = 180 / 2^r, is monotone in y, so
+    every edge that straddles a point's latitude, or comes within `pad`
+    degrees of it, is in the point's own (zone, row) bucket: a test over
+    that bucket gives the same answer, bit for bit, as a test over every
+    edge of the zone.
+
+    Zone z owns one bucket per row of its edges' row span [first[z],
+    first[z] + span): bucket base[z] + row - first[z] holds edges
+    off[b] : off[b + 1], so a lookup is gathers only, and the table
+    grows with the zones' heights in rows, not with zones x rows."""
+
+    def __init__(self, x1, y1, x2, y2, zone, n_zones: int, r: int, pad: float = 0.0):
+        self.r = r
+        zone = np.asarray(zone, dtype=np.int64)
+        j0 = self.row(np.minimum(y1, y2) - pad)
+        j1 = self.row(np.maximum(y1, y2) + pad)
+        self.first = np.full(n_zones, 1 << r, dtype=np.int64)
+        last = np.full(n_zones, -1, dtype=np.int64)
+        np.minimum.at(self.first, zone, j0)
+        np.maximum.at(last, zone, j1)
+        self.base = np.concatenate([[0], np.cumsum(np.maximum(last - self.first + 1, 0))])
+        e, j = next(csr_pairs(j0, j1 - j0 + 1))
+        b = self.base[zone[e]] + j - self.first[zone[e]]
+        self.off = np.concatenate([[0], np.cumsum(np.bincount(b, minlength=self.base[-1]))])
+        e = e[np.argsort(b, kind="stable")]
+        self.x1, self.y1, self.x2, self.y2 = x1[e], y1[e], x2[e], y2[e]
+
+    def row(self, y) -> np.ndarray:
+        top = (1 << self.r) - 1
+        return np.clip(np.floor((y + 90.0) / (180.0 / (1 << self.r))), 0, top).astype(np.int64)
+
+    def _pairs(self, zone, py):
+        """(pair, bucket edge) pieces of the (point, zone) pairs."""
+        k = self.row(py) - self.first[zone]
+        ok = (k >= 0) & (k < self.base[zone + 1] - self.base[zone])
+        b = np.where(ok, self.base[zone] + k, 0)
+        lo = self.off[b]
+        for c, e in csr_pairs(lo, self.off[b + ok] - lo, PAIR_BUDGET):
+            if len(c):
+                yield c, e
+
+    def inside(self, zone, px, py) -> np.ndarray:
+        """Even-odd test of each (point, zone) pair: bool per pair."""
+        odd = np.zeros(len(px), dtype=bool)
+        for c, e in self._pairs(zone, py):
+            hit = ray_crosses(px[c], py[c], self.x1[e], self.y1[e], self.x2[e], self.y2[e])
+            a, b = c[0], c[-1] + 1
+            odd[a:b] ^= (np.bincount(c[hit] - a, minlength=b - a) & 1).astype(bool)
+        return odd
+
+    def min_dist_m(self, zone, px, py, seam) -> np.ndarray:
+        """Least distance in meters from each (point, zone) pair's point
+        to the zone's bucket edges, also from the lon -+ 360 image of the
+        pairs flagged `seam` (the distance does not wrap the
+        antimeridian); inf for an empty bucket. Exact for every distance
+        the index's pad covers."""
+        d2 = np.full(len(px), np.inf)
+        for c, e in self._pairs(zone, py):
+            pxc, pyc = px[c], py[c]
+            ex1, ey1, ex2, ey2 = self.x1[e], self.y1[e], self.x2[e], self.y2[e]
+            d = pair_edge_d2(pxc, pyc, ex1, ey1, ex2, ey2)
+            sw = seam[c]
+            if sw.any():
+                pxw = pxc[sw]
+                d[sw] = np.minimum(d[sw], pair_edge_d2(
+                    pxw - np.sign(pxw) * 360.0, pyc[sw], ex1[sw], ey1[sw], ex2[sw], ey2[sw]))
+            first = np.flatnonzero(np.r_[True, c[1:] != c[:-1]])
+            own = c[first]
+            d2[own] = np.minimum(d2[own], np.minimum.reduceat(d, first))
+        return np.sqrt(d2) * EARTH_RADIUS_M
 
 
 # --------------------------------------------------------- distances (m)

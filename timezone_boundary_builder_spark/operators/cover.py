@@ -22,8 +22,9 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from ..geom.cellindex import cell_parent, cell_res, cover_polygons, csr_pairs, encode_points
-from ..geom.codec import from_geojson
+from ..geom.cellindex import cell_res, cover_polygons, edge_soup, encode_points
+from ..geom.codec import EMPTY, from_geojson
+from ..geom.kernels import RowEdges, csr_pairs
 
 COVER_SCHEMA = "tzid string, cell_id long, full boolean, res int"
 
@@ -164,7 +165,7 @@ def cellmap_from_zones_pdf(
     covers = pd.DataFrame(
         {"tzid": zp["tzid"].to_numpy()[zone], "cell_id": cells.astype(np.int64), "full": full}
     )
-    return CellMap(covers, zp)
+    return CellMap(covers, zp, geoms)
 
 
 class CellMap:
@@ -178,11 +179,15 @@ class CellMap:
                    on each executor, cached per process)
     """
 
-    def __init__(self, covers_pdf: pd.DataFrame, zones_pdf: pd.DataFrame):
+    def __init__(self, covers_pdf: pd.DataFrame, zones_pdf: pd.DataFrame, geoms=None):
         # sort zones by tzid: in legitimately-overlapping regions (expected
         # overlaps, reference expectedZoneOverlaps.json) the smallest tzid
-        # wins deterministically — engine and oracle share this rule
-        zones_pdf = zones_pdf.sort_values("tzid").reset_index(drop=True)
+        # wins deterministically — engine and oracle share this rule.
+        # `geoms`, the decoded geometries in zones_pdf's row order, ride
+        # through the sort as a column
+        if geoms is None:
+            geoms = [from_geojson(g) for g in zones_pdf["geometry"]]
+        zones_pdf = zones_pdf.assign(_geom=geoms).sort_values("tzid").reset_index(drop=True)
         self.tzids = list(zones_pdf["tzid"])
         self._tz_index = {t: i for i, t in enumerate(self.tzids)}
         self.geojson = list(zones_pdf["geometry"])
@@ -209,9 +214,9 @@ class CellMap:
         self.levels = np.unique(cell_res(cells)).tolist()
         self._geom_cache = None
         self._build_intervals()
-        self._build_knn_boxes()
+        self._build_knn_boxes(list(zones_pdf["_geom"]))
 
-    def _build_knn_boxes(self) -> None:
+    def _build_knn_boxes(self, geoms) -> None:
         """Per-POLYGON bboxes for the kNN prefilter. A whole-zone bbox is
         useless for antimeridian multipolygons (it spans the world, so every
         offshore point pays a distance computation); per-polygon boxes stay
@@ -219,8 +224,7 @@ class CellMap:
         lon pad (see _build_knn_grid), so they are valid at all latitudes."""
         boxes = []
         zone_of = []
-        for zi, gj in enumerate(self.geojson):
-            g = from_geojson(gj)
+        for zi, g in enumerate(geoms):
             for j in range(g.n_polys):
                 shell = g.ring(int(g.poly_offsets[j]))
                 boxes.append(
@@ -369,20 +373,22 @@ class CellMap:
         per-polygon box grid, never with ring complexity."""
         import copy
 
-        s = copy.copy(self)
+        s = copy.copy(self)  # through __getstate__: no per-process cache
         s.geojson = None
-        s._geom_cache = None
-        for attr in (
-            "_edge_cache",
-            "_edge_csr_cache",
-            "_edge_count_cache",
-            # derivable in one reduceat per process — keep it out of the
-            # shipped bytes
-            "_seg_min_cache",
-        ):
-            if hasattr(s, attr):
-                setattr(s, attr, None)
+        # derivable in one reduceat per process — keep it out of the
+        # shipped bytes
+        if hasattr(s, "_seg_min_cache"):
+            s._seg_min_cache = None
         return s
+
+    def __getstate__(self):
+        """Pickle (broadcast, copy) without the per-process caches: the
+        decoded geometries and the row-edge indexes are rebuilt on first
+        use wherever the map lands."""
+        state = dict(self.__dict__)
+        state["_geom_cache"] = None
+        state.pop("_row_edges", None)
+        return state
 
     def seg_min_candidates(self) -> np.ndarray:
         """Per-interval-segment MIN candidate zone index (BIG for empty
@@ -415,90 +421,16 @@ class CellMap:
             self._geom_cache = [from_geojson(g) for g in self.geojson]
         return self._geom_cache
 
-    def zone_edges(self):
-        """Per-zone cached edge arrays (x1, y1, x2, y2): building them on
-        every PIP/distance call costs a per-ring Python loop + allocations
-        that dominate when hundreds of zones are probed per batch."""
-        if getattr(self, "_edge_cache", None) is None:
-            from ..geom.kernels import _boundary_segments
-
-            cache = []
-            for g in self.geoms():
-                a, b = _boundary_segments(g)
-                cache.append((a[:, 0].copy(), a[:, 1].copy(), b[:, 0].copy(), b[:, 1].copy()))
-            self._edge_cache = cache
-        return self._edge_cache
-
-    def zone_edge_counts(self) -> np.ndarray:
-        """Per-zone edge counts (int64) — the regime test for the
-        pair-vectorized PIP path needs only these, never the flat soup,
-        so the per-zone branch must not pay edge_csr's full duplication
-        of the edge cache."""
-        if getattr(self, "_edge_count_cache", None) is None:
-            self._edge_count_cache = np.array(
-                [len(e[0]) for e in self.zone_edges()], dtype=np.int64
-            )
-        return self._edge_count_cache
-
-    def edge_csr(self):
-        """zone_edges flattened to one CSR edge soup (x1, y1, x2, y2,
-        offsets): the pair-vectorized PIP path indexes edges of many
-        zones in one numpy expression instead of one call per zone —
-        the dense-world regime (10^4+ zones, few candidate points per
-        zone per batch) where per-zone call overhead dominates."""
-        if getattr(self, "_edge_csr_cache", None) is None:
-            edges = self.zone_edges()
-            off = np.zeros(len(edges) + 1, dtype=np.int64)
-            off[1:] = np.cumsum([len(e[0]) for e in edges])
-            self._edge_csr_cache = (
-                np.concatenate([e[0] for e in edges]) if edges else np.zeros(0),
-                np.concatenate([e[1] for e in edges]) if edges else np.zeros(0),
-                np.concatenate([e[2] for e in edges]) if edges else np.zeros(0),
-                np.concatenate([e[3] for e in edges]) if edges else np.zeros(0),
-                off,
-            )
-        return self._edge_csr_cache
-
-    def lookup(self, lon: np.ndarray, lat: np.ndarray):
-        """Vectorized probe. Returns:
-        assigned int32[] — zone index from a FULL cell hit, -1 otherwise
-        cand_lists       — list (per point) of candidate zone-index arrays
-                           from BOUNDARY cell hits (empty list -> no hit)
-        """
-        n = len(lon)
-        big = np.iinfo(np.int32).max
-        assigned = np.full(n, big, dtype=np.int32)
-        cand: list = [None] * n
-        if not self.levels:
-            assigned[:] = -1
-            return assigned, cand
-        # encode once at the finest level; coarser ids are bit-shifts
-        # (cheap int ops instead of re-projecting floats per level)
-        finest = self.levels[-1]
-        finest_ids = encode_points(lon, lat, finest)
-        for lv in self.levels:
-            ids = finest_ids if lv == finest else cell_parent(finest_ids, finest - lv)
-            # full-cell matches: take the MIN zone index across all levels
-            # (overlapping zones can both claim a point via nested full
-            # cells; min = smallest tzid rule)
-            if len(self.full_cells):
-                lo = np.searchsorted(self.full_cells, ids, side="left")
-                hi = np.searchsorted(self.full_cells, ids, side="right")
-                multi = hi > lo
-                one = multi & (hi - lo == 1)
-                assigned[one] = np.minimum(assigned[one], self.full_tz[lo[one]])
-                for i in np.nonzero(multi & ~one)[0]:
-                    assigned[i] = min(assigned[i], int(self.full_tz[lo[i] : hi[i]].min()))
-            # boundary-cell matches (may be several tzids per cell)
-            if len(self.bnd_cells):
-                lo = np.searchsorted(self.bnd_cells, ids, side="left")
-                hi = np.searchsorted(self.bnd_cells, ids, side="right")
-                multi = hi > lo
-                for i in np.nonzero(multi)[0]:
-                    ext = self.bnd_tz[lo[i] : hi[i]]
-                    cand[i] = ext if cand[i] is None else np.concatenate([cand[i], ext])
-        assigned[assigned == big] = -1
-        return assigned, cand
+    def row_edges(self, pad: float = 0.0) -> RowEdges:
+        """Every zone's edges as a (zone, row) index at the finest cover
+        resolution, widened by `pad` degrees — the stage-2 PIP (pad 0)
+        and kNN kernel. Built once per process and pad."""
+        cache = self.__dict__.setdefault("_row_edges", {})
+        if pad not in cache:
+            gs = self.geoms() or [EMPTY]  # edge_soup needs one geometry
+            voff = np.concatenate([[0], np.cumsum([len(g.coords) for g in gs])]).astype(np.int64)
+            cache[pad] = RowEdges(*edge_soup(gs, voff)[:5], len(gs), self.finest, pad)
+        return cache[pad]
 
 
 def collect_cell_map(covers: DataFrame, zones: DataFrame) -> CellMap:

@@ -25,9 +25,10 @@ soup). This module removes the ceiling by splitting the map:
   stage 2     the residue (only) re-probes for its candidate pairs in a
               narrow pass, then pairs cogroup zone-edges by SHARD (a
               few hundred groups, never per-zone pandas groups): each
-              group rebuilds a local CSR soup and calls the SAME
-              pair_pip_inside / pair_min_dist_m kernels as the
-              broadcast path — one home, bit-identical results.
+              group indexes its local edge soup by (zone, row) at the
+              map's finest resolution and calls the SAME RowEdges
+              inside / min_dist_m kernel as the broadcast path — one
+              home, bit-identical results.
   winners     plain DataFrame aggregation — PIP: min containing zone
               (pre-filtered to z < full-hit zone, the overlap rule);
               kNN: smallest zone within 1e-9 m of the per-point min
@@ -62,7 +63,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import ByteType, IntegerType, StructField, StructType
 
 from ..geom.codec import from_geojson
-from ..geom.kernels import _boundary_segments
+from ..geom.kernels import RowEdges, _boundary_segments, csr_pairs
 from .spatial_join import (
     KNN_MAX_METERS,
     M_CELL,
@@ -73,8 +74,8 @@ from .spatial_join import (
     METHOD_NAMES,
     _band_edges,
     band_of,
-    pair_min_dist_m,
-    pair_pip_inside,
+    knn_pad_deg,
+    probe_pairs,
     seam_mask,
 )
 
@@ -198,114 +199,69 @@ def zone_edges_frame(zones: DataFrame, tzids_bc, n_shards: int = DEFAULT_SHARDS)
     return zones.select("tzid", "geometry").mapInPandas(_edges, schema)
 
 
-def _local_soup(edges_pdf: pd.DataFrame):
-    """One shard's edge rows -> (sorted zone ids, local CSR soup)."""
+def _local_edges(edges_pdf: pd.DataFrame, res: int, pad: float):
+    """One shard's edge rows -> (sorted zone ids, RowEdges over the
+    local zone numbers at resolution res, widened by pad degrees)."""
     order = np.argsort(edges_pdf["zone_id"].to_numpy())
     zvals = edges_pdf["zone_id"].to_numpy()[order]
-    xs1 = [np.asarray(edges_pdf["x1"].iloc[i], dtype=np.float64) for i in order]
-    ys1 = [np.asarray(edges_pdf["y1"].iloc[i], dtype=np.float64) for i in order]
-    xs2 = [np.asarray(edges_pdf["x2"].iloc[i], dtype=np.float64) for i in order]
-    ys2 = [np.asarray(edges_pdf["y2"].iloc[i], dtype=np.float64) for i in order]
-    eoff = np.zeros(len(zvals) + 1, dtype=np.int64)
-    eoff[1:] = np.cumsum([len(a) for a in xs1])
-    return zvals, (
-        np.concatenate(xs1) if xs1 else np.zeros(0),
-        np.concatenate(ys1) if ys1 else np.zeros(0),
-        np.concatenate(xs2) if xs2 else np.zeros(0),
-        np.concatenate(ys2) if ys2 else np.zeros(0),
-        eoff,
-    )
+    cols = [edges_pdf[c].to_numpy()[order] for c in ("x1", "y1", "x2", "y2")]
+    zone = np.repeat(np.arange(len(zvals)), [len(a) for a in cols[0]])
+    soup = [np.concatenate(c).astype(np.float64) for c in cols]
+    return zvals, RowEdges(*soup, zone, len(zvals), res, pad)
 
 
-def _pair_local(pairs_pdf: pd.DataFrame, zvals: np.ndarray):
-    """Map pair rows onto a shard's local zone indexing; drops pairs whose
-    zone has no edge row (zero-edge zones — same as the broadcast pair
-    path's nzm mask)."""
-    pz_global = pairs_pdf["code"].to_numpy(dtype=np.int64)
-    li = np.searchsorted(zvals, pz_global)
-    ok = (li < len(zvals)) & (zvals[np.minimum(li, len(zvals) - 1)] == pz_global)
-    return pz_global, li, ok
+def _local_pairs(pairs_pdf: pd.DataFrame, zvals: np.ndarray):
+    """Pair rows on a shard's local zone numbering. Keeps the pairs whose
+    zone has edge rows (zero-edge zones have none); returns (keep mask,
+    global zone, local zone, pt_id, lon, lat) of the kept pairs."""
+    pz = pairs_pdf["code"].to_numpy(dtype=np.int64)
+    li = np.searchsorted(zvals, pz)
+    ok = (li < len(zvals)) & (zvals[np.minimum(li, len(zvals) - 1)] == pz)
+    pid = pairs_pdf["pt_id"].to_numpy(dtype=np.int64)[ok]
+    px = pairs_pdf["lon"].to_numpy(dtype=np.float64)[ok]
+    py = pairs_pdf["lat"].to_numpy(dtype=np.float64)[ok]
+    return ok, pz[ok], li[ok], pid, px, py
 
 
-def _pip_eval(pairs_pdf: pd.DataFrame, edges_pdf: pd.DataFrame) -> pd.DataFrame:
+def _make_pip_eval(res: int):
     """(point, zone) pairs x one shard's edges -> rows for pairs whose
-    point lies INSIDE the zone (pair_pip_inside — the broadcast stage-2
-    kernel, so results are bit-identical by construction)."""
-    empty = pd.DataFrame(
-        {"pt_id": pd.Series(dtype="int64"), "zone_id": pd.Series(dtype="int32")}
-    )
-    if not len(pairs_pdf) or not len(edges_pdf):
-        return empty
-    zvals, (ex1, ey1, ex2, ey2, eoff) = _local_soup(edges_pdf)
-    pz_global, li, ok = _pair_local(pairs_pdf, zvals)
-    if not ok.any():
-        return empty
-    px = pairs_pdf["lon"].to_numpy(dtype=np.float64)[ok]
-    py = pairs_pdf["lat"].to_numpy(dtype=np.float64)[ok]
-    pid = pairs_pdf["pt_id"].to_numpy(dtype=np.int64)[ok]
-    inside = pair_pip_inside(px, py, li[ok], eoff, ex1, ey1, ex2, ey2)
-    return pd.DataFrame(
-        {
-            "pt_id": pid[inside],
-            "zone_id": pz_global[ok][inside].astype(np.int32),
-        }
-    )
+    point lies INSIDE the zone: RowEdges.inside, the broadcast stage-2
+    kernel, so results are bit-identical by construction."""
+
+    def _pip_eval(pairs_pdf: pd.DataFrame, edges_pdf: pd.DataFrame) -> pd.DataFrame:
+        if not len(pairs_pdf) or not len(edges_pdf):
+            return pd.DataFrame(
+                {"pt_id": pd.Series(dtype="int64"), "zone_id": pd.Series(dtype="int32")}
+            )
+        zvals, rows = _local_edges(edges_pdf, res, 0.0)
+        _, pz, li, pid, px, py = _local_pairs(pairs_pdf, zvals)
+        inside = rows.inside(li, px, py)
+        return pd.DataFrame({"pt_id": pid[inside], "zone_id": pz[inside].astype(np.int32)})
+
+    return _pip_eval
 
 
-def _knn_eval(pairs_pdf: pd.DataFrame, edges_pdf: pd.DataFrame) -> pd.DataFrame:
+def _make_knn_eval(res: int, knn_max_m: float):
     """(point, zone) kNN pairs x one shard's edges -> per-pair boundary
-    distance in meters (pair_min_dist_m — shared with the broadcast kNN
-    pair path, antimeridian wrap included)."""
-    empty = pd.DataFrame(
-        {
-            "pt_id": pd.Series(dtype="int64"),
-            "zone_id": pd.Series(dtype="int32"),
-            "dist": pd.Series(dtype="float64"),
-        }
-    )
-    if not len(pairs_pdf) or not len(edges_pdf):
-        return empty
-    zvals, (ex1, ey1, ex2, ey2, eoff) = _local_soup(edges_pdf)
-    pz_global, li, ok = _pair_local(pairs_pdf, zvals)
-    if not ok.any():
-        return empty
-    px = pairs_pdf["lon"].to_numpy(dtype=np.float64)[ok]
-    py = pairs_pdf["lat"].to_numpy(dtype=np.float64)[ok]
-    pid = pairs_pdf["pt_id"].to_numpy(dtype=np.int64)[ok]
-    seam = pairs_pdf["seam"].to_numpy(dtype=bool)[ok]
-    d = pair_min_dist_m(px, py, seam, li[ok], eoff, ex1, ey1, ex2, ey2)
-    return pd.DataFrame(
-        {"pt_id": pid, "zone_id": pz_global[ok].astype(np.int32), "dist": d}
-    )
+    distance in meters: RowEdges.min_dist_m with the broadcast kNN's pad,
+    antimeridian wrap included."""
 
+    def _knn_eval(pairs_pdf: pd.DataFrame, edges_pdf: pd.DataFrame) -> pd.DataFrame:
+        if not len(pairs_pdf) or not len(edges_pdf):
+            return pd.DataFrame(
+                {
+                    "pt_id": pd.Series(dtype="int64"),
+                    "zone_id": pd.Series(dtype="int32"),
+                    "dist": pd.Series(dtype="float64"),
+                }
+            )
+        zvals, rows = _local_edges(edges_pdf, res, knn_pad_deg(knn_max_m))
+        ok, pz, li, pid, px, py = _local_pairs(pairs_pdf, zvals)
+        seam = pairs_pdf["seam"].to_numpy(dtype=bool)[ok]
+        d = rows.min_dist_m(li, px, py, seam)
+        return pd.DataFrame({"pt_id": pid, "zone_id": pz.astype(np.int32), "dist": d})
 
-def _probe_residue(cm, lon, lat):
-    """Shared stage-1 arithmetic: probe + candidate expansion + the
-    overlap pre-filter (keep only candidates with zone < full-hit zone).
-    Returns (apt int64 per point, pair_pt, pair_z, unresolved mask)."""
-    full_tz, seg = cm.probe(lon, lat)
-    apt = np.where(full_tz == BIG, -1, full_tz).astype(np.int64)
-    off = cm.ivl_cand_off
-    czs = cm.ivl_cand_tz
-    cnt = off[seg + 1] - off[seg]
-    p_idx = np.nonzero(cnt > 0)[0]
-    pair_pt = np.zeros(0, dtype=np.int64)
-    pair_z = np.zeros(0, dtype=np.int64)
-    if len(p_idx):
-        p_cnt = cnt[p_idx]
-        total = int(p_cnt.sum())
-        pair_pt = np.repeat(p_idx, p_cnt)
-        intra = np.arange(total, dtype=np.int64) - np.repeat(
-            np.cumsum(p_cnt) - p_cnt, p_cnt
-        )
-        pair_z = czs[np.repeat(off[seg[p_idx]], p_cnt) + intra].astype(np.int64)
-        a_pt = apt[pair_pt]
-        keep = (a_pt < 0) | (pair_z < a_pt)
-        pair_pt, pair_z = pair_pt[keep], pair_z[keep]
-    unresolved = np.zeros(len(lon), dtype=bool)
-    unresolved[pair_pt] = True
-    unresolved |= apt < 0  # cell miss: must reach the kNN stage
-    return apt, pair_pt, pair_z, unresolved
+    return _knn_eval
 
 
 def _make_stage1_fn(slim_bc):
@@ -357,7 +313,7 @@ def _make_pip_pairs_fn(slim_bc):
             lon = pdf["lon"].to_numpy(dtype=np.float64)
             lat = pdf["lat"].to_numpy(dtype=np.float64)
             pid = pdf["pt_id"].to_numpy(dtype=np.int64)
-            _, pair_pt, pair_z, _ = _probe_residue(cm, lon, lat)
+            _, pair_pt, pair_z = probe_pairs(cm, lon, lat)
             yield pd.DataFrame(
                 {
                     "pt_id": pid[pair_pt],
@@ -437,15 +393,8 @@ def _make_knn_probe_fn(slim_bc, band_edges: np.ndarray, n_bands: int, knn_max_m:
                     ocean_m[kp],
                     seam[kp],
                 )
-                p_cnt = kcnt[kp]
-                total = int(p_cnt.sum())
-                pair_pt = np.repeat(kp, p_cnt)
-                intra = np.arange(total, dtype=np.int64) - np.repeat(
-                    np.cumsum(p_cnt) - p_cnt, p_cnt
-                )
-                pair_z = cm.knn_grid_tz[np.repeat(k0[kp], p_cnt) + intra].astype(
-                    np.int64
-                )
+                pair_pt, pos = next(csr_pairs(k0, kcnt))
+                pair_z = cm.knn_grid_tz[pos].astype(np.int64)
                 emit(
                     pid[pair_pt],
                     K_PAIR,
@@ -528,7 +477,7 @@ def assign_tzid_sharded(
     pip_win = (
         pip_pairs.groupby("shard")
         .cogroup(edges.groupby("shard"))
-        .applyInPandas(_pip_eval, PIP_EVAL_SCHEMA)
+        .applyInPandas(_make_pip_eval(cm.finest), PIP_EVAL_SCHEMA)
         .groupBy("pt_id")
         .agg(F.min("zone_id").alias("zwin"))
     )
@@ -570,7 +519,7 @@ def assign_tzid_sharded(
     ev = (
         knn_pairs.groupby("shard")
         .cogroup(edges.groupby("shard"))
-        .applyInPandas(_knn_eval, KNN_EVAL_SCHEMA)
+        .applyInPandas(_make_knn_eval(cm.finest, knn_max_m), KNN_EVAL_SCHEMA)
         .withColumn("dmin", F.min("dist").over(Window.partitionBy("pt_id")))
     )
     knn_win = (

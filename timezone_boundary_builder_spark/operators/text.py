@@ -127,11 +127,8 @@ GOPHER_STATS_SCHEMA = (
     "n_grams int, top_gram int"
 )
 def gopher_stats_udf():
-    """Per-call factory for the stats pandas UDF. Marked nondeterministic
-    (guide §4.4): the value IS deterministic, but the marker (a) stops
-    the optimizer duplicating the UDF below a pushed-down filter and (b)
-    stops threshold predicates over its output being pushed below the
-    parallelism-spreading exchange onto the single-task test scan."""
+    """Per-call factory for the stats pandas UDF (marked nondeterministic;
+    see the note at its return)."""
     from pyspark.sql.functions import pandas_udf
 
     stopset = frozenset(STOPWORDS)
@@ -178,6 +175,17 @@ def gopher_stats_udf():
             ],
         )
 
+    # asNondeterministic: the UDF IS deterministic (a pure function of
+    # the text), but left deterministic Catalyst (a) duplicates it below
+    # a pushed-down filter — one Python evaluation for the filter, one
+    # for the projection — and (b) pushes threshold predicates over its
+    # output below the parallelism-spreading exchange, onto the
+    # single-task scan. Nondeterministic expressions are excluded from
+    # predicate pushdown, project collapsing and constraint inference,
+    # which cuts both off. The marker is therefore an optimizer barrier
+    # for every query that composes these stats: filters on its output
+    # stay above the UDF's project and prune nothing below it, so put a
+    # cheap predicate on the input columns before the UDF, not after.
     return _stats.asNondeterministic()
 
 

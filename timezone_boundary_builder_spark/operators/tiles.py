@@ -26,9 +26,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..geom.boolean import clip_to_box
-from ..geom.cellindex import cell_bounds, cell_res, cover_polygon, cover_polygons, csr_pairs
+from ..geom.cellindex import cell_bounds, cell_res, cover_polygon, cover_polygons
 from ..geom.codec import from_geojson, to_geojson
-from ..geom.kernels import make_box, planar_area
+from ..geom.kernels import csr_pairs, make_box, planar_area
 
 RASTER_SCHEMA = "cell_id long, res int, tzid string, coverage string"
 VECTOR_SCHEMA = "cell_id long, res int, tzid string, geometry string"

@@ -575,44 +575,3 @@ def dense_zone_world(nx: int = 100, ny: int = 100, seed: int = 11) -> pd.DataFra
                 }
             )
     return pd.DataFrame(rows)
-
-
-def dense_world_points(
-    world: pd.DataFrame, nx: int, ny: int, n: int, seed: int = 13
-) -> pd.DataFrame:
-    """Deterministic sample points strictly interior to known zones of a
-    dense_zone_world: point k lives in lattice cell (i,j) at bilinear
-    coordinates (u,v) in [0.25,0.75]^2 of the cell's four corners — for a
-    convex quad the bilinear patch IS the quad, so the expected tzid is
-    known by construction (no PIP needed to label the sample).
-
-    Columns: url (synthetic key), lon, lat, expect_tzid.
-    """
-    rng = np.random.default_rng(seed)
-    ii = rng.integers(0, nx, size=n)
-    jj = rng.integers(0, ny, size=n)
-    u = 0.25 + 0.5 * rng.random(n)
-    v = 0.25 + 0.5 * rng.random(n)
-    # corner coordinates come from each quad's own ring (row-major order
-    # j * nx + i), so the sample stays valid even if the frame is re-sorted
-    geo = world["geometry"].to_numpy()
-    lon = np.empty(n)
-    lat = np.empty(n)
-    for k in range(n):
-        ring = json.loads(geo[jj[k] * nx + ii[k]])["coordinates"][0]
-        (x0, y0), (x1, y1), (x2, y2), (x3, y3) = ring[0], ring[1], ring[2], ring[3]
-        uu, vv = u[k], v[k]
-        lon[k] = (1 - uu) * (1 - vv) * x0 + uu * (1 - vv) * x1 + uu * vv * x2 + (1 - uu) * vv * x3
-        lat[k] = (1 - uu) * (1 - vv) * y0 + uu * (1 - vv) * y1 + uu * vv * y2 + (1 - uu) * vv * y3
-    # snap to the engine's 1e-6 coordinate grid (packed codec)
-    lon = np.round(lon * 1e6) / 1e6
-    lat = np.round(lat * 1e6) / 1e6
-    expect = world["tzid"].to_numpy()[jj * nx + ii]
-    return pd.DataFrame(
-        {
-            "url": [f"https://dense.example/{k}" for k in range(n)],
-            "lon": lon,
-            "lat": lat,
-            "expect_tzid": expect,
-        }
-    )
