@@ -140,9 +140,9 @@ def _all_edges_values_sql() -> str:
 def _knn_assign_sql() -> str:
     """Full-path oracle incl. the kNN/1852 m territorial-waters rule: the
     same per-point equirectangular segment-distance formula the numpy
-    kernel evaluates (point_segment_distance_m), with the same tie rule
-    (within 1e-9 m -> smallest tzid; zone index order IS tzid order
-    because _local_zones sorts by tzid)."""
+    kernel evaluates (RowEdges.min_dist_m / pair_edge_d2), with the same
+    tie rule (within 1e-9 m -> smallest tzid; zone index order IS tzid
+    order because _local_zones sorts by tzid)."""
     return f"""
 WITH pts AS ({_PTS_SQL}),
 hits AS (
@@ -1826,7 +1826,7 @@ def _pii_redact_sql() -> str:
 
 
 def _q_events_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Windowed aggregation (the batch twin of the streaming op)."""
+    """Windowed aggregation: events per (1-hour tumbling window, event_type)."""
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     return (
         ev.groupBy(F.window("ts", "1 hour"), "event_type")

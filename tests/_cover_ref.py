@@ -6,9 +6,17 @@ per-level probe that the CellMap's Morton-interval probe replaced."""
 
 import numpy as np
 
-from timezone_boundary_builder_spark.geom.cellindex import cell_bounds, cell_parent, cell_res, encode_points
+from timezone_boundary_builder_spark.geom.cellindex import cell_bounds, cell_res, encode_points
 from timezone_boundary_builder_spark.geom.codec import PackedGeometry
 from timezone_boundary_builder_spark.geom.kernels import points_in_packed
+
+
+def cell_parent(cell: np.ndarray | int, steps: int = 1):
+    c = np.asarray(cell, dtype=np.uint64)
+    r = cell_res(c)
+    code = c & np.uint64((1 << 58) - 1)
+    code = code >> (np.uint64(2) * np.asarray(steps, dtype=np.uint64))
+    return code | ((r - steps).astype(np.uint64) << np.uint64(58))
 
 
 def cell_children(cell: int) -> np.ndarray:

@@ -92,10 +92,30 @@ def min_distance_edges_m(px, py, ax, ay, bx, by) -> np.ndarray:
     return out * EARTH_RADIUS_M
 
 
+def _boundary_segments(geom):
+    """(starts, ends) vertex arrays of every boundary edge of a
+    PackedGeometry, one ring at a time: edge i runs from vertex i to the
+    next vertex of its ring, the last one back to the ring's first."""
+    coords = geom.coords
+    ends = np.empty_like(coords)
+    ro = geom.ring_offsets
+    for i in range(geom.n_rings):
+        a, b = ro[i], ro[i + 1]
+        ends[a : b - 1] = coords[a + 1 : b]
+        ends[b - 1] = coords[a]
+    return coords, ends
+
+
+def min_distance_to_boundary_m(points: np.ndarray, geom) -> np.ndarray:
+    """Distance in meters from each (lon, lat) point to the polygon
+    boundary (0 is not special-cased for interior points)."""
+    a, b = _boundary_segments(geom)
+    return min_distance_edges_m(points[:, 0], points[:, 1], a[:, 0], a[:, 1], b[:, 0], b[:, 1])
+
+
 def zone_edges(cm) -> list:
     """Per-zone (x1, y1, x2, y2) edge arrays of a CellMap."""
     from timezone_boundary_builder_spark.geom.codec import from_geojson
-    from timezone_boundary_builder_spark.geom.kernels import _boundary_segments
 
     out = []
     for gj in cm.geojson:

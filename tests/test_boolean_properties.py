@@ -120,9 +120,7 @@ def simple_star_and_box(draw):
 def test_fractional_star_polygon_boolean_consistency(abx):
     """Fractional (2-decimal) coordinates: inclusion-exclusion to snap-grid
     tolerance AND pointwise PIP consistency away from boundaries."""
-    from timezone_boundary_builder_spark.geom.kernels import (
-        min_distance_to_boundary_m,
-    )
+    from tests._kernel_ref import min_distance_to_boundary_m
 
     a, b, seed = abx
     u, i, d = union(a, b), intersection(a, b), difference(a, b)

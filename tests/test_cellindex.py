@@ -4,10 +4,9 @@ covering invariants (SURVEY.md §5: cover-then-PIP == direct PIP)."""
 import numpy as np
 import pytest
 
-from _cover_ref import cell_children
+from _cover_ref import cell_children, cell_parent
 from timezone_boundary_builder_spark.geom.cellindex import (
     cell_bounds,
-    cell_parent,
     cell_res,
     cover_polygon,
     encode_points,

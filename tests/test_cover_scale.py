@@ -25,7 +25,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from tests._kernel_ref import assign_codes_ref, zone_edges
+from tests._kernel_ref import _boundary_segments, assign_codes_ref, zone_edges
 from timezone_boundary_builder_spark.geom import kernels
 from timezone_boundary_builder_spark.geom.codec import from_geojson
 from timezone_boundary_builder_spark.operators.cover import (
@@ -168,8 +168,8 @@ def adversarial_points(cm, n_vertices: int = 2_000, seed: int = 0):
     or next to the antimeridian."""
     rng = np.random.default_rng(seed)
     gs = [from_geojson(g) for g in cm.geojson]
-    a = np.concatenate([kernels._boundary_segments(g)[0] for g in gs])
-    b = np.concatenate([kernels._boundary_segments(g)[1] for g in gs])
+    a = np.concatenate([_boundary_segments(g)[0] for g in gs])
+    b = np.concatenate([_boundary_segments(g)[1] for g in gs])
     pick = rng.choice(len(a), min(n_vertices, len(a)), replace=False)
     flat = np.flatnonzero(a[:, 1] == b[:, 1])[:n_vertices]
     pts = [a[pick], (a[pick] + b[pick]) / 2.0, (a[flat] + b[flat]) / 2.0,

@@ -7,6 +7,7 @@ import math
 import numpy as np
 import pytest
 
+from tests._kernel_ref import min_distance_to_boundary_m
 from timezone_boundary_builder_spark.geom import from_geojson, to_geojson
 from timezone_boundary_builder_spark.geom.boolean import (
     difference,
@@ -21,7 +22,6 @@ from timezone_boundary_builder_spark.geom.kernels import (
     geodesic_area_m2,
     geom_hash,
     make_box,
-    min_distance_to_boundary_m,
     planar_area,
     points_in_packed,
     ring_interior_point,

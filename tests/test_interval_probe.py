@@ -141,9 +141,7 @@ def test_many_zones_knn_matches_brute_force(many_zone_cm):
     """Grid-CSR kNN prefilter at 100 zones: offshore points within/beyond
     1852 m of the lattice's west edge must match a brute-force min-distance
     oracle over ALL zones."""
-    from timezone_boundary_builder_spark.geom.kernels import (
-        min_distance_to_boundary_m,
-    )
+    from tests._kernel_ref import min_distance_to_boundary_m
 
     cm, zones_pdf = many_zone_cm
     rng = np.random.default_rng(17)
@@ -285,9 +283,7 @@ def test_polar_band_soak_matches_brute_force():
     zones (including seam-adjacent ones, both hemispheres) must match a
     brute-force oracle over ALL zones with explicit lon+-360 wrap —
     interior, kNN-within-1852 m, and ocean rows alike."""
-    from timezone_boundary_builder_spark.geom.kernels import (
-        min_distance_to_boundary_m,
-    )
+    from tests._kernel_ref import min_distance_to_boundary_m
 
     rows = []
     for k in range(12):

@@ -17,7 +17,7 @@ import pandas as pd
 import pytest
 
 from timezone_boundary_builder_spark.operators.cover import cellmap_from_zones_pdf
-from tests._kernel_ref import kernel_assign
+from tests._kernel_ref import kernel_assign, zone_edges
 from timezone_boundary_builder_spark.operators.spatial_join import (
     assign_tzid_udf_packed,
     pack_coords_col,
@@ -128,6 +128,30 @@ def test_sharded_stage1_staging_write_matches_persist(spark, tmp_path):
     # one stage-1 row per input row: the staging table IS the resumable
     # full-size materialization
     assert s1.count() == len(ref)
+
+
+@pytest.mark.parametrize("world", ["fixture", "ring_512x64"])
+def test_zone_edges_frame_equals_per_zone_reference(spark, world):
+    """zone_edges_frame builds a batch's edges with one edge soup and
+    splits it per zone; every zone's (x1, y1, x2, y2) must equal the
+    per-ring reference array for array. The fixture world has holed zones
+    (Test/Charlie, Test/Echo) and multipolygons (Test/Bravo,
+    Test/Foxtrot); the ring world is the benchmark's dense one."""
+    from perfbench.gen import ring_heavy_world
+
+    zones_pdf = local_zones() if world == "fixture" else ring_heavy_world(32, 16, 64, 1)["table"]
+    cm = cellmap_from_zones_pdf(zones_pdf, max_res=6)
+    tz_bc = spark.sparkContext.broadcast(list(cm.tzids))
+    # two partitions, so each Arrow batch carries many zones
+    zones_df = spark.createDataFrame(zones_pdf[["tzid", "geometry"]]).coalesce(2)
+    got = zone_edges_frame(zones_df, tz_bc, n_shards=16).toPandas()
+    tz_bc.destroy()
+    ref = zone_edges(cm)
+    assert sorted(got["zone_id"]) == list(range(len(ref)))
+    for r in got.itertuples():
+        assert r.shard == r.zone_id % 16
+        for col, want in zip(("x1", "y1", "x2", "y2"), ref[r.zone_id]):
+            np.testing.assert_array_equal(np.asarray(getattr(r, col)), want)
 
 
 def test_sharded_overlap_tiebreak_smallest_tzid(spark):

@@ -1,4 +1,5 @@
-"""Structured Streaming + multimodal operator tests."""
+"""Multimodal operator tests: HTML meta, the PNG codec and image ops,
+IVF/LSH ANN search and embedding near-duplicates."""
 
 import numpy as np
 import pandas as pd
@@ -11,99 +12,7 @@ from timezone_boundary_builder_spark.operators.multimodal import (
     extract_html_meta,
     resize_images,
 )
-from timezone_boundary_builder_spark.sources.fixtures import (
-    OCEAN_BANDS,
-    synthetic_pages,
-)
-from timezone_boundary_builder_spark.streaming.assign_stream import (
-    stream_assign,
-    stream_event_counts,
-)
-
-
-def test_stream_assign_matches_batch(spark, tmp_path):
-    pages_pdf = synthetic_pages(n=400, seed=3).drop(columns=["kind"])
-    src = str(tmp_path / "src")
-    sink = str(tmp_path / "sink")
-    ckpt = str(tmp_path / "ckpt")
-    spark.createDataFrame(pages_pdf).write.parquet(src)
-
-    bc = spark.sparkContext.broadcast(entry._local_cellmap())
-    q = stream_assign(spark, src, sink, ckpt, bc, OCEAN_BANDS)
-    q.awaitTermination(300)
-
-    got = spark.read.parquet(sink).toPandas().sort_values("url").reset_index(drop=True)
-    assert len(got) == 400
-
-    # batch reference: identical operator on the same rows
-    from timezone_boundary_builder_spark.operators.geocode import with_coordinates
-    from timezone_boundary_builder_spark.operators.spatial_join import (
-        assign_tzid_udf_packed,
-        pack_coords_col,
-    )
-
-    batch = (
-        assign_tzid_udf_packed(
-            with_coordinates(spark.read.parquet(src)).select(
-                "url", pack_coords_col()
-            ),
-            bc,
-            OCEAN_BANDS,
-        )
-        .toPandas()
-        .sort_values("url")
-        .reset_index(drop=True)
-    )
-    pd.testing.assert_frame_equal(got[["url", "tzid", "method"]], batch[["url", "tzid", "method"]])
-
-    # restart with same checkpoint + no new files -> no duplicate output
-    q2 = stream_assign(spark, src, sink, ckpt, bc, OCEAN_BANDS)
-    q2.awaitTermination(120)
-    assert spark.read.parquet(sink).count() == 400
-
-    # second tranche lands in the source dir; a third restart from the
-    # SAME checkpoint processes exactly the delta (exactly-once across
-    # restarts: 400 old rows untouched, 150 new rows appear once)
-    tranche2 = synthetic_pages(n=150, seed=11).drop(columns=["kind"])
-    tranche2["url"] = "t2-" + tranche2["url"].astype(str)
-    spark.createDataFrame(tranche2).write.mode("append").parquet(src)
-    q3 = stream_assign(spark, src, sink, ckpt, bc, OCEAN_BANDS)
-    q3.awaitTermination(120)
-    out = spark.read.parquet(sink).toPandas()
-    assert len(out) == 550 and out.url.nunique() == 550
-    assert (out.url.str.startswith("t2-")).sum() == 150
-
-
-def test_stream_event_counts_matches_batch(spark, tmp_path):
-    src = str(tmp_path / "events")
-    ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-    ev.write.parquet(src)
-    stream_df = stream_event_counts(spark, src, str(tmp_path / "ck2"), window="1 hour")
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName("evt_counts")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    got = spark.sql("select * from evt_counts").toPandas()
-    exp = (
-        ev.groupBy(F.window("ts", "1 hour"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n_events"), F.round(F.sum("value"), 6).alias("sum_value"))
-        .select(
-            F.col("window.start").alias("win_start"),
-            F.col("window.end").alias("win_end"),
-            "event_type",
-            "n_events",
-            "sum_value",
-        )
-        .toPandas()
-    )
-    key = ["win_start", "win_end", "event_type"]
-    got = got.sort_values(key).reset_index(drop=True)
-    exp = exp.sort_values(key).reset_index(drop=True)
-    pd.testing.assert_frame_equal(got, exp, check_dtype=False)
+from timezone_boundary_builder_spark.sources.fixtures import synthetic_pages
 
 
 def test_html_meta_real_operator(spark):
@@ -693,143 +602,3 @@ def test_embed_neardup_pairs_verified(spark):
     assert (pairs.cosine >= 0.3).all()
     assert (pairs.id_a < pairs.id_b).all()
     assert not pairs.duplicated(["id_a", "id_b"]).any()
-
-
-def test_stream_dedup_first_seen_stateful(spark, tmp_path):
-    """applyInPandasWithState: a fingerprint is emitted exactly once across
-    micro-batches AND across query restarts (state lives in the checkpoint)."""
-    from timezone_boundary_builder_spark.streaming.assign_stream import (
-        stream_dedup_first_seen,
-    )
-
-    src = str(tmp_path / "src")
-    sink = str(tmp_path / "sink")
-    ckpt = str(tmp_path / "ckpt")
-
-    def pages(rows):
-        pdf = pd.DataFrame(
-            rows, columns=["url", "warc_ts", "text"]
-        ).assign(
-            html=lambda d: d.text.str.encode("utf8"),
-            lang="en",
-            warc_ts=lambda d: pd.to_datetime(d.warc_ts),
-        )
-        return spark.createDataFrame(pdf[["url", "warc_ts", "html", "text", "lang"]])
-
-    # batch 1: A twice (later ts dup), B once
-    pages(
-        [
-            ("u1", "2026-01-01 10:00", "Hello   World"),
-            ("u2", "2026-01-01 11:00", "hello world"),  # dup of u1 normalized
-            ("u3", "2026-01-01 09:00", "foo bar"),
-        ]
-    ).write.parquet(src)
-    q = stream_dedup_first_seen(spark, src, sink, ckpt)
-    q.awaitTermination(300)
-    got = spark.read.parquet(sink).toPandas().sort_values("keep_url")
-    assert list(got["keep_url"]) == ["u1", "u3"]  # earliest (warc_ts, url) wins
-
-    # restart: B duplicated again + new doc C -> only C appended
-    pages(
-        [
-            ("u4", "2026-01-02 00:00", "FOO BAR"),  # dup of u3
-            ("u5", "2026-01-02 00:00", "brand new"),
-        ]
-    ).write.mode("append").parquet(src)
-    q2 = stream_dedup_first_seen(spark, src, sink, ckpt)
-    q2.awaitTermination(300)
-    got2 = spark.read.parquet(sink).toPandas().sort_values("keep_url")
-    assert list(got2["keep_url"]) == ["u1", "u3", "u5"]
-    assert len(got2) == 3
-
-
-def test_stream_dedup_state_ttl_eviction(spark, tmp_path):
-    """ProcessingTimeTimeout: after the TTL a fingerprint's state is
-    evicted, so a later recurrence is treated as new (bounded-state mode).
-
-    A TTL-holding stateful query is a CONTINUOUS query — Spark keeps
-    running empty micro-batches to fire pending timeouts, so availableNow
-    never self-terminates; the test drives the lifecycle explicitly."""
-    import time as _time
-
-    from timezone_boundary_builder_spark.streaming.assign_stream import (
-        stream_dedup_first_seen,
-    )
-
-    src = str(tmp_path / "src")
-    sink = str(tmp_path / "sink")
-    ckpt = str(tmp_path / "ckpt")
-    ttl_min = 1.5 / 60.0  # 1.5 s
-
-    def pages(rows, mode):
-        pdf = pd.DataFrame(rows, columns=["url", "warc_ts", "text"]).assign(
-            html=lambda d: d.text.str.encode("utf8"),
-            lang="en",
-            warc_ts=lambda d: pd.to_datetime(d.warc_ts),
-        )
-        spark.createDataFrame(
-            pdf[["url", "warc_ts", "html", "text", "lang"]]
-        ).write.mode(mode).parquet(src)
-
-    def sink_urls():
-        try:
-            return set(spark.read.parquet(sink).toPandas()["keep_url"])
-        except Exception:
-            return set()
-
-    def run_until(expected: set, grace_s: float = 0.0, timeout_s: float = 120.0):
-        q = stream_dedup_first_seen(
-            spark, src, sink, ckpt, state_ttl_minutes=ttl_min
-        )
-        t0 = _time.time()
-        while _time.time() - t0 < timeout_s and not expected <= sink_urls():
-            _time.sleep(1)
-        assert expected <= sink_urls(), (expected, sink_urls())
-        if grace_s:
-            _time.sleep(grace_s)  # let pending state timeouts fire
-        q.stop()
-        q.awaitTermination(60)
-
-    pages([("u1", "2026-01-01 10:00", "alpha text")], "overwrite")
-    run_until({"u1"})
-
-    _time.sleep(3)  # u1's state passes its TTL while no query runs
-    pages([("u2", "2026-01-01 11:00", "beta text")], "append")
-    # the empty batches after u2 fire u1's timeout -> state evicted
-    run_until({"u1", "u2"}, grace_s=6.0)
-
-    pages([("u3", "2026-01-01 12:00", "ALPHA   TEXT")], "append")  # dup of u1
-    run_until({"u1", "u2", "u3"})
-    assert sorted(sink_urls()) == ["u1", "u2", "u3"]
-
-
-def test_stream_sessions_matches_batch(spark, tmp_path):
-    """Native session_window (merging stateful windows) on a stream must
-    reproduce the identical operator tree on a static read."""
-    from timezone_boundary_builder_spark.streaming.assign_stream import stream_sessions
-
-    src = str(tmp_path / "evs")
-    spark.read.parquet("/root/testdata/sf0.001/events.parquet").write.parquet(src)
-    q = (
-        stream_sessions(spark, src)
-        .writeStream.format("memory")
-        .queryName("sessions_s")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    got = spark.sql("select * from sessions_s").toPandas()
-    # the batch reference: the same session_window groupBy on a static read
-    exp = (
-        spark.read.parquet(src)
-        .groupBy(F.session_window("ts", "30 minutes"), F.col("user_id"))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select("user_id", F.col("session_window.start").alias("sess_start"), "n_events")
-        .toPandas()
-    )
-    key = ["user_id", "sess_start"]
-    got = got.sort_values(key).reset_index(drop=True)
-    exp = exp.sort_values(key).reset_index(drop=True)
-    assert len(got) > 0
-    pd.testing.assert_frame_equal(got, exp, check_dtype=False)

@@ -119,36 +119,3 @@ def test_serve_from_tiles_equals_cellmap_join(spark, zones_df):
     import pandas as pd
 
     pd.testing.assert_frame_equal(served, direct)
-
-
-def test_incremental_tile_counts_equal_full_recompute(spark):
-    """merge_tile_counts over increments must equal the from-scratch
-    rollup on the full point set — the exactness contract that lets the
-    assign_pages incremental loop maintain tiles without reprocessing."""
-    import pandas as pd
-
-    from timezone_boundary_builder_spark.operators.tiles import (
-        merge_tile_counts,
-        page_tile_counts,
-    )
-
-    rng = __import__("numpy").random.default_rng(3)
-    n = 9000
-    pdf = pd.DataFrame(
-        {
-            "url": [f"u{i}" for i in range(n)],
-            "lon": rng.uniform(-180, 180, n),
-            "lat": rng.uniform(-85, 85, n),
-            "tzid": rng.choice(["A/A", "B/B", "C/C"], n),
-        }
-    )
-    full = page_tile_counts(spark.createDataFrame(pdf), res=5)
-    merged = None
-    for lo, hi in ((0, 3000), (3000, 7000), (7000, 9000)):
-        delta = page_tile_counts(spark.createDataFrame(pdf.iloc[lo:hi]), res=5)
-        merged = merge_tile_counts(merged, delta)
-    key = ["cell_id", "res", "tzid"]
-    a = full.orderBy(key).toPandas()
-    b = merged.orderBy(key).toPandas()
-    assert a.equals(b)
-    assert a.n_pages.sum() == n

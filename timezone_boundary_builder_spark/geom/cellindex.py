@@ -38,7 +38,6 @@ MAX_RES = 26  # 2 bits per level, 26*2 = 52 bits + 5 res bits < 64
 __all__ = [
     "encode_points",
     "cell_res",
-    "cell_parent",
     "cell_bounds",
     "edge_soup",
     "cover_polygons",
@@ -79,14 +78,6 @@ def encode_points(lon: np.ndarray, lat: np.ndarray, res: int) -> np.ndarray:
 
 def cell_res(cell: np.ndarray | int):
     return (np.asarray(cell, dtype=np.uint64) >> np.uint64(58)).astype(np.int64)
-
-
-def cell_parent(cell: np.ndarray | int, steps: int = 1):
-    c = np.asarray(cell, dtype=np.uint64)
-    r = cell_res(c)
-    code = c & np.uint64((1 << 58) - 1)
-    code = code >> (np.uint64(2) * np.asarray(steps, dtype=np.uint64))
-    return code | ((r - steps).astype(np.uint64) << np.uint64(58))
 
 
 def _deinterleave(code: int, r: int) -> tuple[int, int]:

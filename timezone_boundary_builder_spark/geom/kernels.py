@@ -33,8 +33,6 @@ __all__ = [
     "pair_edge_d2",
     "csr_pairs",
     "RowEdges",
-    "point_segment_distance_m",
-    "min_distance_to_boundary_m",
     "ring_interior_point",
     "geom_hash",
 ]
@@ -294,75 +292,6 @@ class RowEdges:
             own = c[first]
             d2[own] = np.minimum(d2[own], np.minimum.reduceat(d, first))
         return np.sqrt(d2) * EARTH_RADIUS_M
-
-
-# --------------------------------------------------------- distances (m)
-
-
-def point_segment_distance_m(points: np.ndarray, seg_a: np.ndarray, seg_b: np.ndarray) -> np.ndarray:
-    """Min distance in meters from each point to ANY segment (a[i], b[i]).
-
-    Local equirectangular projection centered per point latitude — exact
-    enough at the 1852 m territorial-waters scale (north_star; reference
-    states the semantics at README.md:234 but has no kernel).
-    Returns float64[n_points].
-    """
-    m = len(points)
-    if m == 0:
-        return np.zeros(0)
-    n = len(seg_a)
-    if n == 0:
-        return np.full(m, np.inf)
-    plam = np.radians(points[:, 0])[:, None]
-    pphi = np.radians(points[:, 1])[:, None]
-    alam = np.radians(seg_a[:, 0])[None, :]
-    aphi = np.radians(seg_a[:, 1])[None, :]
-    blam = np.radians(seg_b[:, 0])[None, :]
-    bphi = np.radians(seg_b[:, 1])[None, :]
-    cosphi = np.cos(pphi)
-    # project into meters around each point
-    ax = (alam - plam) * cosphi
-    ay = aphi - pphi
-    bx = (blam - plam) * cosphi
-    by = bphi - pphi
-    dx = bx - ax
-    dy = by - ay
-    seg_len2 = dx * dx + dy * dy
-    with np.errstate(divide="ignore", invalid="ignore"):
-        t = -(ax * dx + ay * dy) / seg_len2
-    t = np.clip(np.nan_to_num(t, nan=0.0), 0.0, 1.0)
-    cx = ax + t * dx
-    cy = ay + t * dy
-    d2 = cx * cx + cy * cy
-    return np.sqrt(d2.min(axis=1)) * EARTH_RADIUS_M
-
-
-def _boundary_segments(geom: PackedGeometry) -> tuple[np.ndarray, np.ndarray]:
-    coords = geom.coords
-    ends = np.empty_like(coords)
-    ro = geom.ring_offsets
-    for i in range(geom.n_rings):
-        a, b = ro[i], ro[i + 1]
-        ends[a : b - 1] = coords[a + 1 : b]
-        ends[b - 1] = coords[a]
-    return coords, ends
-
-
-def min_distance_to_boundary_m(points: np.ndarray, geom: PackedGeometry) -> np.ndarray:
-    """Distance in meters from each point to the polygon boundary (0 is NOT
-    special-cased for interior points — callers PIP-test first)."""
-    a, b = _boundary_segments(geom)
-    m = len(points)
-    if m == 0:
-        return np.zeros(0)
-    # chunk points to bound the points x segments broadcast
-    n = max(len(a), 1)
-    chunk = max(1, _PIP_CHUNK_BUDGET // n)
-    out = np.empty(m)
-    for s in range(0, m, chunk):
-        e = min(m, s + chunk)
-        out[s:e] = point_segment_distance_m(points[s:e], a, b)
-    return out
 
 
 # ----------------------------------------------------------- ring utils

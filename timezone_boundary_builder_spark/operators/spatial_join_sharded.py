@@ -62,8 +62,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ByteType, IntegerType, StructField, StructType
 
+from ..geom.cellindex import edge_soup
 from ..geom.codec import from_geojson
-from ..geom.kernels import RowEdges, _boundary_segments, csr_pairs
+from ..geom.kernels import RowEdges, csr_pairs
 from .spatial_join import (
     KNN_MAX_METERS,
     M_CELL,
@@ -172,25 +173,20 @@ def zone_edges_frame(zones: DataFrame, tzids_bc, n_shards: int = DEFAULT_SHARDS)
     def _edges(batches):
         idx = None
         for pdf in batches:
-            if not len(pdf):
-                continue
             if idx is None:
                 idx = {t: i for i, t in enumerate(tzids_bc.value)}
-            rows = {"shard": [], "zone_id": [], "x1": [], "y1": [], "x2": [], "y2": []}
-            for tzid, gj in zip(pdf["tzid"], pdf["geometry"]):
-                zi = idx.get(tzid)
-                if zi is None:
-                    continue
-                a, b = _boundary_segments(from_geojson(gj))
-                if not len(a):
-                    continue
-                rows["shard"].append(zi % n_shards)
-                rows["zone_id"].append(zi)
-                rows["x1"].append(a[:, 0])
-                rows["y1"].append(a[:, 1])
-                rows["x2"].append(b[:, 0])
-                rows["y2"].append(b[:, 1])
-            yield pd.DataFrame(rows)
+            zs = [(idx[t], from_geojson(gj))
+                  for t, gj in zip(pdf["tzid"], pdf["geometry"]) if t in idx]
+            zs = [(zi, g) for zi, g in zs if len(g.coords)]
+            if not zs:
+                continue
+            # the broadcast index's edge builder over the batch's zones,
+            # split back per zone
+            zone_id = np.array([zi for zi, _ in zs], dtype=np.int32)
+            voff = np.concatenate([[0], np.cumsum([len(g.coords) for _, g in zs])])
+            ed = edge_soup([g for _, g in zs], voff)
+            rows = {c: np.split(getattr(ed, c), voff[1:-1]) for c in ("x1", "y1", "x2", "y2")}
+            yield pd.DataFrame({"shard": zone_id % n_shards, "zone_id": zone_id, **rows})
 
     schema = (
         "shard int, zone_id int, x1 array<double>, y1 array<double>, "

@@ -30,16 +30,6 @@ LANG_MARKERS = [
 STOPWORDS = ["the", "a", "of", "and", "to", "in"]
 
 
-def n_words(text: Column) -> Column:
-    """Whitespace token count via pure string arithmetic (identical
-    semantics in any SQL engine): #spaces + 1 on the trimmed text."""
-    t = F.trim(text)
-    return F.when(F.length(t) == 0, F.lit(0)).otherwise(
-        F.length(t) - F.length(F.regexp_replace(t, r"\s+", "")) + 1
-        - (F.length(t) - F.length(F.regexp_replace(t, r"\s+", " ")))
-    )
-
-
 def with_token_counts(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Whitespace tokens + a BPE-ish subword estimate (len/4 heuristic +
     punctuation splits), all codegen'd."""

@@ -382,20 +382,3 @@ def _cell_encode_col(res: int, lon, lat):
             + F.shiftleft(F.shiftright(y, b).bitwiseAND(F.lit(1)), 2 * b + 1)
         )
     return code
-
-
-def merge_tile_counts(existing: DataFrame | None, delta: DataFrame) -> DataFrame:
-    """Incremental rollup maintenance: fold a new increment's counts into
-    the maintained table. Union + re-aggregate on the grouping keys —
-    additive counts make the merge exact, so incrementally-maintained
-    tiles equal a from-scratch recompute over the full corpus (tested).
-    At scale both sides are cell-prefix-partitioned parquet and the
-    shuffle is proportional to LIVE cells, not corpus rows; this is the
-    maintenance loop assign_pages --incremental increments feed."""
-    if existing is None:
-        return delta
-    return (
-        existing.unionByName(delta)
-        .groupBy("cell_id", "res", "tzid")
-        .agg(F.sum("n_pages").alias("n_pages"))
-    )

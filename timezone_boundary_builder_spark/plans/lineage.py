@@ -2,9 +2,9 @@
 
 Three complementary mechanisms:
 
-- `track_batches`: wraps a mapInPandas-style generator so every Arrow
-  batch increments Spark ACCUMULATORS (rows in/out, batches) — live,
-  cheap, visible on the driver after any action, no extra shuffle.
+- `StageMetrics.wrap`: wraps a mapInPandas-style generator so every
+  Arrow batch increments Spark ACCUMULATORS (rows in/out, batches) —
+  live, cheap, visible on the driver after any action, no extra shuffle.
 - `lineage_table`: a mapInPandas pass emitting one row per partition
   (partition_id, rows, min/max of a key, sha256 of sorted keys) —
   a durable side table that joins stage outputs to their inputs, the
