@@ -53,10 +53,8 @@ from __future__ import annotations
 import argparse
 import json
 import os
-import shutil
 import sys
 import time
-import uuid
 
 
 def main(argv=None) -> int:
@@ -142,6 +140,7 @@ def main(argv=None) -> int:
     from timezone_boundary_builder_spark.plans.manifests import (
         StageManifest,
         fingerprint,
+        publish,
     )
     from timezone_boundary_builder_spark.sources import pages as pages_table
 
@@ -317,7 +316,10 @@ def main(argv=None) -> int:
         F.bit_xor(F.xxhash64("url", "text")).alias("h"),
         F.count(F.lit(1)).alias("n"),
     ).collect()[0]
-    summary = publish(manifest, stage, assigned, h_in, pages_dest, lineage_dest, sid)
+    summary = publish(
+        manifest, stage, assigned, h_in, pages_dest, lineage_dest, sid,
+        "url", "method", ("url", "text"),
+    )
     if args.incremental:
         # the cursor moves only past a published increment
         _advance_cursor(
@@ -370,45 +372,6 @@ def _advance_cursor(path: str, state: dict, sid: str, increment: dict | None = N
     with open(tmp, "w") as f:
         json.dump(state, f)
     os.rename(tmp, path)
-
-
-def publish(manifest, stage: str, written, h_in, dest: str, lineage_dest: str, snapshot: str):
-    """Verify the written `stage` against the input hash `h_in` (a
-    Row/dict with the input's `h` and `n`) and publish it at `dest`, its
-    lineage at `lineage_dest`. One pass over the written files yields
-    the rows, the (url, text) hash, the method mix and the
-    per-partition lineage rows (plans.lineage.summarize). On a mismatch
-    nothing is published: the staged output and its manifest record are
-    dropped, so the next run recomputes instead of replaying the stage,
-    and AssertionError is raised. Returns the Summary."""
-    from timezone_boundary_builder_spark.plans.lineage import summarize, write_lineage
-
-    summary = summarize(written, "url", "method", hash_cols=("url", "text"))
-    # bit_xor over no rows is null; the summary's is 0
-    if (h_in["h"] or 0) != summary.h or h_in["n"] != summary.rows:
-        manifest.discard(stage)
-        raise AssertionError(
-            f"text passthrough invariant violated: input ({h_in['h']}, "
-            f"{h_in['n']} rows), written ({summary.h}, {summary.rows} rows)"
-        )
-    lineage_staging = f"{lineage_dest}.__staging__"
-    write_lineage(summary.lineage, lineage_staging)
-    # The two promotes cannot be one atomic rename (rename(2) cannot swap
-    # non-empty directories), so a crash between them CAN leave a new
-    # output next to the previous run's lineage. Make that torn state
-    # DETECTABLE: both dirs carry the same _publish.json (the underscore
-    # prefix hides it from parquet readers and from the manifest's output
-    # hash) — a consumer that needs the pair consistent compares the two
-    # publish_ids, and the next run (a manifest hit) heals the tear by
-    # re-verifying and re-publishing both without rewriting the pages.
-    marker = {"publish_id": uuid.uuid4().hex, "snapshot": snapshot}
-    for d in (manifest.output_path(stage), lineage_staging):
-        with open(os.path.join(d, "_publish.json"), "w") as f:
-            json.dump(marker, f)
-    manifest.promote(stage, dest)
-    shutil.rmtree(lineage_dest, ignore_errors=True)
-    os.replace(lineage_staging, lineage_dest)
-    return summary
 
 
 def _ocean_bands(args) -> list[dict]:

@@ -26,9 +26,16 @@ ingest, so every gate, hash, and packed doc downstream sees redacted
 bytes; totals are reported under stages.pii.
 
 Output: cleaned corpus parquet (doc_id, lang, ws_tokens, shard,
-batch_id), a per-partition lineage table, and ONE JSON line of per-stage
-row counts on stdout. Every gate is an explicit counter — rows dropped
-by each stage are reported, never silently vanished.
+batch_id) at <out>/cleaned, its per-partition lineage table at
+<out>/lineage, and ONE JSON line of per-stage row counts on stdout. Every
+gate is an explicit counter — rows dropped by each stage are reported,
+never silently vanished. The pack stage is the output: staged under
+--work-dir, verified (its doc_id hash and row count equal those of the
+stage that fed it, so packing neither dropped nor duplicated a doc) and
+renamed into <out>/cleaned; both directories carry the same
+_publish.json (publish_id, and the input key as snapshot). A re-run into
+the same --out-dir replays: pack is a manifest hit on the published
+rows, which are re-verified and re-published without being rewritten.
 
 Scale shape: quality/exact are scan -> codegen filters -> one window;
 neardup shuffles are doc-sized or candidate-sized (the LSH design from
@@ -136,10 +143,10 @@ def main(argv=None) -> int:
         with_quality,
         with_token_counts,
     )
-    from timezone_boundary_builder_spark.plans.lineage import lineage_table
     from timezone_boundary_builder_spark.plans.manifests import (
         StageManifest,
         fingerprint,
+        publish,
     )
 
     t0 = time.time()
@@ -248,7 +255,15 @@ def main(argv=None) -> int:
         fingerprint("neardup", gate_fp, str(args.jaccard)),
         compute_neardup,
     )
-    stages["neardup"] = {"cached": cached_n, "rows": neardup.count()}
+    # every stage that can feed pack is counted by the one aggregate pack
+    # is verified against: its rows and the order-insensitive doc_id hash
+    def tally(df):
+        return df.agg(
+            F.count(F.lit(1)).alias("n"), F.bit_xor(F.xxhash64("doc_id")).alias("h")
+        ).collect()[0]
+
+    fed = tally(neardup)
+    stages["neardup"] = {"cached": cached_n, "rows": fed["n"]}
 
     # --- optional: train/eval decontamination ----------------------------
     current = neardup
@@ -278,7 +293,8 @@ def main(argv=None) -> int:
             fingerprint("decon", gate_fp, str(args.jaccard), decon_key),
             compute_decon,
         )
-        stages["decon"] = {"cached": cached_d, "rows": current.count()}
+        fed = tally(current)
+        stages["decon"] = {"cached": cached_d, "rows": fed["n"]}
 
     # --- optional: mixture-weight rebalancing ----------------------------
     mix_key = ""
@@ -301,7 +317,8 @@ def main(argv=None) -> int:
             fingerprint("mix", gate_fp, str(args.jaccard), decon_key, mix_key),
             compute_mix,
         )
-        stages["mix"] = {"cached": cached_m, "rows": current.count()}
+        fed = tally(current)
+        stages["mix"] = {"cached": cached_m, "rows": fed["n"]}
 
     # --- token-budget packing -------------------------------------------
     def compute_pack():
@@ -313,6 +330,10 @@ def main(argv=None) -> int:
             n_shards=args.n_shards,
         )
 
+    # the one write of the packed rows: staged under --work-dir (the
+    # resume checkpoint), verified against `fed` (packing neither drops
+    # nor duplicates a doc) and renamed into place with its lineage
+    cleaned = os.path.join(args.out_dir, "cleaned")
     packed, cached_p = manifest.run_stage(
         spark,
         "pack",
@@ -321,23 +342,19 @@ def main(argv=None) -> int:
             str(args.token_budget), str(args.n_shards),
         ),
         compute_pack,
+        publish_to=cleaned,
     )
-    n_out = packed.count()
-    stages["pack"] = {
-        "cached": cached_p,
-        "rows": n_out,
-        "batches": packed.select("shard", "batch_id").distinct().count(),
-    }
-
-    packed.write.mode("overwrite").parquet(f"{args.out_dir}/cleaned")
-    lineage = lineage_table(packed, "doc_id")
-    lineage.write.mode("overwrite").parquet(f"{args.out_dir}/lineage")
+    summary = publish(
+        manifest, "pack", packed, fed, cleaned, os.path.join(args.out_dir, "lineage"), source_key,
+        "doc_id", F.concat_ws("/", "shard", "batch_id"), ("doc_id",),
+    )
+    stages["pack"] = {"cached": cached_p, "rows": summary.rows, "batches": len(summary.counts)}
 
     print(
         json.dumps(
             {
                 "stages": stages,
-                "kept_frac": round(n_out / max(n_in, 1), 4),
+                "kept_frac": round(summary.rows / max(n_in, 1), 4),
                 "wall_sec": round(time.time() - t0, 2),
             }
         )

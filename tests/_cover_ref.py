@@ -8,7 +8,7 @@ import numpy as np
 
 from timezone_boundary_builder_spark.geom.cellindex import cell_bounds, cell_res, encode_points
 from timezone_boundary_builder_spark.geom.codec import PackedGeometry
-from timezone_boundary_builder_spark.geom.kernels import points_in_packed
+from tests._kernel_ref import points_in_packed
 
 
 def cell_parent(cell: np.ndarray | int, steps: int = 1):

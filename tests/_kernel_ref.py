@@ -5,6 +5,7 @@ what assign_tzid_udf_packed must return for the same packed frame."""
 import numpy as np
 import pandas as pd
 
+from timezone_boundary_builder_spark.geom.kernels import points_in_rings
 from timezone_boundary_builder_spark.operators.spatial_join import (
     KNN_MAX_METERS,
     METHOD_NAMES,
@@ -12,6 +13,12 @@ from timezone_boundary_builder_spark.operators.spatial_join import (
     assign_codes,
     unpack_xy,
 )
+
+
+def points_in_packed(points: np.ndarray, geom) -> np.ndarray:
+    """Even-odd test of (n, 2) points against one packed (multi)polygon:
+    every ring's edges, no index."""
+    return points_in_rings(points, geom.coords, geom.ring_offsets)
 
 
 def kernel_codes(cm, bands, lon, lat, knn_max_m=KNN_MAX_METERS):

@@ -321,15 +321,7 @@ def test_assign_publish_refuses_a_text_hash_mismatch(spark, pages_root, tmp_path
     as they were, the staged rows are deleted and the stage's manifest
     record is dropped, so the next run recomputes instead of replaying a
     bad stage as cached."""
-    import importlib.util
-
-    from timezone_boundary_builder_spark.plans.manifests import StageManifest
-
-    spec = importlib.util.spec_from_file_location(
-        "assign_pages_job", os.path.join(REPO, "jobs", "assign_pages.py")
-    )
-    job = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(job)
+    from timezone_boundary_builder_spark.plans.manifests import StageManifest, publish
 
     work, out = str(tmp_path / "w"), str(tmp_path / "o")
     r = _run(pages_root, work, out)
@@ -342,7 +334,7 @@ def test_assign_publish_refuses_a_text_hash_mismatch(spark, pages_root, tmp_path
     )
     assert cached is False and os.path.exists(os.path.join(work, "assign"))
     with pytest.raises(AssertionError, match="invariant"):
-        job.publish(
+        publish(
             manifest,
             "assign",
             staged,
@@ -350,6 +342,9 @@ def test_assign_publish_refuses_a_text_hash_mismatch(spark, pages_root, tmp_path
             os.path.join(out, "assigned_pages"),
             os.path.join(out, "lineage"),
             r["snapshot"],
+            "url",
+            "method",
+            ("url", "text"),
         )
 
     assert {d: _publish_id(out, d) for d in ("assigned_pages", "lineage")} == before

@@ -5,14 +5,16 @@ import numpy as np
 import pytest
 
 from _cover_ref import cell_children, cell_parent
+from tests._kernel_ref import points_in_packed
 from timezone_boundary_builder_spark.geom.cellindex import (
     cell_bounds,
     cell_res,
     cover_polygon,
+    edge_soup,
     encode_points,
 )
-from timezone_boundary_builder_spark.geom.codec import from_rings
-from timezone_boundary_builder_spark.geom.kernels import make_box, points_in_packed
+from timezone_boundary_builder_spark.geom.codec import EMPTY, from_rings
+from timezone_boundary_builder_spark.geom.kernels import make_box
 
 
 def test_encode_bounds_roundtrip():
@@ -56,6 +58,12 @@ def test_cover_box_exact():
         b = cell_bounds(int(c))
         if f:
             assert b[0] >= -1e-9 and b[1] >= -1e-9 and b[2] <= 45 + 1e-9 and b[3] <= 45 + 1e-9
+    # the cover's edge soup: zone z's edges are voff[z] : voff[z + 1]
+    ed = edge_soup([g, EMPTY, g])
+    assert ed.voff.tolist() == [0, 4, 4, 8] and ed.zone.tolist() == [0] * 4 + [2] * 4
+    assert all(np.array_equal(a[:4], a[4:]) for a in ed[:4])
+    none = edge_soup([])
+    assert none.voff.tolist() == [0] and all(len(a) == 0 for a in none[:-1])
 
 
 def test_cover_then_pip_equals_direct_pip():

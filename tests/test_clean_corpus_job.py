@@ -5,6 +5,7 @@ stage-manifest resume and per-stage row accounting."""
 import glob
 import json
 import os
+import shutil
 
 from tests._jobrunner import run_code, run_job
 
@@ -168,6 +169,66 @@ def test_clean_corpus_hygiene_stages(spark, tmp_path):
         if name not in ("input", "pii")
     )
     assert r2["stages"]["pack"]["rows"] == s["pack"]["rows"]
+
+
+def _publish_id(out, d):
+    return json.load(open(os.path.join(out, d, "_publish.json")))["publish_id"]
+
+
+def _data_files(path):
+    """(name, inode) of every data file: a rename keeps the inode, a
+    rewrite or a copy does not."""
+    return sorted(
+        (f, os.stat(os.path.join(path, f)).st_ino)
+        for f in os.listdir(path)
+        if f.endswith(".parquet")
+    )
+
+
+def test_clean_corpus_replay_publishes_without_rewriting(tmp_path):
+    """The packed rows are staged, verified and renamed into
+    <out>/cleaned: a second run into the same --out-dir is a manifest hit
+    on them that re-publishes (lineage and a fresh publish marker on
+    both directories) without rewriting a data file."""
+    work, out = str(tmp_path / "w"), str(tmp_path / "o")
+    r1 = _run(work, out)
+    cleaned = os.path.join(out, "cleaned")
+    files = _data_files(cleaned)
+    assert files and not os.path.exists(os.path.join(work, "pack"))
+    first = _publish_id(out, "cleaned")
+    assert _publish_id(out, "lineage") == first
+    marker = json.load(open(os.path.join(cleaned, "_publish.json")))
+    assert marker["snapshot"].startswith(DOCS + "|")
+
+    r2 = _run(work, out)
+    assert r2["stages"]["pack"] == {**r1["stages"]["pack"], "cached": True}
+    assert _data_files(cleaned) == files
+    assert _publish_id(out, "cleaned") == _publish_id(out, "lineage") != first
+
+
+def test_clean_corpus_promotes_a_staged_pack_after_a_crash(tmp_path):
+    """Resume after a crash between the stage write and the promote (the
+    packed rows under --work-dir, nothing published): the re-run promotes
+    the stage without recomputing it."""
+    work, out = str(tmp_path / "w"), str(tmp_path / "o")
+    r1 = _run(work, out)
+    cleaned = os.path.join(out, "cleaned")
+    files = _data_files(cleaned)
+
+    # rewind to a crash right after the stage write
+    staged = os.path.join(work, "pack")
+    os.rename(cleaned, staged)
+    shutil.rmtree(os.path.join(out, "lineage"))
+    mpath = os.path.join(work, "_manifest.json")
+    m = json.load(open(mpath))
+    m["pack"]["output_path"] = staged
+    json.dump(m, open(mpath, "w"))
+
+    r2 = _run(work, out)
+    assert r2["stages"]["pack"] == {**r1["stages"]["pack"], "cached": True}
+    assert not os.path.exists(staged)
+    assert _data_files(cleaned) == files
+    assert _publish_id(out, "cleaned") == _publish_id(out, "lineage")
 
 
 _CKPT_MODE_SCRIPT = r"""

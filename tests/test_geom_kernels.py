@@ -7,7 +7,7 @@ import math
 import numpy as np
 import pytest
 
-from tests._kernel_ref import min_distance_to_boundary_m
+from tests._kernel_ref import min_distance_to_boundary_m, points_in_packed
 from timezone_boundary_builder_spark.geom import from_geojson, to_geojson
 from timezone_boundary_builder_spark.geom.boolean import (
     difference,
@@ -23,7 +23,6 @@ from timezone_boundary_builder_spark.geom.kernels import (
     geom_hash,
     make_box,
     planar_area,
-    points_in_packed,
     ring_interior_point,
 )
 

@@ -11,9 +11,9 @@ import pytest
 
 import __spark_entry__ as entry
 from tests._cover_ref import lookup
+from tests._kernel_ref import points_in_packed
 from timezone_boundary_builder_spark.geom.cellindex import cover_polygon
 from timezone_boundary_builder_spark.geom.codec import from_geojson
-from timezone_boundary_builder_spark.geom.kernels import points_in_packed
 from timezone_boundary_builder_spark.operators.cover import CellMap
 from timezone_boundary_builder_spark.operators.spatial_join import assign_codes
 

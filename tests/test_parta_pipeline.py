@@ -9,8 +9,8 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from tests._kernel_ref import points_in_packed
 from timezone_boundary_builder_spark.geom.codec import from_geojson
-from timezone_boundary_builder_spark.geom.kernels import points_in_packed
 from timezone_boundary_builder_spark.operators.derived import build_derived_zones
 from timezone_boundary_builder_spark.operators.oceans import build_ocean_zones
 from timezone_boundary_builder_spark.operators.outputs import (

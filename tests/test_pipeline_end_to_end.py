@@ -9,9 +9,9 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from tests._kernel_ref import min_distance_to_boundary_m
+from tests._kernel_ref import min_distance_to_boundary_m, points_in_packed
 from timezone_boundary_builder_spark.geom.codec import from_geojson
-from timezone_boundary_builder_spark.geom.kernels import planar_area, points_in_packed
+from timezone_boundary_builder_spark.geom.kernels import planar_area
 from timezone_boundary_builder_spark.operators.cover import (
     build_cell_covers,
     collect_cell_map,

@@ -12,8 +12,9 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from tests._kernel_ref import points_in_packed
 from timezone_boundary_builder_spark.geom.codec import from_geojson
-from timezone_boundary_builder_spark.geom.kernels import planar_area, points_in_packed
+from timezone_boundary_builder_spark.geom.kernels import planar_area
 from timezone_boundary_builder_spark.operators.ring_assembly import (
     assemble_multipolygon,
     assemble_relations,

@@ -31,7 +31,7 @@ def test_raster_tiles_uniform_res_and_membership(spark, zones_df):
     assert (np.array([int(c) >> 58 for c in tiles.cell_id]) == RES).all()
     # membership check: a full tile's center must be inside its zone
     zones = {r.tzid: from_geojson(r.geometry) for r in zones_df.toPandas().itertuples()}
-    from timezone_boundary_builder_spark.geom.kernels import points_in_packed
+    from tests._kernel_ref import points_in_packed
 
     full = tiles[tiles.coverage == "full"]
     sample = full.sample(n=min(len(full), 200), random_state=1)

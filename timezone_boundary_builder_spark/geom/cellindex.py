@@ -105,19 +105,22 @@ def cell_bounds(cell: int) -> tuple[float, float, float, float]:
 # ------------------------------------------------------------- covering
 
 # One edge soup over many zones: edge i runs from vertex i to the next
-# vertex of its ring; `zone` is its zone, lo_*/hi_* its bbox.
-_Edges = namedtuple("_Edges", "x1 y1 x2 y2 zone lo_x hi_x lo_y hi_y")
+# vertex of its ring; `zone` is its zone, lo_*/hi_* its bbox. Zone z's
+# edges are voff[z] : voff[z + 1].
+_Edges = namedtuple("_Edges", "x1 y1 x2 y2 zone lo_x hi_x lo_y hi_y voff")
 
 
-def edge_soup(gs: list[PackedGeometry], voff: np.ndarray) -> _Edges:
-    ro = [g.ring_offsets + o for g, o in zip(gs, voff)]
+def edge_soup(gs: list[PackedGeometry]) -> _Edges:
+    voff = np.cumsum([0] + [len(g.coords) for g in gs])
+    # the leading one-offset piece adds no ring; it lets a soup of no zones concatenate
+    ro = [np.zeros(1, np.int64)] + [g.ring_offsets + o for g, o in zip(gs, voff)]
     nxt = np.arange(1, voff[-1] + 1)
     nxt[np.concatenate([r[1:] for r in ro]) - 1] = np.concatenate([r[:-1] for r in ro])
-    xy = np.concatenate([g.coords for g in gs])
+    xy = np.concatenate([np.zeros((0, 2))] + [g.coords for g in gs])
     x1, y1, x2, y2 = xy[:, 0], xy[:, 1], xy[nxt, 0], xy[nxt, 1]
     zone = np.repeat(np.arange(len(gs)), np.diff(voff))
     return _Edges(x1, y1, x2, y2, zone, np.minimum(x1, x2), np.maximum(x1, x2),
-                  np.minimum(y1, y2), np.maximum(y1, y2))
+                  np.minimum(y1, y2), np.maximum(y1, y2), voff)
 
 
 def _cells_crossed(ed: _Edges, box, start, count, src):
@@ -177,9 +180,8 @@ def cover_polygons(
     out = [(np.zeros(0, np.int64), np.zeros(0, np.uint64), np.zeros(0, bool))]
     if len(kept):
         gs = [geoms[i] for i in kept]
-        nv = np.array([len(g.coords) for g in gs], dtype=np.int64)
-        voff = np.concatenate([[0], np.cumsum(nv)])
-        ed = edge_soup(gs, voff)
+        ed = edge_soup(gs)
+        voff, nv = ed.voff, np.diff(ed.voff)
         zbox = [f.reduceat(a, voff[:-1]) for f, a in ((np.minimum, ed.x1), (np.minimum, ed.y1),
                                                        (np.maximum, ed.x1), (np.maximum, ed.y1))]
         # the four res-1 cells of every zone, each with all its zone's edges

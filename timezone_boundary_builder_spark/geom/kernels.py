@@ -28,7 +28,6 @@ __all__ = [
     "ring_area_sq_meters",
     "geodesic_area_m2",
     "points_in_rings",
-    "points_in_packed",
     "ray_crosses",
     "pair_edge_d2",
     "csr_pairs",
@@ -162,10 +161,6 @@ def points_in_rings(points: np.ndarray, coords: np.ndarray, ring_offsets: np.nda
         e = min(m, s + chunk)
         parity[s:e] = _crossings(px[s:e], py[s:e], x1, y1, x2, y2)
     return (parity & 1).astype(bool)
-
-
-def points_in_packed(points: np.ndarray, geom: PackedGeometry) -> np.ndarray:
-    return points_in_rings(points, geom.coords, geom.ring_offsets)
 
 
 def pair_edge_d2(pxe, pye, ax, ay, bx, by):

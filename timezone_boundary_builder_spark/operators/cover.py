@@ -23,7 +23,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from ..geom.cellindex import cell_res, cover_polygons, edge_soup, encode_points
-from ..geom.codec import EMPTY, from_geojson
+from ..geom.codec import from_geojson
 from ..geom.kernels import RowEdges, csr_pairs
 
 COVER_SCHEMA = "tzid string, cell_id long, full boolean, res int"
@@ -427,9 +427,8 @@ class CellMap:
         and kNN kernel. Built once per process and pad."""
         cache = self.__dict__.setdefault("_row_edges", {})
         if pad not in cache:
-            gs = self.geoms() or [EMPTY]  # edge_soup needs one geometry
-            voff = np.concatenate([[0], np.cumsum([len(g.coords) for g in gs])]).astype(np.int64)
-            cache[pad] = RowEdges(*edge_soup(gs, voff)[:5], len(gs), self.finest, pad)
+            gs = self.geoms()
+            cache[pad] = RowEdges(*edge_soup(gs)[:5], len(gs), self.finest, pad)
         return cache[pad]
 
 

@@ -183,9 +183,8 @@ def zone_edges_frame(zones: DataFrame, tzids_bc, n_shards: int = DEFAULT_SHARDS)
             # the broadcast index's edge builder over the batch's zones,
             # split back per zone
             zone_id = np.array([zi for zi, _ in zs], dtype=np.int32)
-            voff = np.concatenate([[0], np.cumsum([len(g.coords) for _, g in zs])])
-            ed = edge_soup([g for _, g in zs], voff)
-            rows = {c: np.split(getattr(ed, c), voff[1:-1]) for c in ("x1", "y1", "x2", "y2")}
+            ed = edge_soup([g for _, g in zs])
+            rows = {c: np.split(getattr(ed, c), ed.voff[1:-1]) for c in ("x1", "y1", "x2", "y2")}
             yield pd.DataFrame({"shard": zone_id % n_shards, "zone_id": zone_id, **rows})
 
     schema = (

@@ -26,9 +26,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..geom.boolean import clip_to_box
-from ..geom.cellindex import cell_bounds, cell_res, cover_polygon, cover_polygons
+from ..geom.cellindex import cell_bounds, cell_res, cover_polygon, cover_polygons, edge_soup
 from ..geom.codec import from_geojson, to_geojson
-from ..geom.kernels import csr_pairs, make_box, planar_area
+from ..geom.kernels import RowEdges, csr_pairs, make_box, planar_area
+from .spatial_join import _band_edges, band_of
 
 RASTER_SCHEMA = "cell_id long, res int, tzid string, coverage string"
 VECTOR_SCHEMA = "cell_id long, res int, tzid string, geometry string"
@@ -152,32 +153,23 @@ def serve_points_from_tiles(
     equi-join on cell_id, the shape a tile server / Iceberg-backed lookup
     uses).
 
-    Stage 1: encode each point's cell id (vectorized bit ops, mapInPandas)
-    and broadcast-join the per-cell candidate tzid lists (tiny agg of the
-    tiles table; the points side never shuffles).
-    Stage 2: exact ray-casting PIP against only the candidate zones;
-    smallest passing tzid wins; no candidates -> Etc/GMT ocean band by
-    longitude (reference index.js:107-133 semantics). Exact PIP runs for
+    Stage 1: encode each point's cell id (JVM bit arithmetic,
+    _cell_encode_col) and broadcast-join the per-cell candidate tzid
+    lists (tiny agg of the tiles table; the points side never shuffles).
+    Stage 2: the one even-odd kernel (kernels.RowEdges.inside) over every
+    (point, candidate zone) pair of an Arrow batch; zone index = rank of
+    the tzid, so the smallest passing index is the smallest passing
+    tzid; no hit -> Etc/GMT ocean band by longitude (spatial_join.band_of,
+    reference index.js:107-133 semantics). Exact PIP runs for
     full-coverage candidates too so edge-of-cell points agree row-for-row
     with the pure-PIP oracle.
     """
-    from ..geom.cellindex import encode_points
-
     spark = points.sparkSession
     cands_by_cell = tiles.groupBy("cell_id").agg(
         F.sort_array(F.collect_set("tzid")).alias("cand_tzids")
     )
-
-    def _encode(batches):
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf["cell_id"] = encode_points(
-                pdf["lon"].to_numpy(), pdf["lat"].to_numpy(), res
-            ).astype(np.int64)
-            yield pdf
-
-    pts = points.select("url", "lon", "lat").mapInPandas(
-        _encode, "url string, lon double, lat double, cell_id long"
+    pts = points.select(
+        "url", "lon", "lat", _cell_encode_col(res, F.col("lon"), F.col("lat")).alias("cell_id")
     )
     # candidate-list length computed JVM-side so the resolver's pair
     # expansion is pure numpy (no per-row len() walk in Python)
@@ -185,69 +177,31 @@ def serve_points_from_tiles(
         "n_cands", F.coalesce(F.size("cand_tzids"), F.lit(0))
     )
 
-    bc_zones = spark.sparkContext.broadcast(
-        dict(zip(zones_pdf["tzid"], zones_pdf["geometry"]))
-    )
-    band_lefts = np.array([b["left"] for b in ocean_bands], dtype=np.float64)
+    zones = zones_pdf.sort_values("tzid")
+    tzids = zones["tzid"].to_numpy(dtype=object)
+    bc_geojson = spark.sparkContext.broadcast(list(zones["geometry"]))
+    band_edges = _band_edges(ocean_bands)
     band_tzids = np.array([b["tzid"] for b in ocean_bands], dtype=object)
 
     def _resolve(batches):
-        geom_cache: dict = {}
-
-        def _geom(tzid):
-            g = geom_cache.get(tzid)
-            if g is None:
-                g = geom_cache[tzid] = from_geojson(bc_zones.value[tzid])
-            return g
-
-        from ..geom.kernels import points_in_packed
-
+        gs = [from_geojson(g) for g in bc_geojson.value]
+        rows = RowEdges(*edge_soup(gs)[:5], len(gs), res)
         for pdf in batches:
-            n = len(pdf)
-            out = np.empty(n, dtype=object)
-            unassigned = np.ones(n, dtype=bool)
-            pts_xy = np.column_stack(
-                [pdf["lon"].to_numpy(), pdf["lat"].to_numpy()]
-            )
-            # vectorized pair expansion (the repeat/cumsum shape
-            # spatial_join uses): flatten the ragged candidate lists into
-            # one (row, tzid) pair array, then group per tzid with a
-            # stable argsort — no per-row Python loop, each PIP call is
-            # still one batch per zone
+            lon, lat = pdf["lon"].to_numpy(), pdf["lat"].to_numpy()
+            # size(null) is -1, not null, when ANSI mode is off
             lens = np.maximum(pdf["n_cands"].to_numpy().astype(np.int64), 0)
-            if lens.sum() > 0:
-                row_idx = np.repeat(np.arange(n, dtype=np.int64), lens)
-                flat = np.concatenate(
-                    pdf["cand_tzids"].to_numpy()[lens > 0].tolist()
-                ).astype(object)
-                order = np.argsort(flat, kind="stable")
-                sorted_t = flat[order]
-                sorted_rows = row_idx[order]
-                bounds = np.flatnonzero(
-                    np.r_[True, sorted_t[1:] != sorted_t[:-1], True]
-                )
-                # visit tzids in ascending order, fill each row at most
-                # once -> smallest passing tzid wins (same semantics as
-                # the old sorted-dict walk)
-                for k in range(len(bounds) - 1):
-                    seg = sorted_rows[bounds[k] : bounds[k + 1]]
-                    idx = seg[unassigned[seg]]
-                    if len(idx) == 0:
-                        continue
-                    t = sorted_t[bounds[k]]
-                    inside = points_in_packed(pts_xy[idx], _geom(t))
-                    hit = idx[inside]
-                    out[hit] = t
-                    unassigned[hit] = False
-            # residue -> ocean band by longitude
-            if unassigned.any():
-                lons = pts_xy[unassigned, 0]
-                bi = np.clip(
-                    np.searchsorted(band_lefts, lons, side="right") - 1,
-                    0,
-                    len(band_lefts) - 1,
-                )
-                out[unassigned] = band_tzids[bi]
+            pt = np.repeat(np.arange(len(pdf)), lens)
+            cand = np.concatenate([np.zeros(0, dtype=object), *pdf["cand_tzids"][lens > 0]])
+            z = np.searchsorted(tzids, cand)
+            if len(cand) and not np.array_equal(tzids[np.minimum(z, len(tzids) - 1)], cand):
+                raise KeyError("a tile's tzid is not among zones_pdf's tzids")
+            inside = rows.inside(z, lon[pt], lat[pt])
+            best = np.full(len(pdf), len(tzids))
+            np.minimum.at(best, pt[inside], z[inside])
+            hit = best < len(tzids)
+            out = np.empty(len(pdf), dtype=object)
+            out[hit] = tzids[best[hit]]
+            out[~hit] = band_tzids[band_of(lon[~hit], band_edges, len(band_tzids))]
             yield pd.DataFrame({"url": pdf["url"], "tzid": out})
 
     return joined.mapInPandas(_resolve, SERVE_SCHEMA)

@@ -78,12 +78,13 @@ class StageMetrics:
 
 
 def _partition_rows(
-    df: DataFrame, key_col: str, count_col: str | None = None, hash_cols: tuple[str, ...] = ()
+    df: DataFrame, key_col: str, count_col=None, hash_cols: tuple[str, ...] = ()
 ) -> DataFrame:
     """One row per partition: the LINEAGE_SCHEMA columns, plus `h` =
     bit_xor of xxhash64(*hash_cols) over the partition when hash_cols are
-    given and `counts` = JSON rows per `count_col` value when count_col
-    is. Only the columns asked for cross to Python."""
+    given and `counts` = JSON rows per value of `count_col` (a name or a
+    Column) when count_col is. Only the columns asked for cross to
+    Python."""
     from pyspark.sql import functions as F
 
     cols = [F.spark_partition_id().alias("partition_id"), F.col(key_col).cast("string").alias("k")]
@@ -91,8 +92,9 @@ def _partition_rows(
     if hash_cols:
         cols.append(F.xxhash64(*hash_cols).alias("h"))
         schema += ", h long"
-    if count_col is not None:
-        cols.append(F.col(count_col).alias("c"))
+    counted = count_col is not None  # the closure must not capture a Column
+    if counted:
+        cols.append((F.col(count_col) if isinstance(count_col, str) else count_col).alias("c"))
         schema += ", counts string"
 
     def _per_partition(batch_iter):
@@ -106,7 +108,7 @@ def _partition_rows(
                 keys.append(pdf["k"].to_numpy())
                 if hash_cols:
                     hx ^= int(np.bitwise_xor.reduce(pdf["h"].to_numpy()))
-                if count_col is not None:
+                if counted:
                     counts.update({k: int(v) for k, v in pdf["c"].value_counts().items()})
         if not keys:
             return
@@ -124,7 +126,7 @@ def _partition_rows(
         }
         if hash_cols:
             row["h"] = [hx]
-        if count_col is not None:
+        if counted:
             row["counts"] = [json.dumps(counts)]
         yield pd.DataFrame(row)
 
@@ -149,13 +151,14 @@ class Summary:
 
 
 def summarize(
-    df: DataFrame, key_col: str, count_col: str, hash_cols: tuple[str, ...] = ()
+    df: DataFrame, key_col: str, count_col, hash_cols: tuple[str, ...] = ()
 ) -> Summary:
     """ONE action over `df`: the lineage_table rows, the row count, the
     order-insensitive bit_xor(xxhash64(*hash_cols)) aggregate (the same
     JVM hash a Spark `bit_xor(xxhash64(...))` computes, so it compares
-    with one) and the row count per `count_col` value. Only the key, the
-    8-byte hash and the count column cross to Python."""
+    with one) and the row count per value of `count_col` (a column name
+    or a Column). Only the key, the 8-byte hash and the count column
+    cross to Python."""
     parts = _partition_rows(df, key_col, count_col, hash_cols).collect()
     hx = 0
     counts: Counter = Counter()

@@ -19,6 +19,7 @@ import hashlib
 import json
 import os
 import shutil
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -133,3 +134,57 @@ class StageManifest:
             os.path.join(self.root, stage)
         ):
             shutil.rmtree(rec["output_path"], ignore_errors=True)
+
+
+def publish(
+    manifest: StageManifest,
+    stage: str,
+    written: DataFrame,
+    h_in,
+    dest: str,
+    lineage_dest: str,
+    snapshot: str,
+    key_col: str,
+    count_col,
+    hash_cols: tuple[str, ...],
+):
+    """The one way a job publishes a table: verify the written `stage`
+    of `manifest` against the input aggregate `h_in` (a Row/dict with
+    the input's `h` = bit_xor(xxhash64(*hash_cols)) and row count `n`),
+    then rename it to `dest` and write its lineage at `lineage_dest`.
+    One pass over the written files yields the rows, the hash, the rows
+    per `count_col` value and the per-partition lineage rows keyed by
+    `key_col` (plans.lineage.summarize). On a mismatch nothing is
+    published: the staged output and its manifest record are dropped,
+    so the next run recomputes instead of replaying the stage, and
+    AssertionError is raised. Returns the Summary."""
+    from .lineage import summarize, write_lineage
+
+    summary = summarize(written, key_col, count_col, hash_cols=hash_cols)
+    # bit_xor over no rows is null; the summary's is 0
+    if (h_in["h"] or 0) != summary.h or h_in["n"] != summary.rows:
+        manifest.discard(stage)
+        raise AssertionError(
+            f"{stage}: hash invariant over {hash_cols} violated: input "
+            f"({h_in['h']}, {h_in['n']} rows), written ({summary.h}, "
+            f"{summary.rows} rows)"
+        )
+    lineage_staging = f"{lineage_dest}.__staging__"
+    write_lineage(summary.lineage, lineage_staging)
+    # The two promotes cannot be one atomic rename (rename(2) cannot
+    # swap non-empty directories), so a crash between them CAN leave
+    # a new output next to the previous run's lineage. Make that torn
+    # state DETECTABLE: both dirs carry the same _publish.json (the
+    # underscore prefix hides it from parquet readers and from the
+    # output hash) — a consumer that needs the pair consistent
+    # compares the two publish_ids, and the next run (a manifest hit)
+    # heals the tear by re-verifying and re-publishing both without
+    # rewriting the output.
+    marker = {"publish_id": uuid.uuid4().hex, "snapshot": snapshot}
+    for d in (manifest.output_path(stage), lineage_staging):
+        with open(os.path.join(d, "_publish.json"), "w") as f:
+            json.dump(marker, f)
+    manifest.promote(stage, dest)
+    shutil.rmtree(lineage_dest, ignore_errors=True)
+    os.replace(lineage_staging, lineage_dest)
+    return summary
